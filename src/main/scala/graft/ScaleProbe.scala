@@ -595,101 +595,6 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
     time("sessionize")(graft.operators.Sessions
       .sessionStats(ev, "user_id", "ts", "event_id", 1800).count())
-    // OSM reader throughput: the same PBF 8× through the blob-parallel
-    // decoder + the way-coordinate resolve join (ids collide across
-    // copies — fine, this probes parse + join volume, not semantics)
-    val pbf = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"
-    if (new java.io.File(pbf).exists()) {
-      time("osm_pbf_x8_resolve") {
-        val osm = graft.sources.OsmSource.read(spark, Seq.fill(8)(pbf))
-        val n = graft.operators.Middle.resolveAllWayCoords(osm).count()
-        osm.unpersistBacking()
-        n
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Scale probe for the OSM middle — the engine's backbone joins at
-  * planet scale: way-node resolve, the append dependency closure, and
-  * the full classic table derivation (multipolygon assembly included),
-  * over an N× ID-SHIFTED self-union of the Liechtenstein extract
-  * (disjoint id spaces per copy — real join semantics, unlike the
-  * colliding x8 read above, so output cardinality must scale exactly
-  * N× and time near-linearly). */
-object OsmScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val mult = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val pbf = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"
-    require(new java.io.File(pbf).exists(), s"missing $pbf")
-    val base = graft.sources.OsmSource.read(spark, Seq(pbf))
-    val S = 10_000_000_000L // beyond any id in the extract
-    def copies(df: org.apache.spark.sql.DataFrame,
-        shift: (org.apache.spark.sql.DataFrame, Long) =>
-          org.apache.spark.sql.DataFrame) =
-      (0 until mult).map(i => shift(df, i.toLong * S))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = copies(base.nodes, (d, s) =>
-      d.withColumn("id", col("id") + lit(s)))
-    val ways = copies(base.ways, (d, s) => d
-      .withColumn("id", col("id") + lit(s))
-      .withColumn("nodes", transform(col("nodes"), r => r + lit(s))))
-    val rels = copies(base.relations, (d, s) => d
-      .withColumn("id", col("id") + lit(s))
-      .withColumn("members", transform(col("members"), m => struct(
-        m.getField("mtype").as("mtype"),
-        (m.getField("ref") + lit(s)).as("ref"),
-        m.getField("role").as("role")))))
-    val big = base.copy(nodes = nodes, ways = ways, relations = rels)
-    println(s"[scale] osm x$mult: nodes=${nodes.count()} " +
-      s"ways=${ways.count()} rels=${rels.count()}")
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[scale] $name ${(System.nanoTime() - t0) / 1e9}%.1fs rows=$r")
-    }
-    // §2.2 way-node resolve: the job's largest join (ref×node shuffle)
-    time("resolve_way_nodes")(
-      graft.operators.Middle.resolveAllWayCoords(big).count())
-    // §2.8 dependency closure: 1% of nodes marked changed → parent
-    // ways → parent relations (the append path's id fan-out)
-    time("dependency_closure") {
-      val changed = nodes.where(col("id") % 97 === 0)
-        .select(col("id")).persist()
-      val parentWays = graft.operators.Middle.parentsOfNodes(
-        ways, "id", "nodes", changed, "id").persist()
-      val parentRelsN = graft.operators.Middle.parentsOfMembers(
-        rels, "id", "members", "n", changed, "id", typeField = "mtype")
-      val parentRelsW = graft.operators.Middle.parentsOfMembers(
-        rels, "id", "members", "w", parentWays, "id", typeField = "mtype")
-      val n = parentWays.count() +
-        parentRelsN.unionByName(parentRelsW).distinct().count()
-      changed.unpersist(); parentWays.unpersist()
-      n
-    }
-    // §2.3-2.5 full classic derivation: style filter → middle joins →
-    // geometry construction incl. relation multipolygon assembly
-    val t4 = graft.classic.ClassicPipeline.run(big,
-      graft.classic.StyleFile.defaultStyle)
-    time("classic_polygon_assembly")(t4.polygon.count())
-    time("classic_lines")(t4.line.count())
-    // §2.1 expire: dirty-tile cover of every entity at z12 + roll-up
-    // (the CLI -e path, distributed end to end)
-    time("expire_cover_z12") {
-      val cover = graft.operators.Expire.fromOsmEntities(big,
-        graft.operators.TileCover.Config(zoom = 12),
-        maxTilesPerGeometry =
-          graft.operators.TileCover.Limits().maxTilesPerGeometry)
-      graft.operators.Expire.rollup(cover, "x", "y", 12, 10).count()
-    }
-    base.unpersistBacking()
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.classic
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.TagFunctions
@@ -37,8 +39,25 @@ import graft.sources.OsmXml.OsmDataFrames
   */
 object ClassicPipeline {
 
+  /** The four output tables. `backing` holds the RDDs of rows the
+    * pipeline materialized for them (restricted runs only). */
   final case class Tables4(point: DataFrame, line: DataFrame,
-      polygon: DataFrame, roads: DataFrame)
+      polygon: DataFrame, roads: DataFrame,
+      backing: Seq[RDD[_]] = Nil) {
+    /** Release the materialized rows; call once every consumer ran. */
+    def unpersistBacking(): Unit =
+      backing.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Eager local checkpoint: `df` runs once and its lineage is cut, so
+    * every consumer reads the stored blocks. Returns the frame and the
+    * RDD holding those blocks, for release. */
+  private[classic] def materialize(df: DataFrame): (DataFrame, RDD[_]) = {
+    val cp = df.localCheckpoint()
+    (cp, cp.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd
+    }.get)
+  }
 
   /** value_to_bool (src/osmtypes.hpp:162-174) as a Column. */
   private def valueToBool(v: Column, defval: Column): Column =
@@ -161,8 +180,8 @@ object ClassicPipeline {
       relationMember: Option[DataFrame => DataFrame] = None)
 
   /** Restriction sets for incremental runs: when given, only these ids
-    * are *derived* (resolution still sees every entity — member ways
-    * of an untouched relation must resolve even if not re-derived). */
+    * are *derived*. Resolution still sees every node, and every member
+    * way of a derived relation, even one that is not re-derived. */
   final case class Subset(nodeIds: Option[DataFrame] = None,
       wayIds: Option[DataFrame] = None, relIds: Option[DataFrame] = None)
 
@@ -283,10 +302,22 @@ object ClassicPipeline {
     val keptWays =
       if (keptWays1.columns.contains("__z")) keptWays1
       else keptWays1.withColumn("__z", TagFunctions.zOrder(col("__outtags")))
-    // resolve ALL ways ONCE; the kept-ways join below restricts it, and
+    // resolve the ways ONCE; the kept-ways join below restricts it, and
     // the relation-member fetch reuses the same exchange instead of
-    // paying the ref×node shuffle twice (the job's largest join)
-    val allResolved = resolvedAllWays(osm)
+    // paying the ref×node shuffle twice (the job's largest join). A
+    // run restricted to both way and relation ids derives only those
+    // ways and the members of those relations, so it resolves no more.
+    val allResolved = (subset.wayIds, subset.relIds) match {
+      case (Some(wayIds), Some(relIds)) =>
+        val memberWays = restrict(osm.relations, Some(relIds))
+          .select(explode(col("members")).as("m"))
+          .where(col("m.mtype") === "w")
+          .select(col("m.ref").as("id"))
+        Middle.resolveWayCoordsFor(osm, wayIds
+          .select(col(wayIds.columns.head).as("id"))
+          .unionByName(memberWays))
+      case _ => Middle.resolveAllWayCoords(osm)
+    }
     val resolved = allResolved.select(col("rwid").as("id"),
       col("wlons").as("lons"), col("wlats").as("lats"))
     val waysGeo = keptWays.join(resolved, "id")
@@ -422,15 +453,25 @@ object ClassicPipeline {
         format_string("%g", col("__pg._2")).cast("float").as("way_area"))
 
     val line = wayLineRows.unionByName(relLineRows)
+    val tables = Seq(points, line, wayPolyRows.unionByName(relPolyRows))
+    val (Seq(point, lines, polygon), backing) =
+      if (subset == Subset()) (tables, Nil)
+      else {
+        // a restricted run feeds several sinks (table writes, the live
+        // load): its rows become ONE plan, tagged by table and
+        // materialized once, so the sinks read stored rows
+        val (tagged, rdd) = materialize(tables.zipWithIndex
+          .map { case (df, t) => df.withColumn("__t", lit(t)) }
+          .reduce(_.unionByName(_, allowMissingColumns = true)))
+        (tables.zipWithIndex.map { case (df, t) =>
+          tagged.where(col("__t") === t).select(df.columns.map(col): _*)
+        }, Seq(rdd))
+      }
     Tables4(
-      point = points,
-      line = line.drop("__roads"),
-      polygon = wayPolyRows.unionByName(relPolyRows),
-      roads = line.where(col("__roads")).drop("__roads"))
+      point = point,
+      line = lines.drop("__roads"),
+      polygon = polygon,
+      roads = lines.where(col("__roads")).drop("__roads"),
+      backing = backing)
   }
-
-  /** All ways (tagged or not — the middle stores everything) with
-    * resolved ordered coordinates, for relation member fetch. */
-  private def resolvedAllWays(osm: OsmDataFrames): DataFrame =
-    Middle.resolveAllWayCoords(osm)
 }

@@ -1,5 +1,6 @@
 package graft.classic
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,9 +43,16 @@ object ClassicUpdate {
   /** The append computation's pieces, exposed for sinks that apply
     * delete-then-insert natively (the live PostgreSQL load keys
     * deletes on the id sets and inserts only `rederived`, matching
-    * db_deleter_by_id_t + the re-derive queue). */
+    * db_deleter_by_id_t + the re-derive queue). `backing` holds the
+    * RDDs of the materialized id sets and rows. */
   final case class Delta(changedNodes: DataFrame, pendingWays: DataFrame,
-      pendingRels: DataFrame, rederived: ClassicPipeline.Tables4)
+      pendingRels: DataFrame, rederived: ClassicPipeline.Tables4,
+      backing: Seq[RDD[_]] = Nil) {
+    /** Release the materialized id sets and rows; call once every
+      * consumer ran. */
+    def unpersistBacking(): Unit =
+      backing.foreach(_.unpersist(blocking = false))
+  }
 
   /** Incremental table update. Returns the updated 4 tables.
     *
@@ -78,9 +86,22 @@ object ClassicUpdate {
       extraAttributes: Boolean = false,
       keepCoastlines: Boolean = false, multiGeometry: Boolean = false,
       reprojectArea: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): Delta = {
-    val after = applyChanges(before, changes)
+      hstoreColumns: Seq[String] = Nil): Delta =
+    deltaOn(applyChanges(before, changes), changes, style, srid,
+      hstore, hstoreMatchOnly, extraAttributes,
+      keepCoastlines, multiGeometry, reprojectArea, hstoreColumns)
 
+  /** [[computeDelta]] against the already-merged entity state `after`
+    * (e.g. the updated middle, re-read from where it was written). The
+    * id closures and the re-derived rows are each materialized once,
+    * so the delta's consumers read stored rows. */
+  def deltaOn(after: OsmDataFrames, changes: OsmDataFrames,
+      style: Style, srid: Int = graft.geom.Srid.WebMercator,
+      hstore: Boolean = false, hstoreMatchOnly: Boolean = false,
+      extraAttributes: Boolean = false,
+      keepCoastlines: Boolean = false, multiGeometry: Boolean = false,
+      reprojectArea: Boolean = false,
+      hstoreColumns: Seq[String] = Nil): Delta = {
     val changedNodes = changes.nodes.select(col("id")).distinct()
     val changedWays = changes.ways.select(col("id")).distinct()
     val changedRels = changes.relations.select(col("id")).distinct()
@@ -97,14 +118,25 @@ object ClassicUpdate {
       .unionByName(parentRelsN.toDF("id"))
       .unionByName(parentRelsW.toDF("id")).distinct()
 
+    // the three id sets as one (id, kind) frame, materialized once:
+    // every later consumer reads it instead of re-running the closure
+    val (ids, idsRdd) = ClassicPipeline.materialize(Seq(
+      "n" -> changedNodes, "w" -> pendingWays, "r" -> pendingRels)
+      .map { case (k, df) => df.select(col("id"), lit(k).as("kind")) }
+      .reduce(_ unionByName _))
+    def idsOf(kind: String): DataFrame =
+      ids.where(col("kind") === kind).select(col("id"))
+    val (nodeIds, wayIds, relIds) = (idsOf("n"), idsOf("w"), idsOf("r"))
+
     val rederived = ClassicPipeline.run(after, style, srid,
       hstore = hstore, hstoreMatchOnly = hstoreMatchOnly,
       extraAttributes = extraAttributes,
       keepCoastlines = keepCoastlines, multiGeometry = multiGeometry,
       reprojectArea = reprojectArea, hstoreColumns = hstoreColumns,
-      subset = ClassicPipeline.Subset(Some(changedNodes), Some(pendingWays),
-        Some(pendingRels)))
-    Delta(changedNodes, pendingWays, pendingRels, rederived)
+      subset = ClassicPipeline.Subset(Some(nodeIds), Some(wayIds),
+        Some(relIds)))
+    Delta(nodeIds, wayIds, relIds, rederived,
+      backing = idsRdd +: rederived.backing)
   }
 
   /** Step 4 of [[incrementalUpdate]]: delete-then-insert against the

@@ -1,9 +1,10 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.classic.{ClassicPipeline, StyleFile}
+import graft.classic.{ClassicPipeline, ClassicUpdate, StyleFile}
 import graft.sources.{OsmSource, Validate}
+import graft.sources.OsmXml.OsmDataFrames
 
 /** `graft.cli.Main [options] files…` — the osm2pgsql command surface
   * on this engine: read the inputs (any format, k-way merged), run
@@ -73,39 +74,48 @@ object Main {
     // src/osm2pgsql.cpp:300-309): unspecified options inherit the
     // stored values, specified ones must agree, with the reference's
     // messages either way
-    val o: Options =
-      if (!o0.append) o0
+    val stored: Option[Map[String, String]] =
+      if (!o0.append) None
       else scala.util.Try(graft.sinks.Properties.load(spark,
-        s"${o0.outputDir}/properties")).toOption match {
-        case None => o0
-        case Some(p) =>
-          graft.sinks.Properties.resolveAppend(p,
-            graft.sinks.Properties.AppendOptions(
-              attributes = if (o0.extraAttributes) Some(true) else None,
-              prefix = if (o0.prefixSet) Some(o0.prefix) else None,
-              flatNodeFile = o0.flatNodes.map(f => java.nio.file.Paths
-                .get(f).toAbsolutePath.toString),
-              output = if (o0.outputSet) Some(o0.output) else None,
-              style = o0.styleFile.map(f => java.nio.file.Paths
-                .get(f).toAbsolutePath.toString))) match {
-            case Left(err) => Options.fail(err)
-            case Right(r) =>
-              r.messages.foreach(m => System.err.println(s"[graft] $m"))
-              o0.copy(
-                prefix = r.settings("prefix"),
-                extraAttributes = r.settings("attributes") == "true",
-                output = r.settings("output"),
-                flatNodes =
-                  Option(r.settings("flat_node_file")).filter(_.nonEmpty),
-                // "default.style" is the built-in-style marker, not a
-                // file on disk
-                styleFile = Option(r.settings("style"))
-                  .filter(s => s.nonEmpty && s != "default.style"))
-          }
-      }
+        s"${o0.outputDir}/properties")).toOption
+    val o: Options = stored match {
+      case None => o0
+      case Some(p) =>
+        graft.sinks.Properties.resolveAppend(p,
+          graft.sinks.Properties.AppendOptions(
+            attributes = if (o0.extraAttributes) Some(true) else None,
+            prefix = if (o0.prefixSet) Some(o0.prefix) else None,
+            flatNodeFile = o0.flatNodes.map(f => java.nio.file.Paths
+              .get(f).toAbsolutePath.toString),
+            output = if (o0.outputSet) Some(o0.output) else None,
+            style = o0.styleFile.map(f => java.nio.file.Paths
+              .get(f).toAbsolutePath.toString))) match {
+          case Left(err) => Options.fail(err)
+          case Right(r) =>
+            r.messages.foreach(m => System.err.println(s"[graft] $m"))
+            o0.copy(
+              prefix = r.settings("prefix"),
+              extraAttributes = r.settings("attributes") == "true",
+              output = r.settings("output"),
+              flatNodes =
+                Option(r.settings("flat_node_file")).filter(_.nonEmpty),
+              // "default.style" is the built-in-style marker, not a
+              // file on disk
+              styleFile = Option(r.settings("style"))
+                .filter(s => s.nonEmpty && s != "default.style"))
+        }
+    }
     graft.sinks.PgLive.logSql = o.logSql || o.logSqlData
     graft.sinks.PgLive.logSqlData = o.logSqlData
     val osm0 = OsmSource.read(spark, o.inputFiles, o.inputReader)
+    // the readers cache the parsed entities; a long-lived session
+    // (replication loop, repeated runs) must not keep them
+    try runOn(spark, o, osm0, stored)
+    finally osm0.unpersistBacking()
+  }
+
+  private def runOn(spark: SparkSession, o: Options, osm0: OsmDataFrames,
+      stored: Option[Map[String, String]]): Unit = {
     val nodes = o.bbox match {
       case Some((minLon, minLat, maxLon, maxLat)) =>
         Validate.bboxFilter(osm0.nodes, minLon, minLat, maxLon, maxLat)
@@ -129,8 +139,6 @@ object Main {
     }
     val out = java.nio.file.Paths.get(o.outputDir)
     java.nio.file.Files.createDirectories(out)
-    def tableNames = Seq(s"${o.prefix}_point", s"${o.prefix}_line",
-      s"${o.prefix}_polygon", s"${o.prefix}_roads")
 
     // a reachable -d server gets the live load; an unreachable one
     // degrades to artifacts (create mode) with a note
@@ -141,140 +149,64 @@ object Main {
     // the hstore extension is needed for -k/-j AND for any -z column
     val needHstore = o.hstore || o.hstoreColumns.nonEmpty
 
-    val tables =
-      if (!o.append) {
-        val t = ClassicPipeline.run(osm, style, srid = o.srid,
-          hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
-          extraAttributes = o.extraAttributes,
-          tagTransform = o.tagTransformScript
-            .map(graft.classic.LuaTagTransform.fromFile(_,
-              o.extraAttributes))
-            .getOrElse(ClassicPipeline.TagTransform()),
-          keepCoastlines = o.keepCoastlines,
-          multiGeometry = o.multiGeometry,
-          reprojectArea = o.reprojectArea,
-          hstoreColumns = o.hstoreColumns)
-        // --slim: persist the middle so --append can pick up from here
-        // (the flat-nodes/slim-tables analog: the raw entity frames)
-        if (o.slim && !o.drop) {
-          osm.nodes.write.mode("overwrite").parquet(s"$out/${o.middleDir}/nodes")
-          osm.ways.write.mode("overwrite").parquet(s"$out/${o.middleDir}/ways")
-          osm.relations.write.mode("overwrite")
-            .parquet(s"$out/${o.middleDir}/relations")
-        }
-        // the osm2pgsql_properties analog (src/osm2pgsql.cpp:102-145):
-        // import settings + the single input's PBF-header replication
-        // info when present, so `replication init` can start from the
-        // import alone (store_data_properties)
-        val replProps = (o.inputFiles match {
-          case Seq(single) if single.endsWith(".pbf") =>
-            scala.util.Try(graft.sources.OsmPbf.readHeader(single)).toOption
-          case _ => None
-        }).map { h =>
-          h.replicationBaseUrl.map("replication_base_url" -> _).toMap ++
-            h.replicationSequence
-              .map(s => "replication_sequence_number" -> s.toString) ++
-            h.replicationTimestamp
-              .map(t => "replication_timestamp" -> t.toString)
-        }.getOrElse(Map.empty)
-        graft.sinks.Properties.save(spark, s"$out/properties",
-          graft.sinks.Properties.importProperties(osm,
-            attributes = o.extraAttributes, prefix = o.prefix,
-            updatable = o.slim && !o.drop, output = o.output,
-            // the reference stores the ABSOLUTE style path
-            // (src/osm2pgsql.cpp:121-128); "default.style" marks the
-            // built-in style
-            style = o.styleFile.map(f => java.nio.file.Paths.get(f)
-              .toAbsolutePath.toString).getOrElse("default.style"),
-            // the reference stores the ABSOLUTE flat-nodes path
-            // (src/osm2pgsql.cpp:210)
-            flatNodeFile = o.flatNodes.map(f => java.nio.file.Paths
-              .get(f).toAbsolutePath.toString).getOrElse("")) ++ replProps)
-        t
-      } else {
-        // the reference's append flow (src/osmdata.cpp:371-406):
-        // change ids → dependency closure → re-derive subset →
-        // delete-then-insert against the previous tables (the
-        // properties resolution at the top of run() already vetted
-        // updatable/prefix/attributes/flat-nodes/output).
-        val spark2 = spark
-        def loadMiddle = graft.sources.OsmXml.OsmDataFrames(
-          spark2.read.parquet(s"$out/${o.middleDir}/nodes"),
-          spark2.read.parquet(s"$out/${o.middleDir}/ways"),
-          spark2.read.parquet(s"$out/${o.middleDir}/relations"))
-        val before = loadMiddle
-        val prev = ClassicPipeline.Tables4(
-          spark2.read.parquet(s"$out/${o.prefix}_point"),
-          spark2.read.parquet(s"$out/${o.prefix}_line"),
-          spark2.read.parquet(s"$out/${o.prefix}_polygon"),
-          spark2.read.parquet(s"$out/${o.prefix}_roads"))
-        val delta = graft.classic.ClassicUpdate.computeDelta(
-          before, osm, style, srid = o.srid,
-          hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
-          extraAttributes = o.extraAttributes,
-          keepCoastlines = o.keepCoastlines,
-          multiGeometry = o.multiGeometry,
-          reprojectArea = o.reprojectArea,
-          hstoreColumns = o.hstoreColumns)
-        // the live delete-before-insert must run BEFORE the staged
-        // parquet swap below — its plans read the current files
-        liveDsn.foreach { dsn =>
-          val postgis =
-            graft.sinks.ClassicPgLoad.prepareServer(dsn, needHstore)
-          graft.sinks.ClassicPgLoad.append(pgTables, delta, dsn,
-            o.tableSchema, o.hstoreAll, postgis)
-        }
-        val t = graft.classic.ClassicUpdate.applyDelta(prev, delta)
-        // updated middle: latest-version-wins merge of base + changes
-        val merged = graft.classic.ClassicUpdate.applyChanges(before, osm)
-        // plans read the CURRENT files, so stage everything first and
-        // swap after all actions complete
-        merged.nodes.write.mode("overwrite")
-          .parquet(s"$out/${o.middleDir}_new/nodes")
-        merged.ways.write.mode("overwrite").parquet(s"$out/${o.middleDir}_new/ways")
-        merged.relations.write.mode("overwrite")
-          .parquet(s"$out/${o.middleDir}_new/relations")
-        t
-      }
-
-    val named = Seq(
-      s"${o.prefix}_point"   -> tables.point,
-      s"${o.prefix}_line"    -> tables.line,
-      s"${o.prefix}_polygon" -> tables.polygon,
-      s"${o.prefix}_roads"   -> tables.roads)
     if (!o.append) {
-      named.foreach { case (name, df) =>
+      val t = ClassicPipeline.run(osm, style, srid = o.srid,
+        hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
+        extraAttributes = o.extraAttributes,
+        tagTransform = o.tagTransformScript
+          .map(graft.classic.LuaTagTransform.fromFile(_,
+            o.extraAttributes))
+          .getOrElse(ClassicPipeline.TagTransform()),
+        keepCoastlines = o.keepCoastlines,
+        multiGeometry = o.multiGeometry,
+        reprojectArea = o.reprojectArea,
+        hstoreColumns = o.hstoreColumns)
+      // --slim: persist the middle so --append can pick up from here
+      // (the flat-nodes/slim-tables analog: the raw entity frames)
+      if (o.slim && !o.drop) {
+        osm.nodes.write.mode("overwrite").parquet(s"$out/${o.middleDir}/nodes")
+        osm.ways.write.mode("overwrite").parquet(s"$out/${o.middleDir}/ways")
+        osm.relations.write.mode("overwrite")
+          .parquet(s"$out/${o.middleDir}/relations")
+      }
+      // the osm2pgsql_properties analog (src/osm2pgsql.cpp:102-145):
+      // import settings + the single input's PBF-header replication
+      // info when present, so `replication init` can start from the
+      // import alone (store_data_properties)
+      val replProps = (o.inputFiles match {
+        case Seq(single) if single.endsWith(".pbf") =>
+          scala.util.Try(graft.sources.OsmPbf.readHeader(single)).toOption
+        case _ => None
+      }).map { h =>
+        h.replicationBaseUrl.map("replication_base_url" -> _).toMap ++
+          h.replicationSequence
+            .map(s => "replication_sequence_number" -> s.toString) ++
+          h.replicationTimestamp
+            .map(t => "replication_timestamp" -> t.toString)
+      }.getOrElse(Map.empty)
+      graft.sinks.Properties.save(spark, s"$out/properties",
+        graft.sinks.Properties.importProperties(osm,
+          attributes = o.extraAttributes, prefix = o.prefix,
+          updatable = o.slim && !o.drop, output = o.output,
+          // the reference stores the ABSOLUTE style path
+          // (src/osm2pgsql.cpp:121-128); "default.style" marks the
+          // built-in style
+          style = o.styleFile.map(f => java.nio.file.Paths.get(f)
+            .toAbsolutePath.toString).getOrElse("default.style"),
+          // the reference stores the ABSOLUTE flat-nodes path
+          // (src/osm2pgsql.cpp:210)
+          flatNodeFile = o.flatNodes.map(f => java.nio.file.Paths
+            .get(f).toAbsolutePath.toString).getOrElse("")) ++ replProps)
+      tablesOf(o, t).foreach { case (name, df) =>
         df.write.mode("overwrite").parquet(s"$out/$name")
       }
-    } else {
-      // append plans read the previous tables: stage, then swap both
-      // the tables and the middle
-      named.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$out/${name}_new")
-      }
-      def swap(from: String, to: String): Unit = {
-        val dst = new java.io.File(s"$out/$to")
-        org.apache.commons.io.FileUtils.deleteDirectory(dst)
-        org.apache.commons.io.FileUtils
-          .moveDirectory(new java.io.File(s"$out/$from"), dst)
-      }
-      named.foreach { case (name, _) => swap(s"${name}_new", name) }
-      swap(s"${o.middleDir}_new", o.middleDir)
-      // advance the recorded data timestamps to the newest applied
-      // change (the reference re-runs store_data_properties on append);
-      // ISO-8601 Z strings compare correctly as strings
-      scala.util
-        .Try(graft.sinks.Properties.load(spark, s"$out/properties"))
-        .foreach { prev =>
-          val fresh = graft.sinks.Properties.importProperties(osm)
-          val tsKeys = Seq("import_timestamp", "current_timestamp")
-          val merged = prev ++ tsKeys.flatMap { k =>
-            fresh.get(k).map(v => k ->
-              prev.get(k).filter(_ >= v).getOrElse(v))
-          }
-          graft.sinks.Properties.save(spark, s"$out/properties", merged)
-        }
-    }
+    } else appendClassic(spark, o, osm, style, stored, liveLoad = delta =>
+      liveDsn.foreach { dsn =>
+        val postgis =
+          graft.sinks.ClassicPgLoad.prepareServer(dsn, needHstore)
+        graft.sinks.ClassicPgLoad.append(pgTables, delta, dsn,
+          o.tableSchema, o.hstoreAll, postgis)
+      })
 
     // create-mode database step: live load from the landed parquet
     // (zero recompute — exactly the written rows), or the load
@@ -361,12 +293,94 @@ object Main {
     }
   }
 
+  /** The four classic tables under their prefixed names. */
+  private def tablesOf(o: Options,
+      t: ClassicPipeline.Tables4): Seq[(String, DataFrame)] = Seq(
+    s"${o.prefix}_point"   -> t.point,
+    s"${o.prefix}_line"    -> t.line,
+    s"${o.prefix}_polygon" -> t.polygon,
+    s"${o.prefix}_roads"   -> t.roads)
+
+  /** The reference's append flow (src/osmdata.cpp:371-406): change ids
+    * → dependency closure → re-derive subset → delete-then-insert
+    * against the previous tables (the properties resolution in run()
+    * already vetted updatable/prefix/attributes/flat-nodes/output).
+    *
+    * Every shared intermediate is computed once. The merged middle is
+    * written first and re-read as the post-change state; the delta
+    * materializes its id closures and re-derived rows; so the live
+    * load (`liveLoad`), the four table writes and the middle swap read
+    * only files and stored rows. The plans read the current files, so
+    * every output is staged as `<name>_new` and swapped in after all
+    * actions ran. */
+  private def appendClassic(spark: SparkSession, o: Options,
+      osm: OsmDataFrames, style: graft.classic.Style,
+      stored: Option[Map[String, String]],
+      liveLoad: ClassicUpdate.Delta => Unit): Unit = {
+    val out = o.outputDir
+    val middle = s"$out/${o.middleDir}"
+    def read(path: String) = spark.read.parquet(path)
+    val before = OsmDataFrames(read(s"$middle/nodes"),
+      read(s"$middle/ways"), read(s"$middle/relations"))
+    val prev = ClassicPipeline.Tables4(read(s"$out/${o.prefix}_point"),
+      read(s"$out/${o.prefix}_line"), read(s"$out/${o.prefix}_polygon"),
+      read(s"$out/${o.prefix}_roads"))
+    // updated middle: latest-version-wins merge of base + changes,
+    // re-read with its known schema (no inference job)
+    val merged = ClassicUpdate.applyChanges(before, osm)
+    val Seq(nodes, ways, relations) = Seq("nodes" -> merged.nodes,
+      "ways" -> merged.ways, "relations" -> merged.relations).map {
+      case (stream, df) =>
+        val path = s"${middle}_new/$stream"
+        df.write.mode("overwrite").parquet(path)
+        spark.read.schema(df.schema).parquet(path)
+    }
+    val delta = ClassicUpdate.deltaOn(OsmDataFrames(nodes, ways, relations),
+      osm, style, srid = o.srid,
+      hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
+      extraAttributes = o.extraAttributes,
+      keepCoastlines = o.keepCoastlines,
+      multiGeometry = o.multiGeometry,
+      reprojectArea = o.reprojectArea,
+      hstoreColumns = o.hstoreColumns)
+    val named = tablesOf(o, ClassicUpdate.applyDelta(prev, delta))
+    try {
+      // the live delete-before-insert runs BEFORE the staged swap
+      liveLoad(delta)
+      named.foreach { case (name, df) =>
+        df.write.mode("overwrite").parquet(s"$out/${name}_new")
+      }
+    } finally delta.unpersistBacking()
+    def swap(from: String, to: String): Unit = {
+      val dst = new java.io.File(to)
+      org.apache.commons.io.FileUtils.deleteDirectory(dst)
+      org.apache.commons.io.FileUtils
+        .moveDirectory(new java.io.File(from), dst)
+    }
+    named.foreach { case (name, _) =>
+      swap(s"$out/${name}_new", s"$out/$name")
+    }
+    swap(s"${middle}_new", middle)
+    // advance the recorded data timestamps to the newest applied
+    // change (the reference re-runs store_data_properties on append);
+    // ISO-8601 Z strings compare correctly as strings
+    stored.foreach { prevProps =>
+      val fresh = graft.sinks.Properties.importProperties(osm)
+      val tsKeys = Seq("import_timestamp", "current_timestamp")
+      graft.sinks.Properties.save(spark, s"$out/properties",
+        prevProps ++ tsKeys.flatMap { k =>
+          fresh.get(k).map(v =>
+            k -> prevProps.get(k).filter(_ >= v).getOrElse(v))
+        })
+    }
+  }
+
   /** -O flex: load the named compiled config, enrich ways with the
     * resolved `__geom` linestring, run [[graft.flex.FlexRunner]], and
     * land each output table as parquet (an action on the runner's
     * frames also realizes its observable insert counters). */
   private def runFlex(spark: SparkSession, o: Options,
-      osm: graft.sources.OsmXml.OsmDataFrames): Unit = {
+      osm: OsmDataFrames): Unit = {
     import org.apache.spark.sql.functions._
     val name = o.styleFile.getOrElse(Options.fail(
       "The flex output requires a style: the fully-qualified name of " +

@@ -53,6 +53,16 @@ object Middle {
         transform(col("resolved"), r => r.getField("lat")).as("wlats"))
   }
 
+  /** [[resolveAllWayCoords]] for the ways whose ids are in `wayIds`'s
+    * first column only: the semi-join runs first, so only those ways'
+    * refs are exploded and joined against the nodes. */
+  def resolveWayCoordsFor(osm: graft.sources.OsmXml.OsmDataFrames,
+      wayIds: DataFrame): DataFrame = {
+    val ids = wayIds.select(col(wayIds.columns.head).as("__wid"))
+    resolveAllWayCoords(osm.copy(ways =
+      osm.ways.join(ids, col("id") === col("__wid"), "left_semi")))
+  }
+
   /** rel_members_get (src/middle-pgsql.cpp:814-863): resolve a
     * relation's members against an entity table, keeping member order
     * and counting found vs referenced (missing members are OK).

@@ -93,10 +93,6 @@ object MiddleStore {
     * bucketed node store is read in place. Output matches
     * [[Middle.resolveAllWayCoords]] (rwid, wlons, wlats). */
   def resolveWayCoordsFor(spark: SparkSession, cfg: Config,
-      wayIds: DataFrame, idCol: String): DataFrame = {
-    val osm = load(spark, cfg)
-    val pending = osm.ways.join(wayIds,
-      osm.ways("id") === wayIds(idCol), "left_semi")
-    Middle.resolveAllWayCoords(osm.copy(ways = pending))
-  }
+      wayIds: DataFrame, idCol: String): DataFrame =
+    Middle.resolveWayCoordsFor(load(spark, cfg), wayIds.select(col(idCol)))
 }
