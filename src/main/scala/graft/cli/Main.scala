@@ -212,6 +212,8 @@ object Main {
     // (zero recompute — exactly the written rows), or the load
     // artifacts when the server is unreachable
     if (!o.append) o.database.foreach { dsn =>
+      // the --drop import is not updatable: no osm_id index either way
+      val updatable = o.slim && !o.drop
       liveDsn match {
         case Some(live) =>
           val postgis =
@@ -219,7 +221,7 @@ object Main {
           pgTables.foreach { t =>
             graft.sinks.ClassicPgLoad.createLoad(t,
               spark.read.parquet(s"$out/${t.name}"), live, o.tableSchema,
-              o.hstoreAll, o.slim && !o.drop, postgis,
+              o.hstoreAll, updatable, postgis,
               hstoreIndex = o.hstoreAddIndex,
               tablespace = o.tablespaceMainData,
               tablespaceIndex = o.tablespaceMainIndex)
@@ -227,13 +229,13 @@ object Main {
         case None =>
           System.err.println(s"[graft] '$dsn' unreachable — writing " +
             "DDL + COPY artifacts instead of loading live")
-          val ddl = pgTables.flatMap(t =>
-            Seq(graft.sinks.PgClassic.dropDdl(t, o.tableSchema),
-              graft.sinks.PgClassic.createDdl(t, o.tableSchema,
-                tablespace = o.tablespaceMainData)) ++
-              graft.sinks.PgClassic.postLoadDdl(t, o.slim, o.tableSchema,
-                hstoreIndex = o.hstoreAddIndex,
-                tablespaceIndex = o.tablespaceMainIndex))
+          val ddl = pgTables.flatMap { t =>
+            val (create, postLoad) = graft.sinks.PgClassic.createStatements(
+              t, o.tableSchema, updatable, hstoreIndex = o.hstoreAddIndex,
+              tablespace = o.tablespaceMainData,
+              tablespaceIndex = o.tablespaceMainIndex)
+            create ++ postLoad
+          }
           java.nio.file.Files.writeString(out.resolve("ddl.sql"),
             ddl.mkString("", ";\n", ";\n"))
           pgTables.foreach { t =>
@@ -385,6 +387,15 @@ object Main {
     val name = o.styleFile.getOrElse(Options.fail(
       "The flex output requires a style: the fully-qualified name of " +
         "a compiled graft.flex.FlexConfig object (-S)."))
+    // the flex append (FlexRunner.append) is not wired to the CLI: an
+    // append would run the config on the change file alone, and the
+    // live load below would replace every table with those rows
+    if (o.append && o.database.exists(graft.sinks.PgLive.reachable))
+      Options.fail("-O flex -a cannot update a database yet: the flex " +
+        "output has no incremental update path to PostgreSQL, and a " +
+        "reload would replace every table with the rows derived from " +
+        "the change file alone. Run the flex append without -d " +
+        "(parquet output only), or re-import with -O flex -d.")
     val cfg = loadFlexConfig(name, o.append, o.database,
       luaPropertiesOf(o))
     // osm2pgsql.mode for configs (track-changes.lua gates on it):
@@ -485,7 +496,6 @@ object Main {
       java.nio.file.Files.writeString(out.resolve("jdbc_url.txt"),
         graft.sinks.PgSink.jdbcUrlFromDsn(dsn) + "\n")
       if (graft.sinks.PgLive.reachable(dsn)) {
-        import scala.jdk.CollectionConverters._
         val needHstore = cfg.tables.exists(
           _.columns.exists(_.ctype == graft.flex.FlexType.Hstore))
         val postgis =
@@ -494,24 +504,21 @@ object Main {
           // a table's own schema field wins over the CLI --schema
           // (define_table{schema=...}, with-schema.lua)
           val ts = t.schemaName.getOrElse(o.tableSchema)
-          if (t.schemaName.isDefined) graft.sinks.PgLive.execOrThrow(dsn,
-            s"""CREATE SCHEMA IF NOT EXISTS "$ts";""")
           val q = s""""$ts"."${t.name}""""
-          graft.sinks.PgLive.execOrThrow(dsn,
-            s"DROP TABLE IF EXISTS $q;")
-          graft.sinks.PgLive.execOrThrow(dsn,
-            graft.sinks.PgSink.createTableDdl(t, unlogged = true,
-              ts, postgis) + ";")
+          val create = t.schemaName
+            .map(s => s"""CREATE SCHEMA IF NOT EXISTS "$s"""").toSeq ++
+            Seq(s"DROP TABLE IF EXISTS $q",
+              graft.sinks.PgSink.createTableDdl(t, unlogged = true, ts,
+                postgis))
           // a declared table nothing inserted into (e.g. a gen dest
           // table when process_gen didn't run) exists but stays empty
-          if (new java.io.File(s"$out/${t.name}").exists())
-            graft.sinks.PgLive.copyInto(dsn, q,
-              graft.sinks.PgSink.copyLines(
-                spark.read.parquet(s"$out/${t.name}"), t, postgis)
-                .toLocalIterator().asScala)
-          graft.sinks.PgSink.postLoadDdl(t, updatable = o.slim && !o.drop,
-            ts, postgis)
-            .foreach(d => graft.sinks.PgLive.execOrThrow(dsn, d + ";"))
+          val lines = Some(s"$out/${t.name}")
+            .filter(new java.io.File(_).exists())
+            .map(p => graft.sinks.PgSink.copyLines(spark.read.parquet(p), t,
+              postgis))
+          graft.sinks.PgLive.loadTable(dsn, q, create, lines,
+            graft.sinks.PgSink.postLoadDdl(t, updatable = o.slim && !o.drop,
+              ts, postgis))
         }
       }
     }

@@ -12,8 +12,8 @@ import graft.classic.ClassicUpdate
   * (src/osm2pgsql.cpp:47-83 → output-pgsql start/stop + db-copy):
   *
   *  - create: DROP → CREATE UNLOGGED → COPY FROM STDIN → SET LOGGED +
-  *    indexes + ANALYZE per table (table_t::start/stop,
-  *    src/table.cpp:64-232);
+  *    indexes + ANALYZE per table ([[PgClassic.createStatements]] run
+  *    by [[PgLive.loadTable]], the loader the flex output shares);
   *  - append: per table, ONE transactional psql session that COPYs
   *    the pending id set into a temp table, deletes matching rows
   *    (db_deleter_by_id_t, src/db-copy.hpp:76-99 — set-at-a-time via
@@ -21,9 +21,10 @@ import graft.classic.ClassicUpdate
   *    the re-derived rows in; ANALYZE after commit.
   *
   * All row formatting happens in executors ([[PgClassic.copyLines]]);
-  * the driver only streams formatted lines (toLocalIterator — bounded
-  * by one partition). Geometry degrades to bytea when the server has
-  * no PostGIS ([[PgClassic.createDdl]]).
+  * the append's psql session streams the formatted lines through the
+  * driver (toLocalIterator — bounded by one partition). Geometry
+  * degrades to bytea when the server has no PostGIS
+  * ([[PgClassic.createDdl]]).
   */
 object ClassicPgLoad {
 
@@ -47,25 +48,12 @@ object ClassicPgLoad {
       postgis: Boolean, hstoreIndex: Boolean = false,
       tablespace: Option[String] = None,
       tablespaceIndex: Option[String] = None): Unit = {
-    PgLive.execOrThrow(dsn, PgClassic.dropDdl(t, schema) + ";")
-    PgLive.execOrThrow(dsn,
-      PgClassic.createDdl(t, schema, postgis, tablespace) + ";")
-    val lines = PgClassic.copyLines(
-      PgClassic.copyFrame(df, t, hstoreAll, postgis), t, postgis)
-    // bulk path: N concurrent per-partition COPY writers over the
-    // pure-JVM wire client (staged + published atomically, see
-    // PgWire.copyPartitioned) when the DSN is wire-connectable FROM
-    // AN EXECUTOR — probing on the driver would prove nothing on a
-    // multi-node cluster; psql keeps the exotic libpq forms (service
-    // files, SSL parameter combinations) working as the fallback
-    if (PgWire.reachableFromExecutors(lines.sparkSession, dsn))
-      PgWire.copyPartitioned(lines, dsn, qualified(t, schema))
-    else
-      PgLive.copyInto(dsn, qualified(t, schema),
-        lines.toLocalIterator().asScala)
-    PgClassic.postLoadDdl(t, slim, schema, postgis, hstoreIndex,
-      tablespaceIndex)
-      .foreach(d => PgLive.execOrThrow(dsn, d + ";"))
+    val (create, postLoad) = PgClassic.createStatements(t, schema, slim,
+      postgis, hstoreIndex, tablespace, tablespaceIndex)
+    PgLive.loadTable(dsn, qualified(t, schema), create,
+      Some(PgClassic.copyLines(
+        PgClassic.copyFrame(df, t, hstoreAll, postgis), t, postgis)),
+      postLoad)
   }
 
   /** Append-mode delete-then-insert for one table, in one

@@ -21,7 +21,7 @@ import graft.classic.Style
   * the engine's dedicated columns, not tag matches.
   *
   * Everything here is a declarative column transform — the COPY wire
-  * formatting runs in executors via [[PgSink.copyLines]]' cell rules.
+  * formatting runs in executors via [[PgSink.copyText]].
   */
 object PgClassic {
 
@@ -245,32 +245,27 @@ object PgClassic {
         zCols ++ hstoreCol :+ wayCol): _*)
   }
 
-  /** COPY TEXT wire lines for a classic table, formatted in executors
-    * (cell rules of [[PgSink.copyLines]]; binary → hex-EWKB is the
-    * PostGIS form, the bytea path arrives as an escaped `\x` string). */
+  /** COPY TEXT wire lines for a classic table's [[copyFrame]],
+    * formatted in executors by [[PgSink.copyText]] (binary → hex-EWKB
+    * is the PostGIS form; without PostGIS the frame already carries
+    * `way` as a `\x` string, which the encoder escapes). */
   def copyLines(frame: DataFrame, t: ClassicTable,
       postgis: Boolean = true): Dataset[String] = {
-    import org.apache.spark.sql.types._
-    val schema = frame.schema
     require(frame.columns.toSeq ==
       (if (t.hstore) t.copyColumnNames
       else t.copyColumnNames.filterNot(_ == "tags")),
       s"column order must match table '${t.name}'")
-    import frame.sparkSession.implicits._
-    frame.map { row =>
-      val cells = schema.fields.toIndexedSeq.zipWithIndex.map {
-        case (f, i) =>
-          if (row.isNullAt(i)) PgSink.CopyNull
-          else f.dataType match {
-            case BinaryType => PgSink.CopyPreEscaped(
-              PgSink.hexGeomCopyValue(row.getAs[Array[Byte]](i)))
-            case MapType(StringType, StringType, _) =>
-              PgSink.CopyPreEscaped(PgSink.hstoreCopyValue(
-                row.getMap[String, String](i).toSeq))
-            case _ => PgSink.CopyValue(String.valueOf(row.get(i)))
-          }
-      }
-      PgSink.copyLine(cells)
-    }
+    PgSink.copyText(frame, postgis)
   }
+
+  /** The create-mode statements around one table's COPY
+    * (table_t::start/stop, src/table.cpp:64-232): drop + create before
+    * it, the post-load batch after. The live load and the offline
+    * `ddl.sql` artifact both take their statements from here. */
+  def createStatements(t: ClassicTable, schema: String, slim: Boolean,
+      postgis: Boolean = true, hstoreIndex: Boolean = false,
+      tablespace: Option[String] = None,
+      tablespaceIndex: Option[String] = None): (Seq[String], Seq[String]) =
+    (Seq(dropDdl(t, schema), createDdl(t, schema, postgis, tablespace)),
+      postLoadDdl(t, slim, schema, postgis, hstoreIndex, tablespaceIndex))
 }

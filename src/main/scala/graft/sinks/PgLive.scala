@@ -2,6 +2,10 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
+
 /** Live PostgreSQL access through the `psql` client, which accepts
   * every libpq DSN form the reference takes on -d (plain dbname,
   * keyword/value conninfo, postgresql:// URIs — dsn.feature) verbatim
@@ -9,13 +13,13 @@ import java.nio.charset.StandardCharsets
   *
   * The engine's bulk path is COPY FROM STDIN — the reference's actual
   * wire protocol (src/db-copy.cpp). Executors format the COPY TEXT
-  * lines ([[PgClassic.copyLines]] / [[PgSink.copyLines]], pure CPU,
-  * distributed); the driver streams them through one psql process per
-  * table via toLocalIterator — the local-mode analog of the
-  * reference's single db-copy thread, with driver memory bounded to
-  * one partition. At cluster scale the same lines land without the
-  * driver hop: [[PgSink.writeCopyFiles]] + parallel loaders, or the
-  * per-partition JDBC writers of [[PgSink.write]].
+  * lines ([[PgSink.copyText]], pure CPU, distributed); [[loadTable]]
+  * then streams them in, per partition over [[PgWire]] when the
+  * executors can connect, else through one psql process per table
+  * via toLocalIterator — the local-mode analog of the reference's
+  * single db-copy thread, with driver memory bounded to one
+  * partition, and the transport for the libpq forms [[PgWire]] does
+  * not speak (SSL, service files).
   */
 object PgLive {
 
@@ -124,4 +128,26 @@ object PgLive {
       lines: Iterator[String]): Unit =
     session(dsn, Iterator(s"COPY $qualified FROM STDIN;\n") ++
       lines.map(_ + "\n") ++ Iterator("\\.\n"))
+
+  /** Create-mode load of one table, the sequence both outputs run
+    * (table_t::start/stop, src/table.cpp:64-232; flex-table.cpp):
+    * the `create` statements (drop, create), COPY of `lines` into
+    * `qualified` when there are rows to load, then the `postLoad`
+    * batch (SET LOGGED, indexes, ANALYZE).
+    *
+    * The transport is chosen here: N concurrent per-partition COPY
+    * writers ([[PgWire.copyPartitioned]], staged and published
+    * atomically) when the DSN is wire-connectable FROM AN EXECUTOR —
+    * probing on the driver would prove nothing on a multi-node
+    * cluster; otherwise one psql session fed through the driver. */
+  def loadTable(dsn: String, qualified: String, create: Seq[String],
+      lines: Option[Dataset[String]], postLoad: Seq[String]): Unit = {
+    create.foreach(s => execOrThrow(dsn, s + ";"))
+    lines.foreach { l =>
+      if (PgWire.reachableFromExecutors(l.sparkSession, dsn))
+        PgWire.copyPartitioned(l, dsn, qualified)
+      else copyInto(dsn, qualified, l.toLocalIterator().asScala)
+    }
+    postLoad.foreach(s => execOrThrow(dsn, s + ";"))
+  }
 }

@@ -1,31 +1,25 @@
 package graft.sinks
 
-import java.sql.{Connection, DriverManager}
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.types._
 
 import graft.flex.{FlexColumn, FlexTableDef, FlexType}
 
 /** PostgreSQL sink (reference: src/db-copy.cpp COPY pipeline +
-  * src/flex-table.cpp / src/table.cpp table lifecycle).
+  * src/flex-table.cpp / src/table.cpp table lifecycle): the flex
+  * tables' DDL, the COPY TEXT wire encoding both outputs use, and
+  * libpq DSN parsing.
   *
-  * Design, mirrored from the reference but per-partition instead of
-  * per-process:
   *  - DDL: CREATE (UNLOGGED for interim tables, src/flex-table.hpp:62),
   *    load, then indexes + ANALYZE at the end (late indexing,
   *    src/flex-table.hpp:189-208) — index-after-load is the same
   *    bulk-load trick at any scale;
-  *  - load path: one writer per partition streaming COPY FROM STDIN
-  *    over the pure-JVM wire client ([[PgWire]], [[writeCopy]]) — the
-  *    reference's actual bulk protocol (src/db-copy.cpp) with no
-  *    driver funnel; a generic-JDBC multi-row INSERT path ([[write]])
-  *    remains for non-PostgreSQL targets;
-  *  - append deletes: batched `DELETE ... WHERE id = ANY(?)` before
-  *    insert (db_deleter_by_id_t, src/db-copy.hpp:76-99).
+  *  - rows: [[copyText]] formats COPY TEXT lines in executors, the
+  *    one row encoder behind [[copyLines]] and
+  *    [[PgClassic.copyLines]]; [[PgLive.loadTable]] streams them in.
   *
-  * DDL generation is pure and unit-tested; live-connection paths need a
-  * reachable PG and are exercised only when a JDBC URL is supplied.
+  * DDL generation and the encoding are pure and unit-tested; the live
+  * load runs in PgLiveSpec and CliSpec against a real server.
   */
 object PgSink {
 
@@ -124,25 +118,6 @@ object PgSink {
       userIdx.getOrElse(defaultIdx) ++ idIdx :+ s"""ANALYZE $qualified"""
   }
 
-  /** Batched delete-before-insert for append mode
-    * (db_deleter_by_id_t, src/db-copy.hpp:76-99). */
-  def deleteSql(t: FlexTableDef, schema: String = "public"): String = {
-    // a table without ids has nothing to delete by: append never
-    // removes its rows (table-ids.feature)
-    require(t.hasIds, s"Table '${t.name}' has no ids; it is insert-only.")
-    require(t.ids != graft.flex.FlexIds.Tile,
-      s"Table '${t.name}' has tile ids; delete-by-object-id does not apply.")
-    s"""DELETE FROM "$schema"."${t.name}" WHERE "${t.idColumn}" = ANY (?)"""
-  }
-
-  def insertSql(t: FlexTableDef, schema: String = "public"): String = {
-    val cols = t.idFields.map(f => s""""${f._1}"""") ++
-      t.writeColumns.map(c => s""""${c.name}"""")
-    val params = cols.map(_ => "?")
-    s"""INSERT INTO "$schema"."${t.name}" (${cols.mkString(", ")})
-       |VALUES (${params.mkString(", ")})""".stripMargin
-  }
-
   // ---- COPY TEXT wire format (src/db-copy-mgr.hpp) ----
   //
   // The reference's actual write path is `COPY ... FROM STDIN` text
@@ -221,16 +196,13 @@ object PgSink {
     case CopyPreEscaped(s) => s
   }.mkString("\t")
 
-  /** A full COPY TEXT line: escaped values joined by tabs, None → \N
-    * (add_null_column, src/db-copy-mgr.hpp:107). The caller appends
-    * the newline when streaming. For rows containing hstore or
-    * hex-geometry columns use [[copyLine]] — those wire forms are
-    * already escaped and must not pass through [[copyEscape]] again. */
+  /** A full COPY TEXT line of plain values, None → \N
+    * (add_null_column, src/db-copy-mgr.hpp:107). For rows containing
+    * hstore or hex-geometry columns use [[copyLine]] — those wire forms
+    * are already escaped and must not pass through [[copyEscape]]
+    * again. */
   def copyRow(values: Seq[Option[String]]): String =
-    values.map {
-      case None    => "\\N"
-      case Some(s) => copyEscape(s)
-    }.mkString("\t")
+    copyLine(values.map(_.fold[CopyCell](CopyNull)(CopyValue)))
 
   /** Parse one COPY TEXT line back into column values — the inverse
     * of [[copyRow]]: split on tabs, `\N` → None, values unescaped.
@@ -264,155 +236,50 @@ object PgSink {
     b.toString
   }
 
+  /** Rows of a flex table → COPY TEXT wire lines, formatted in
+    * executors by [[copyText]]. `df` columns must already be in the
+    * table's column order (id column first for tables with ids). */
+  def copyLines(df: DataFrame, t: FlexTableDef,
+      postgis: Boolean = true): Dataset[String] = {
+    val expect = t.schema.fieldNames.toSeq
+    require(df.columns.toSeq == expect,
+      s"column order must match table '${t.name}': expected $expect, " +
+        s"got ${df.columns.toSeq}")
+    copyText(df, postgis)
+  }
+
   /** Rows → COPY TEXT wire lines, formatted in EXECUTORS — the
     * distributed half of the reference's db-copy pipeline
     * (src/db-copy.cpp buffers, here one `Dataset[String]` of
-    * ready-to-stream lines). Column typing follows the DataFrame
-    * schema: binary → hex EWKB, map<string,string> → hstore wire form,
-    * boolean → t/f, null → \N, everything else the escaped string
-    * value. `df` columns must already be in the table's column order
-    * (id column first for tables with ids). `postgis=false` renders
-    * binary as the bytea `\x` hex wire form instead of PostGIS's
-    * bare hex EWKB. */
-  def copyLines(df: DataFrame, t: FlexTableDef,
-      postgis: Boolean = true): org.apache.spark.sql.Dataset[String] = {
-    val expect = t.schema.fieldNames.toSeq
-    require(df.columns.toSeq == expect,
-      s"column order must match table '${t.name}': expected $expect, " +
-        s"got ${df.columns.toSeq}")
-    val schema = df.schema
+    * ready-to-stream lines; the caller appends the newline). Column
+    * typing follows the DataFrame schema: binary → hex EWKB,
+    * map<string,string> → hstore wire form, boolean → t/f, null → \N,
+    * everything else the escaped string value. `postgis=false`
+    * renders binary as the bytea `\x` hex wire form instead of
+    * PostGIS's bare hex EWKB. The caller checks the column order. */
+  def copyText(df: DataFrame, postgis: Boolean): Dataset[String] = {
+    val fields = df.schema.fields.toIndexedSeq.zipWithIndex
     import df.sparkSession.implicits._
     df.map { row =>
-      val cells = schema.fields.toIndexedSeq.zipWithIndex.map {
-        case (f, i) =>
-          if (row.isNullAt(i)) CopyNull
-          else f.dataType match {
-            case BinaryType if postgis =>
-              CopyPreEscaped(hexGeomCopyValue(row.getAs[Array[Byte]](i)))
-            case BinaryType => // bytea: \x hex, backslash COPY-escaped
-              CopyPreEscaped(
-                "\\\\x" + hexGeomCopyValue(row.getAs[Array[Byte]](i)))
-            case MapType(StringType, StringType, _) =>
-              CopyPreEscaped(hstoreCopyValue(
-                row.getMap[String, String](i).toSeq))
-            case BooleanType =>
-              CopyValue(if (row.getBoolean(i)) "t" else "f")
-            case _ => CopyValue(String.valueOf(row.get(i)))
-          }
-      }
-      copyLine(cells)
-    }
-  }
-
-  /** Rows → COPY BINARY tuples, encoded in EXECUTORS — the binary
-    * sibling of [[copyLines]] (the PUBLIC binary COPY format: int16
-    * field count, then per field int32 byte length + the type's
-    * binary send representation; NULL = length −1). Binary skips the
-    * server's text→datum parse, roughly halving bulk-load CPU there.
-    *
-    * Unlike COPY TEXT, binary is TYPE-EXACT: each field must be the
-    * target column's wire type, so encoding is driven by the table
-    * definition (FlexType → int2/int4/int8/float4/float8/bool/text/
-    * timestamptz-µs-since-2000/hstore/jsonb/EWKB), not by lossy
-    * stringification. Columns with a `sql_type` override are refused
-    * loudly (their wire type is unknowable here) — load those tables
-    * via COPY TEXT. */
-  def binaryCopyRows(df: DataFrame, t: FlexTableDef,
-      postgis: Boolean = true): org.apache.spark.sql.Dataset[Array[Byte]] = {
-    val expect = t.schema.fieldNames.toSeq
-    require(df.columns.toSeq == expect,
-      s"column order must match table '${t.name}': expected $expect, " +
-        s"got ${df.columns.toSeq}")
-    t.writeColumns.foreach(c => require(c.sqlTypeOverride.isEmpty,
-      s"binary COPY cannot encode column '${c.name}' with sql_type " +
-        s"override '${c.sqlTypeOverride.get}' — use the TEXT path"))
-    val nId = t.idFields.length
-    val flexTypes: IndexedSeq[Option[FlexType.Value]] =
-      (IndexedSeq.fill(nId)(None: Option[FlexType.Value]) ++
-        t.writeColumns.map(c => Some(c.ctype))).toIndexedSeq
-    val sparkTypes = df.schema.fields.map(_.dataType).toIndexedSeq
-    import df.sparkSession.implicits._
-    df.map { row =>
-      val out = new java.io.ByteArrayOutputStream(64)
-      val d = new java.io.DataOutputStream(out)
-      d.writeShort(sparkTypes.length)
-      var i = 0
-      while (i < sparkTypes.length) {
-        if (row.isNullAt(i)) d.writeInt(-1)
-        else (flexTypes(i), sparkTypes(i)) match {
-          // id fields: wire type from the Spark type (int8 ids,
-          // char(1) type markers, int4 tile coordinates)
-          case (None, LongType) => d.writeInt(8); d.writeLong(row.getLong(i))
-          case (None, IntegerType) => d.writeInt(4); d.writeInt(row.getInt(i))
-          case (None, StringType) =>
-            val b = row.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            d.writeInt(b.length); d.write(b)
-          case (Some(FlexType.Int8), _) | (Some(FlexType.IdNum), _) =>
-            d.writeInt(8); d.writeLong(row.getLong(i))
-          case (Some(FlexType.Int4), _) =>
-            d.writeInt(4); d.writeInt(row.getInt(i))
-          case (Some(FlexType.Int2), _) | (Some(FlexType.Direction), _) =>
-            d.writeInt(2); d.writeShort(row.getShort(i))
-          case (Some(FlexType.Real), _) =>
-            d.writeInt(4); d.writeFloat(row.getFloat(i))
-          case (Some(FlexType.DoublePrecision), _) =>
-            d.writeInt(8); d.writeDouble(row.getDouble(i))
-          case (Some(FlexType.Boolean), _) =>
-            d.writeInt(1); d.writeByte(if (row.getBoolean(i)) 1 else 0)
-          case (Some(FlexType.Text), _) | (Some(FlexType.IdType), _) =>
-            val b = row.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            d.writeInt(b.length); d.write(b)
-          case (Some(FlexType.Json), _) => // jsonb: version byte + text
-            val b = row.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            d.writeInt(b.length + 1); d.writeByte(1); d.write(b)
-          case (Some(FlexType.Timestamp), _) =>
-            // timestamptz binary: µs since 2000-01-01 00:00:00 UTC
-            val ts = row.getAs[java.sql.Timestamp](i)
-            val micros = math.multiplyExact(ts.getTime, 1000L) +
-              (ts.getNanos % 1000000) / 1000 - 946684800000000L
-            d.writeInt(8); d.writeLong(micros)
-          case (Some(FlexType.Hstore), _) =>
-            val pairs = row.getMap[String, String](i).toSeq.sortBy(_._1)
-            val body = new java.io.ByteArrayOutputStream(32)
-            val bd = new java.io.DataOutputStream(body)
-            bd.writeInt(pairs.length)
-            pairs.foreach { case (k, v) =>
-              val kb = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              bd.writeInt(kb.length); bd.write(kb)
-              if (v == null) bd.writeInt(-1)
-              else {
-                val vb = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                bd.writeInt(vb.length); bd.write(vb)
-              }
-            }
-            val b = body.toByteArray
-            d.writeInt(b.length); d.write(b)
-          case (_, BinaryType) =>
-            // geometry binary send IS EWKB; bytea binary is raw bytes
-            val b = row.getAs[Array[Byte]](i)
-            d.writeInt(b.length); d.write(b)
-          case (ft, st) => throw new IllegalArgumentException(
-            s"binary COPY: unsupported column type $ft/$st at index $i")
+      copyLine(fields.map { case (f, i) =>
+        if (row.isNullAt(i)) CopyNull
+        else f.dataType match {
+          case BinaryType if postgis =>
+            CopyPreEscaped(hexGeomCopyValue(row.getAs[Array[Byte]](i)))
+          case BinaryType => // bytea: \x hex, backslash COPY-escaped
+            CopyPreEscaped(
+              "\\\\x" + hexGeomCopyValue(row.getAs[Array[Byte]](i)))
+          case MapType(StringType, StringType, _) =>
+            CopyPreEscaped(hstoreCopyValue(
+              row.getMap[String, String](i).toSeq))
+          case BooleanType =>
+            CopyValue(if (row.getBoolean(i)) "t" else "f")
+          case _ => CopyValue(String.valueOf(row.get(i)))
         }
-        i += 1
-      }
-      out.toByteArray
+      })
     }
   }
 
-  /** Write the COPY bulk-load artifact: one text file per partition
-    * under `dir`, each line a COPY TEXT row — the at-scale load shape
-    * (executors format, any loader streams the files into
-    * `COPY ... FROM STDIN`). PgLiveSpec round-trips the files through
-    * a live server. */
-  def writeCopyFiles(df: DataFrame, t: FlexTableDef, dir: String): Unit =
-    copyLines(df, t).write.mode("overwrite").text(dir)
-
-  /** libpq-style DSN → JDBC URL, the connection forms the reference
-    * accepts on -d (dsn.feature: plain dbname, keyword/value pairs,
-    * postgresql:// and postgres:// URIs). Defaults host=localhost,
-    * port=5432 like libpq. Unrecognized keywords are passed through as
-    * JDBC query params. */
   /** Any libpq -d form (plain dbname, keyword/value conninfo,
     * postgresql:// URI) → its connection-parameter map, mirroring the
     * reference's connection_params_t so -U/-H/-P/-W merge over it
@@ -456,6 +323,12 @@ object PgSink {
       s"$k=$quoted"
     }.mkString(" ")
 
+  /** libpq-style DSN → JDBC URL (the `jdbc_url.txt` artifact for
+    * downstream loaders), the connection forms the reference
+    * accepts on -d (dsn.feature: plain dbname, keyword/value pairs,
+    * postgresql:// and postgres:// URIs). Defaults host=localhost,
+    * port=5432 like libpq. Unrecognized keywords are passed through as
+    * JDBC query params. */
   def jdbcUrlFromDsn(dsn: String): String = {
     def url(host: String, port: String, db: String,
         params: Seq[(String, String)]): String = {
@@ -488,59 +361,5 @@ object PgSink {
         kv.getOrElse("dbname", ""),
         (kv - "host" - "port" - "dbname").toSeq.sortBy(_._1))
     } else url("localhost", "5432", trimmed, Nil)
-  }
-
-  /** Distributed COPY load — the reference's wire protocol at the
-    * cluster topology: executors format COPY TEXT lines
-    * ([[copyLines]]) and each PARTITION streams its own
-    * `COPY … FROM STDIN` over one [[PgWire]] connection (pure-JVM
-    * protocol v3 — no psql subprocess, no JDBC driver), so an
-    * N-partition load is N concurrent COPY writers, the shape the
-    * reference's --number-processes fan-out approximates on one box
-    * (src/db-copy.cpp:170-210). Returns the total rows the server
-    * acknowledged (Σ per-partition COPY tags — a load that drops
-    * rows cannot return quietly). The table must already exist
-    * ([[createTableDdl]]); run [[postLoadDdl]] after. */
-  def writeCopy(df: DataFrame, t: FlexTableDef, dsn: String,
-      schema: String = "public", postgis: Boolean = true): Long =
-    PgWire.copyPartitioned(copyLines(df, t, postgis), dsn,
-      s""""$schema"."${t.name}"""")
-
-  /** [[writeCopy]] over the BINARY wire format
-    * ([[binaryCopyRows]] → [[PgWire.copyPartitionedBinary]]): same
-    * staging/publish topology, roughly half the server-side parse
-    * cost. PgLiveSpec proves TEXT and BINARY loads of the same frame
-    * read back identically. */
-  def writeCopyBinary(df: DataFrame, t: FlexTableDef, dsn: String,
-      schema: String = "public", postgis: Boolean = true): Long =
-    PgWire.copyPartitionedBinary(binaryCopyRows(df, t, postgis), dsn,
-      s""""$schema"."${t.name}"""")
-
-  /** Distributed load over generic JDBC: one connection + prepared
-    * statement per partition, executeBatch every `batchSize` rows
-    * (the COPY-buffer flush cadence, src/db-copy.hpp:140-163).
-    * [[writeCopy]] is the PostgreSQL-native path; this one remains
-    * for targets that only speak JDBC. */
-  def write(df: DataFrame, t: FlexTableDef, jdbcUrl: String,
-      batchSize: Int = 10000): Unit = {
-    val sql = insertSql(t)
-    val n = df.schema.fields.length
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      val conn: Connection = DriverManager.getConnection(jdbcUrl)
-      conn.setAutoCommit(false)
-      try {
-        val ps = conn.prepareStatement(sql)
-        var pending = 0
-        rows.foreach { row =>
-          var i = 0
-          while (i < n) { ps.setObject(i + 1, row.get(i)); i += 1 }
-          ps.addBatch()
-          pending += 1
-          if (pending >= batchSize) { ps.executeBatch(); pending = 0 }
-        }
-        if (pending > 0) ps.executeBatch()
-        conn.commit()
-      } finally conn.close()
-    }
   }
 }

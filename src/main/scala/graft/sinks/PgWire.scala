@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.io.{BufferedInputStream, BufferedOutputStream,
-  DataInputStream, DataOutputStream, EOFException, IOException,
+  DataInputStream, DataOutputStream, IOException,
   InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -19,9 +19,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * frames directly — `CopyData`/`CopyDone` after a `CopyInResponse`
   * — with no psql subprocess ([[PgLive]]) and no JDBC driver on the
   * classpath. Because it is plain JVM I/O, it runs ON EXECUTORS:
-  * [[PgSink.writeCopy]] opens one connection per partition, which is
-  * the true cluster-scale load topology (N writers × COPY), not a
-  * driver funnel.
+  * [[PgWire.copyPartitioned]] opens one connection per partition,
+  * which is the true cluster-scale load topology (N writers × COPY),
+  * not a driver funnel; [[PgLive.loadTable]] picks it whenever the
+  * executors can connect.
   *
   * Supports TCP and unix-domain sockets (libpq convention: a `host`
   * beginning with `/` is a socket DIRECTORY; the socket file is
@@ -270,36 +271,6 @@ final class PgWire private (in: DataInputStream, out: DataOutputStream,
     finishCopyCycle(copySql)
   }
 
-  /** Stream pre-encoded BINARY tuples (each an int16 field count +
-    * per-field int32 length + bytes — [[PgSink.binaryCopyRows]]
-    * produces them) into a `COPY … FROM STDIN (FORMAT binary)`
-    * statement: the PUBLIC binary COPY file format — the 19-byte
-    * `PGCOPY\n\377\r\n\0` signature + int32 flags 0 + int32
-    * extension-length 0 header, tuple frames, and the int16 -1
-    * trailer. Binary roughly halves server-side parse cost at bulk
-    * load vs COPY TEXT (no text → datum conversion); same 64 KiB
-    * CopyData batching and error surfacing as [[copyIn]]. */
-  def copyInBinary(copySql: String, tuples: Iterator[Array[Byte]]): Long = {
-    awaitCopyInResponse(copySql)
-    val buf = new java.io.ByteArrayOutputStream(80 << 10)
-    def flushData(): Unit = if (buf.size() > 0) {
-      send('d', buf.toByteArray)
-      buf.reset()
-    }
-    try {
-      buf.write(BinaryCopySignature)
-      tuples.foreach { t =>
-        buf.write(t)
-        if (buf.size() >= (64 << 10)) flushData()
-      }
-      buf.write(0xff); buf.write(0xff) // int16 -1 file trailer
-      flushData()
-      send('c', Array.emptyByteArray) // CopyDone
-      flush()
-    } catch { case e: IOException => copyAbort(copySql, e) }
-    finishCopyCycle(copySql)
-  }
-
   override def close(): Unit = {
     try { send('X', Array.emptyByteArray); flush() }
     catch { case _: IOException => () }
@@ -308,12 +279,6 @@ final class PgWire private (in: DataInputStream, out: DataOutputStream,
 }
 
 object PgWire {
-
-  /** COPY BINARY file signature + flags(0) + header-extension len(0)
-    * — the PUBLIC format from the PostgreSQL COPY documentation. */
-  private[sinks] val BinaryCopySignature: Array[Byte] =
-    Array[Byte]('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xff.toByte, '\r',
-      '\n', 0, /* flags */ 0, 0, 0, 0, /* ext len */ 0, 0, 0, 0)
 
   /** Connect using any libpq -d DSN form ([[PgSink.dsnParams]]):
     * plain dbname, keyword/value conninfo, postgresql:// URI. A
@@ -378,18 +343,7 @@ object PgWire {
     * afterwards by prefix. Returns the rows actually published, so a
     * load that dropped rows cannot return quietly. */
   def copyPartitioned(lines: org.apache.spark.sql.Dataset[String],
-      dsn: String, qualifiedTable: String): Long =
-    copyPartitionedImpl(lines, dsn, qualifiedTable, binary = false)
-
-  /** [[copyPartitioned]] over pre-encoded BINARY tuples
-    * ([[PgSink.binaryCopyRows]]) — identical staging/publish/cleanup
-    * discipline, `COPY … FROM STDIN (FORMAT binary)` on the wire. */
-  def copyPartitionedBinary(tuples: org.apache.spark.sql.Dataset[Array[Byte]],
-      dsn: String, qualifiedTable: String): Long =
-    copyPartitionedImpl(tuples, dsn, qualifiedTable, binary = true)
-
-  private def copyPartitionedImpl[T](lines: org.apache.spark.sql.Dataset[T],
-      dsn: String, qualifiedTable: String, binary: Boolean): Long = {
+      dsn: String, qualifiedTable: String): Long = {
     import lines.sparkSession.implicits._
     // short prefix: PostgreSQL truncates identifiers at 63 bytes, and
     // a silent truncation could collide two attempts' staging tables
@@ -416,12 +370,7 @@ object PgWire {
           try {
             conn.exec(
               s"""CREATE UNLOGGED TABLE "$t" (LIKE $qualifiedTable)""")
-            val n =
-              if (binary) conn.copyInBinary(
-                s"""COPY "$t" FROM STDIN (FORMAT binary)""",
-                it.asInstanceOf[Iterator[Array[Byte]]])
-              else conn.copyIn(s"""COPY "$t" FROM STDIN""",
-                it.asInstanceOf[Iterator[String]])
+            val n = conn.copyIn(s"""COPY "$t" FROM STDIN""", it)
             Iterator((tc.partitionId(), t, n))
           } finally conn.close()
         }

@@ -83,22 +83,17 @@ class OutputsSpec extends SparkSpecBase {
     assert(post.last.startsWith("ANALYZE"))
     assert(PgSink.postLoadDdl(t, updatable = false)
       .forall(!_.contains("(\"osm_id\")"))) // no id index when not updatable
-    assert(PgSink.deleteSql(t).contains(""""osm_id" = ANY (?)"""))
 
-    // custom id_column flows into DDL, insert, delete and index
+    // custom id_column flows into DDL and index
     val custom = t.copy(idColumn = "abc")
     assert(PgSink.createTableDdl(custom).contains(""""abc" int8"""))
-    assert(PgSink.insertSql(custom).contains(""""abc""""))
-    assert(PgSink.deleteSql(custom).contains(""""abc" = ANY (?)"""))
     assert(PgSink.postLoadDdl(custom, updatable = true)
       .exists(_.contains("""("abc")""")))
 
-    // NoIndex tables: no id column anywhere, deletes refused
+    // NoIndex tables: no id column anywhere
     val noIds = FlexTableDef("simple", FlexIds.NoIndex,
       Seq(FlexColumn("v", FlexType.Text)))
     assert(!PgSink.createTableDdl(noIds).contains("int8"))
-    assert(!PgSink.insertSql(noIds).contains("osm_id"))
-    intercept[IllegalArgumentException] { PgSink.deleteSql(noIds) }
     assert(PgSink.postLoadDdl(noIds, updatable = true)
       .forall(!_.contains("osm_id")))
   }

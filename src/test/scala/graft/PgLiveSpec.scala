@@ -2,26 +2,29 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import graft.cli.{Main, Options}
 import graft.flex.{FlexColumn, FlexIds, FlexTableDef, FlexType}
-import graft.sinks.PgSink
+import graft.sinks.{ClassicPgLoad, PgClassic, PgLive, PgSink, PgWire}
 
 /** End-to-end run of the COPY sink's bulk path against a LIVE
   * PostgreSQL server: DDL lifecycle (UNLOGGED create → COPY FROM STDIN
   * → SET LOGGED + index + ANALYZE), the byte-exact COPY TEXT wire
-  * encoding (escapes, hstore, NULLs), and append-mode
-  * delete-before-insert — the pieces q51 and OutputsSpec prove against
-  * goldens, here proven against the real parser.
+  * encoding (escapes, hstore, NULLs, the column type matrix) over both
+  * transports (per-partition [[graft.sinks.PgWire]] writers and one
+  * psql session), append-mode delete-before-insert, and the CLI's
+  * live create and append loads on small generated inputs — the
+  * pieces q51 and OutputsSpec prove against goldens, here proven
+  * against the real parser.
   *
   * The cluster is created in a temp dir on a unix socket (no TCP) and
   * torn down after; the suite self-cancels when postgres binaries or
   * root (for `su postgres`) are unavailable, so it degrades to the
-  * golden tests elsewhere. The JDBC `write`/`deleteSql` prepared-path
-  * is NOT exercised (no pgjdbc driver on the classpath — documented in
-  * COVERAGE.md); COPY is the reference's actual bulk path
-  * (src/db-copy.cpp) and is what runs here.
+  * golden tests elsewhere.
   *
-  * Geometry columns are omitted: no PostGIS in the sandbox; their
-  * hex-EWKB COPY form is byte-golden-tested in OutputsSpec.
+  * There is no PostGIS here: geometry lands as bytea, and its hex-EWKB
+  * COPY form is byte-golden-tested in OutputsSpec.
   */
 class PgLiveSpec extends SparkSpecBase {
 
@@ -39,6 +42,33 @@ class PgLiveSpec extends SparkSpecBase {
     val (rc, out) = psql(s"COPY ($query) TO STDOUT;")
     assert(rc == 0, s"COPY TO failed: $out")
     out.split("\n", -1).toSeq.dropRight(1)
+  }
+
+  private def q(table: String) = s""""public"."$table""""
+
+  /** Rows as one multi-row INSERT of SQL literals (each row already
+    * rendered, column for column) — the server's own literal parser
+    * is the oracle the COPY TEXT loads are compared against. */
+  private def insertInto(table: String, cols: Seq[String],
+      rows: Seq[Seq[String]]): String =
+    s"INSERT INTO ${q(table)} (${cols.map("\"" + _ + "\"").mkString(", ")})" +
+      rows.map(_.mkString("(", ", ", ")")).mkString(" VALUES ", ", ", ";")
+
+  private def sqlLit(s: String) = "'" + s.replace("'", "''") + "'"
+  private def sqlOpt[T](v: Option[T])(f: T => String) = v.fold("NULL")(f)
+  private def hstoreLit(tags: Seq[(String, String)]) =
+    if (tags.isEmpty) "''::hstore"
+    else s"hstore(ARRAY[${tags.map(t => sqlLit(t._1)).mkString(",")}]," +
+      s" ARRAY[${tags.map(t => sqlLit(t._2)).mkString(",")}])"
+
+  /** Every column of `table`, ordered by id, as COPY TO lines. */
+  private def dump(table: String): Seq[String] =
+    copyOut(s"SELECT * FROM ${q(table)} ORDER BY \"osm_id\"")
+
+  /** DROP + CREATE UNLOGGED for a flex table definition. */
+  private def recreate(c: PgWire, t: FlexTableDef): Unit = {
+    c.exec(s"DROP TABLE IF EXISTS ${q(t.name)}")
+    c.exec(PgSink.createTableDdl(t, unlogged = true))
   }
 
   override def withFixture(test: NoArgTest) = {
@@ -152,42 +182,7 @@ class PgLiveSpec extends SparkSpecBase {
       Seq("1"))
   }
 
-  test("writeCopyFiles: executor-formatted COPY files bulk-load cleanly") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, map_from_entries}
-    val df = rows.toDF("osm_id", "name", "tags", "population", "ok")
-      .withColumn("tags", map_from_entries(col("tags")))
-      .repartition(2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-copyfiles").toString
-    try {
-      PgSink.writeCopyFiles(df, tableDef, dir)
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("part-"))
-      assert(files.length == 2)
-      psql("""DROP TABLE IF EXISTS "public"."graft_copyload";""")
-      psql(PgSink.createTableDdl(tableDef.copy(name = "graft_copyload"),
-        unlogged = true) + ";")
-      files.foreach { f =>
-        val lines = java.nio.file.Files.readAllLines(f.toPath)
-        import scala.jdk.CollectionConverters._
-        assert(copyIn("\"public\".\"graft_copyload\"",
-          lines.asScala.toSeq) == 0)
-      }
-      assert(copyOut("SELECT count(*) FROM \"public\".\"graft_copyload\"") ==
-        Seq(rows.size.toString))
-      // the nastiest row survived the executor-side formatting
-      assert(copyOut("SELECT \"tags\" -> 'k2' FROM " +
-        "\"public\".\"graft_copyload\" WHERE \"osm_id\" = 3")
-        .map(PgSink.copyRowParse(_).head) == Seq(Some("a\tb")))
-    } finally {
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
-    }
-  }
-
   test("PgWire: pure-JVM protocol-v3 exec/query/COPY against the live server") {
-    import graft.sinks.PgWire
     val dsn = PgTestCluster.dsn
     assert(PgWire.reachable(dsn), "wire client cannot reach the cluster")
     val c = PgWire.connect(dsn)
@@ -223,54 +218,41 @@ class PgLiveSpec extends SparkSpecBase {
     } finally c.close()
   }
 
-  test("PgSink.writeCopy: per-partition wire COPY, identical to an INSERT load") {
+  test("per-partition wire COPY and psql COPY load identically to an INSERT") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, map_from_entries}
-    import graft.sinks.PgWire
     val df = rows.toDF("osm_id", "name", "tags", "population", "ok")
       .withColumn("tags", map_from_entries(col("tags")))
       .repartition(2) // two partitions = two concurrent COPY writers
+    val lines = PgSink.copyLines(df, tableDef)
     val c = PgWire.connect(PgTestCluster.dsn)
     try {
       c.exec("CREATE EXTENSION IF NOT EXISTS hstore;")
-      for (t <- Seq("graft_wirecopy", "graft_insert")) {
-        c.exec(s"""DROP TABLE IF EXISTS "public"."$t";""")
-        c.exec(PgSink.createTableDdl(tableDef.copy(name = t),
-          unlogged = true))
-      }
-      val n = PgSink.writeCopy(df, tableDef.copy(name = "graft_wirecopy"),
-        PgTestCluster.dsn)
-      assert(n == rows.size, s"writeCopy acknowledged $n rows")
-      // the same rows through a multi-row INSERT (SQL literals), then
-      // byte-identical COPY TO dumps of both tables
-      def lit(s: String) = "'" + s.replace("'", "''") + "'"
-      val values = rows.map { case (id, name, tags, pop, ok) =>
-        val hs =
-          if (tags.isEmpty) "''::hstore"
-          else s"hstore(ARRAY[${tags.map(t => lit(t._1)).mkString(",")}]," +
-            s" ARRAY[${tags.map(t => lit(t._2)).mkString(",")}])"
-        s"($id, ${name.map(lit).getOrElse("NULL")}, $hs, " +
-          s"${pop.map(_.toString).getOrElse("NULL")}, " +
-          s"${ok.map(_.toString).getOrElse("NULL")})"
-      }.mkString(", ")
-      c.exec("INSERT INTO \"public\".\"graft_insert\" " +
-        s"""("osm_id", "name", "tags", "population", "ok") VALUES $values""")
-      def dump(t: String) = copyOut("SELECT \"osm_id\", \"name\", " +
-        "\"tags\", \"population\", \"ok\" FROM \"public\".\"" + t +
-        "\" ORDER BY \"osm_id\"")
-      assert(dump("graft_wirecopy") == dump("graft_insert"),
-        "COPY-wire and INSERT loads diverged")
+      Seq("graft_wirecopy", "graft_psqlcopy", "graft_insert")
+        .foreach(t => recreate(c, tableDef.copy(name = t)))
+      val n = PgWire.copyPartitioned(lines, PgTestCluster.dsn,
+        q("graft_wirecopy"))
+      assert(n == rows.size, s"the wire COPY acknowledged $n rows")
+      PgLive.copyInto(PgTestCluster.dsn, q("graft_psqlcopy"),
+        lines.toLocalIterator().asScala)
+      c.exec(insertInto("graft_insert",
+        Seq("osm_id", "name", "tags", "population", "ok"),
+        rows.map { case (id, name, tags, pop, ok) =>
+          Seq(id.toString, sqlOpt(name)(sqlLit), hstoreLit(tags),
+            sqlOpt(pop)(_.toString), sqlOpt(ok)(_.toString))
+        }))
+      val want = dump("graft_insert")
+      assert(dump("graft_wirecopy") == want, "wire COPY and INSERT diverged")
+      assert(dump("graft_psqlcopy") == want, "psql COPY and INSERT diverged")
     } finally c.close()
   }
 
-  test("PgSink.writeCopyBinary: COPY BINARY load reads back identical to TEXT") {
+  test("COPY TEXT reads back int2/real/double/jsonb/timestamptz exactly") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, map_from_entries}
-    import graft.sinks.PgWire
-    // a wider type matrix than the TEXT test: every binary encoder
-    // (int2/int8/float4/float8/bool/text/hstore/jsonb/timestamptz)
-    val binDef = FlexTableDef(
-      name = "graft_bin",
+    // a wider type matrix than the escape-class rows
+    val typesDef = FlexTableDef(
+      name = "graft_types",
       ids = FlexIds.Way,
       columns = Seq(
         FlexColumn("name", FlexType.Text),
@@ -284,7 +266,7 @@ class PgLiveSpec extends SparkSpecBase {
         FlexColumn("seen", FlexType.Timestamp)),
       cluster = false)
     val ts = (ms: Long) => new java.sql.Timestamp(ms)
-    val binRows = Seq(
+    val typedRows = Seq(
       (1L, Some("plain"), Seq("k" -> "v"), Some(42L), Some(3.toShort),
         Some(2.5f), Some(1.25e10), Some(true), Some("""{"a":1}"""),
         Some(ts(0L))),
@@ -297,40 +279,36 @@ class PgLiveSpec extends SparkSpecBase {
       (4L, Some("ünïcode ✓"), Seq("name:uk" -> "Київ"), Some(0L),
         Some(0.toShort), Some(0f), Some(0.0), Some(true),
         Some("[1,2,3]"), Some(ts(-1234567L))))
-    val df = binRows.toDF("osm_id", "name", "tags", "population",
-        "lanes", "width", "area", "ok", "props", "seen")
+    val cols = Seq("osm_id", "name", "tags", "population", "lanes",
+      "width", "area", "ok", "props", "seen")
+    val df = typedRows.toDF(cols: _*)
       .withColumn("tags", map_from_entries(col("tags")))
       .repartition(2)
     val c = PgWire.connect(PgTestCluster.dsn)
     try {
       c.exec("CREATE EXTENSION IF NOT EXISTS hstore;")
-      for (t <- Seq("graft_bin_text", "graft_bin_bin")) {
-        c.exec(s"""DROP TABLE IF EXISTS "public"."$t";""")
-        c.exec(PgSink.createTableDdl(binDef.copy(name = t),
-          unlogged = true))
-      }
-      val nT = PgSink.writeCopy(df, binDef.copy(name = "graft_bin_text"),
-        PgTestCluster.dsn)
-      val nB = PgSink.writeCopyBinary(df,
-        binDef.copy(name = "graft_bin_bin"), PgTestCluster.dsn)
-      assert(nT == binRows.size && nB == binRows.size,
-        s"acknowledged $nT text / $nB binary rows")
-      def dump(t: String) = copyOut(
-        "SELECT * FROM \"public\".\"" + t + "\" ORDER BY \"osm_id\"")
-      val (dt, db) = (dump("graft_bin_text"), dump("graft_bin_bin"))
-      assert(dt == db, s"TEXT and BINARY loads diverged:\n$dt\nvs\n$db")
-      // sql_type overrides are refused loudly (wire type unknowable)
-      val over = binDef.copy(columns = binDef.columns :+
-        FlexColumn("ser", FlexType.Text, sqlTypeOverride = Some("serial")))
-      val ex = intercept[IllegalArgumentException](
-        PgSink.binaryCopyRows(
-          df.withColumn("ser", col("name")), over))
-      assert(ex.getMessage.contains("sql_type"))
+      Seq("graft_types", "graft_types_insert")
+        .foreach(t => recreate(c, typesDef.copy(name = t)))
+      val n = PgWire.copyPartitioned(PgSink.copyLines(df, typesDef),
+        PgTestCluster.dsn, q("graft_types"))
+      assert(n == typedRows.size, s"the wire COPY acknowledged $n rows")
+      // timestamps as exact instants: epoch + milliseconds
+      c.exec(insertInto("graft_types_insert", cols, typedRows.map {
+        case (id, name, tags, pop, lanes, width, area, ok, props, seen) =>
+          Seq(id.toString, sqlOpt(name)(sqlLit), hstoreLit(tags),
+            sqlOpt(pop)(_.toString), sqlOpt(lanes)(v => s"$v::int2"),
+            sqlOpt(width)(v => s"'$v'::real"),
+            sqlOpt(area)(v => s"'$v'::float8"), sqlOpt(ok)(_.toString),
+            sqlOpt(props)(v => sqlLit(v) + "::jsonb"),
+            sqlOpt(seen)(v => "'epoch'::timestamptz + " +
+              s"${v.getTime} * interval '1 millisecond'"))
+      }))
+      val (got, want) = (dump("graft_types"), dump("graft_types_insert"))
+      assert(got == want, s"COPY TEXT and INSERT diverged:\n$got\nvs\n$want")
     } finally c.close()
   }
 
   test("PgWire: SCRAM-SHA-256 and md5 authentication against the live server") {
-    import graft.sinks.PgWire
     // password-protected roles, each pinned to its auth method by a
     // first-match pg_hba rule (trust stays in place for everyone else)
     psql("DROP ROLE IF EXISTS graft_scram;")
@@ -363,20 +341,156 @@ class PgLiveSpec extends SparkSpecBase {
   }
 
   test("append mode: delete-before-insert replaces changed ids only") {
-    // the JDBC deleteSql text with its ANY(?) placeholder bound to a
-    // pg array literal — semantics identical to the prepared path
-    val del = PgSink.deleteSql(tableDef).replace("?", "'{2,5}'")
-    val (rcDel, outDel) = psql(del + ";")
-    assert(rcDel == 0, s"delete failed: $outDel")
-    val replacement = PgSink.copyLine(Seq(PgSink.CopyValue("2"),
-      PgSink.CopyValue("renamed"),
-      PgSink.CopyPreEscaped(PgSink.hstoreCopyValue(Seq("v" -> "2"))),
-      PgSink.CopyValue("1"), PgSink.CopyValue("t")))
-    assert(copyIn("\"public\".\"graft_live\"", Seq(replacement)) == 0)
-    assert(copyOut("SELECT \"osm_id\" FROM \"public\".\"graft_live\" " +
+    import spark.implicits._
+    psql("CREATE EXTENSION IF NOT EXISTS hstore;")
+    // a classic table: one style column plus the tags hstore
+    val t = PgClassic.ClassicTable("graft_append_line", "line",
+      Seq("name" -> "text"), hstore = true, geomType = "linestring")
+    def engineRows(rows: (Long, String)*) = rows.map { case (id, name) =>
+      (id, Map("name" -> name, "v" -> id.toString), Array[Byte](1, id.toByte))
+    }.toDF("osm_id", "tags", "geom")
+    val dsn = PgTestCluster.dsn
+    ClassicPgLoad.createLoad(t, engineRows(1L -> "a", 2L -> "b",
+      3L -> "c", 4L -> "d", 5L -> "e"), dsn, "public", hstoreAll = false,
+      slim = true, postgis = false)
+    // ids 2 and 5 are pending: 2 is re-derived, 5 is gone
+    ClassicPgLoad.appendLoad(t, Seq(2L, 5L).toDF("id"),
+      engineRows(2L -> "renamed"), dsn, "public", hstoreAll = false,
+      postgis = false)
+    assert(copyOut(s"SELECT \"osm_id\" FROM ${q(t.name)} " +
       "ORDER BY \"osm_id\"") == Seq("1", "2", "3", "4"))
-    assert(copyOut("SELECT \"name\" FROM \"public\".\"graft_live\" " +
-      "WHERE \"osm_id\" = 2").map(PgSink.copyRowParse(_).head) ==
-      Seq(Some("renamed")))
+    assert(copyOut(s"SELECT \"name\", \"tags\" -> 'v', " +
+      s"encode(\"way\", 'hex') FROM ${q(t.name)} WHERE \"osm_id\" = 2")
+      .map(PgSink.copyRowParse) ==
+      Seq(Seq(Some("renamed"), Some("2"), Some("0102"))))
+  }
+
+  /** A small inline world: two highways, a building, no amenity. */
+  private def tinyOsm(dir: java.nio.file.Path): String = {
+    val in = dir.resolve("tiny.osm")
+    Files.write(in,
+      """<?xml version='1.0' encoding='UTF-8'?>
+        |<osm version="0.6">
+        |<node id="1" lat="47.0" lon="9.5" version="1"/>
+        |<node id="2" lat="47.001" lon="9.501" version="1"/>
+        |<node id="3" lat="47.002" lon="9.5" version="1"/>
+        |<node id="4" lat="47.0" lon="9.502" version="1">
+        |  <tag k="name" v="lonely"/></node>
+        |<way id="10" version="1"><nd ref="1"/><nd ref="2"/>
+        |  <tag k="highway" v="residential"/><tag k="name" v="Main"/></way>
+        |<way id="11" version="1"><nd ref="2"/><nd ref="3"/>
+        |  <tag k="highway" v="footway"/></way>
+        |<way id="12" version="1"><nd ref="1"/><nd ref="3"/><nd ref="2"/>
+        |  <nd ref="1"/><tag k="building" v="yes"/></way>
+        |</osm>""".stripMargin.getBytes("UTF-8"))
+    in.toString
+  }
+
+  private def flexRun(in: String, config: String, out: String,
+      extra: String*): Unit =
+    Main.run(spark, Options.parse(Seq(in, "-O", "flex",
+      "-S", s"graft.flex.examples.$config", "--output-dir", out) ++ extra))
+
+  private def liveCount(qualified: String): Long =
+    PgLive.queryOne(PgTestCluster.dsn,
+      s"SELECT count(*) FROM $qualified;").toLong
+
+  private val flexTables = Seq(""""public"."flex_pois"""",
+    """"public"."flex_highways"""", """"public"."flex_expire"""",
+    """"myschema"."withschema_data"""")
+
+  private def dropFlexTables(): Unit =
+    PgLive.execOrThrow(PgTestCluster.dsn,
+      flexTables.map(t => s"DROP TABLE IF EXISTS $t;").mkString)
+
+  test("-O flex -d: every declared table holds its parquet rows, " +
+      "in the config's schema") {
+    val dsn = PgTestCluster.dsn
+    val dir = Files.createTempDirectory("graft-flex-live")
+    try {
+      val in = tinyOsm(dir)
+      def parquetCount(out: String, t: String) =
+        spark.read.parquet(s"$out/$t").count()
+      val ph = s"$dir/pois"
+      flexRun(in, "PoisAndHighways", ph, "-d", dsn)
+      Seq("flex_pois", "flex_highways").foreach { t =>
+        assert(liveCount(q(t)) == parquetCount(ph, t), t)
+      }
+      assert(liveCount(q("flex_highways")) == 2L)
+      // no amenity in the file: the declared table exists and is empty
+      assert(liveCount(q("flex_pois")) == 0L)
+      val ws = s"$dir/schema"
+      flexRun(in, "WithSchema", ws, "-d", dsn)
+      assert(liveCount(""""myschema"."withschema_data"""") ==
+        parquetCount(ws, "withschema_data"))
+      assert(liveCount(""""myschema"."withschema_data"""") == 3L)
+      assert(PgLive.queryOne(dsn,
+        "SELECT to_regclass('public.withschema_data') IS NULL;") == "t")
+    } finally {
+      dropFlexTables()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("-O flex -a against a live -d is refused before anything " +
+      "is written or sent") {
+    val dsn = PgTestCluster.dsn
+    val dir = Files.createTempDirectory("graft-flex-append")
+    try {
+      flexRun(tinyOsm(dir), "PoisAndHighways", s"$dir/import", "-d", dsn)
+      val diff = dir.resolve("diff.osc")
+      Files.write(diff,
+        """<?xml version='1.0' encoding='UTF-8'?>
+          |<osmChange version="0.6"><modify>
+          |<node id="1" lat="47.0" lon="9.5" version="2"/>
+          |<node id="2" lat="47.001" lon="9.501" version="2"/>
+          |<way id="10" version="2"><nd ref="1"/><nd ref="2"/>
+          |  <tag k="highway" v="primary"/></way>
+          |</modify></osmChange>""".stripMargin.getBytes("UTF-8"))
+      val before = flexTables.take(3).map(liveCount)
+      val e = intercept[IllegalArgumentException](
+        flexRun(diff.toString, "PoisAndHighways", s"$dir/append",
+          "-a", "--slim", "-d", dsn))
+      assert(e.getMessage.contains("-O flex -a cannot update a database"))
+      assert(!Files.exists(dir.resolve("append")))
+      assert(flexTables.take(3).map(liveCount) == before)
+      // the parquet-only flex append still runs
+      flexRun(diff.toString, "PoisAndHighways", s"$dir/append",
+        "-a", "--slim")
+      assert(spark.read.parquet(s"$dir/append/flex_highways").count() == 1L)
+    } finally {
+      dropFlexTables()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("classic --slim -d, then -a -d: the live tables hold the landed " +
+      "osm_ids") {
+    import spark.implicits._
+    val dsn = PgTestCluster.dsn
+    val dir = Files.createTempDirectory("graft-classic-live")
+    val kinds = Seq("point", "line", "polygon", "roads")
+    try {
+      val world = new AppendIvmSpec.GridWorld(5)
+      val base = world.write(dir, "base", "o5m")
+      val diff = world.writeDiff(dir, "diff1", "o5m")
+      val out = dir.resolve("out").toString
+      val common = Seq("--slim", "-p", "graft_live_ivm", "--output-dir", out,
+        "-d", dsn)
+      Main.run(spark, Options.parse(common :+ base.toString))
+      Main.run(spark, Options.parse(("-a" +: common) :+ diff.toString))
+      kinds.foreach { k =>
+        val t = s"graft_live_ivm_$k"
+        val live = copyOut(s"SELECT \"osm_id\" FROM ${q(t)} ORDER BY 1")
+        val landed = spark.read.parquet(s"$out/$t").select("osm_id")
+          .as[Long].collect().sorted.map(_.toString).toSeq
+        assert(live.nonEmpty, s"$t is empty")
+        assert(live == landed, s"$t: live osm_ids differ from the parquet")
+      }
+    } finally {
+      psql(kinds.map(k =>
+        s"DROP TABLE IF EXISTS ${q(s"graft_live_ivm_$k")};").mkString)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 }
