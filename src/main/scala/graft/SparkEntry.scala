@@ -15,42 +15,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every query family, each listed once. A `def`, so registries
+    * whose `oracles` is a `def` are still evaluated on every call. */
+  private def registries: Seq[graft.queries.Registry] = {
+    import graft.queries._
+    Seq(Relational, Pipeline, Pipeline2, Pipeline3, Pipeline4, Pipeline5,
+      Pipeline6, Pipeline7, Pipeline8, Pipeline9, Pipeline10, Pipeline11,
+      Pipeline12, Pipeline13, OsmAnalog, GenQueries)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Pipeline.queries ++
-      graft.queries.Pipeline2.queries ++
-      graft.queries.Pipeline3.queries ++
-      graft.queries.Pipeline4.queries ++
-      graft.queries.Pipeline5.queries ++
-      graft.queries.Pipeline6.queries ++
-      graft.queries.Pipeline7.queries ++
-      graft.queries.Pipeline8.queries ++
-      graft.queries.Pipeline9.queries ++
-      graft.queries.Pipeline10.queries ++
-      graft.queries.Pipeline11.queries ++
-      graft.queries.Pipeline12.queries ++
-      graft.queries.Pipeline13.queries ++
-      graft.queries.OsmAnalog.queries ++
-      graft.queries.GenQueries.queries
+    merged("query", registries.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.Pipeline.oracles ++
-      graft.queries.Pipeline2.oracles ++
-      graft.queries.Pipeline3.oracles ++
-      graft.queries.Pipeline4.oracles ++
-      graft.queries.Pipeline5.oracles ++
-      graft.queries.Pipeline6.oracles ++
-      graft.queries.Pipeline7.oracles ++
-      graft.queries.Pipeline8.oracles ++
-      graft.queries.Pipeline9.oracles ++
-      graft.queries.Pipeline10.oracles ++
-      graft.queries.Pipeline11.oracles ++
-      graft.queries.Pipeline12.oracles ++
-      graft.queries.Pipeline13.oracles ++
-      graft.queries.OsmAnalog.oracles ++
-      graft.queries.GenQueries.oracles
+    merged("oracle", registries.map(_.oracles))
+
+  /** The union of the registries' maps; a name defined by two
+    * registries fails here instead of one silently replacing the
+    * other. */
+  private def merged[V](what: String, maps: Seq[Map[String, V]])
+      : Map[String, V] = {
+    val twice = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (name, seen) if seen.size > 1 => name }
+    require(twice.isEmpty, s"$what defined in more than one registry: " +
+      twice.toSeq.sorted.mkString(", "))
+    maps.reduce(_ ++ _)
+  }
 }

@@ -65,8 +65,7 @@ object ClassicPipeline {
       .otherwise(v.isin("yes", "true", "1"))
 
   private def exportFilter(style: Style, osmType: String,
-      hstore: Boolean, keepCoastlines: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): Column = {
+      settings: Settings): Column = {
     val exact = style.exportKeys(osmType).toSet.toSeq
     map_filter(col("tags"), (k, v) => {
       // hstore mode (-k/-j): unmatched keys also keep the object and
@@ -75,15 +74,15 @@ object ClassicPipeline {
       // src/tagtransform-c.cpp:126-149); polygon flags still come
       // only from exact style matches
       val inExport =
-        if (hstore) lit(true)
-        else hstoreColumns.foldLeft(k.isInCollection(exact))(
+        if (settings.hstore) lit(true)
+        else settings.hstoreColumns.foldLeft(k.isInCollection(exact))(
           (c, h) => c || k.startsWith(h))
       // full wild_match delete semantics (src/wildcmp.cpp)
       val deleted = TagFunctions.deleteHit(k, style.deleteKeys)
       // natural=coastline is discarded unless -K/--keep-coastlines
       // (src/tagtransform-c.cpp:182-190; add_area_tag fires either way)
       val coastline =
-        if (keepCoastlines) lit(false)
+        if (settings.keepCoastlines) lit(false)
         else k === "natural" && v === "coastline"
       inExport && !deleted && !coastline
     })
@@ -96,14 +95,9 @@ object ClassicPipeline {
     * export list (options_t::hstore_match_only applied at
     * src/tagtransform-c.cpp:143-151). */
   private def withFilter(df: DataFrame, style: Style, osmType: String,
-      wantPolygon: Boolean, hstore: Boolean = false,
-      hstoreMatchOnly: Boolean = false,
-      extraAttributes: Boolean = false,
-      keepCoastlines: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): DataFrame = {
+      wantPolygon: Boolean, settings: Settings): DataFrame = {
     val listType = if (osmType == "relation") "way" else osmType
-    val out = exportFilter(style, listType, hstore, keepCoastlines,
-      hstoreColumns)
+    val out = exportFilter(style, listType, settings)
     // the keep decision counts only export-list hits — the area=yes
     // append below happens AFTER `filter` is settled, so an object
     // whose only tag is natural=coastline is dropped without -K
@@ -117,9 +111,10 @@ object ClassicPipeline {
         // --hstore-match-only: neither the hstore copy-all nor a -z
         // prefix hit counts toward keeping the object — only exact
         // export-list matches do (check_key's match_only guards)
-        if (hstoreMatchOnly && (hstore || hstoreColumns.nonEmpty))
-          size(exportFilter(style, listType, hstore = false,
-            keepCoastlines)) > 0
+        if (settings.hstoreMatchOnly &&
+            (settings.hstore || settings.hstoreColumns.nonEmpty))
+          size(exportFilter(style, listType,
+            settings.copy(hstore = false, hstoreColumns = Nil))) > 0
         else size(col("__exptags")) > 0)
       .withColumn("__keep", col("__matched"))
       // ways only (the polygon out-param is null for nodes and the
@@ -138,7 +133,7 @@ object ClassicPipeline {
     // clears it (src/tagtransform-c.cpp:191-198), so an object whose
     // only real tags are delete-listed still drops under -x
     val base =
-      if (!extraAttributes) base0
+      if (!settings.extraAttributes) base0
       else base0.withColumn("__outtags",
         TagFunctions.withAttributePseudoTags(col("__outtags"),
           col("version"), col("timestamp"), col("changeset"),
@@ -179,6 +174,20 @@ object ClassicPipeline {
         * __boundary, __mkpoly, __roads and __z. */
       relationMember: Option[DataFrame => DataFrame] = None)
 
+  /** The classic derivation settings: the options the style filter,
+    * the tag transform and the geometry builders read. Import and
+    * append derive rows from one value, so they cannot disagree. */
+  final case class Settings(
+      srid: Int = Srid.WebMercator,
+      hstore: Boolean = false,
+      hstoreMatchOnly: Boolean = false,
+      extraAttributes: Boolean = false,
+      tagTransform: TagTransform = TagTransform(),
+      keepCoastlines: Boolean = false,
+      multiGeometry: Boolean = false,
+      reprojectArea: Boolean = false,
+      hstoreColumns: Seq[String] = Nil)
+
   /** Restriction sets for incremental runs: when given, only these ids
     * are *derived*. Resolution still sees every node, and every member
     * way of a derived relation, even one that is not re-derived. */
@@ -192,16 +201,14 @@ object ClassicPipeline {
         "left_semi")
     }.getOrElse(df)
 
-  def run(osm: OsmDataFrames, style: Style, srid: Int = Srid.WebMercator,
-      subset: Subset = Subset(), hstore: Boolean = false,
-      hstoreMatchOnly: Boolean = false,
-      extraAttributes: Boolean = false,
-      tagTransform: TagTransform = TagTransform(),
-      keepCoastlines: Boolean = false,
-      multiGeometry: Boolean = false,
-      reprojectArea: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): Tables4 = {
-    val spark = osm.nodes.sparkSession
+  def run(osm: OsmDataFrames, style: Style, settings: Settings = Settings(),
+      subset: Subset = Subset()): Tables4 = {
+    // plain values: the geometry UDFs must not capture `settings`,
+    // which holds the tag transform's closures
+    val srid = settings.srid
+    val multiGeometry = settings.multiGeometry
+    val reprojectArea = settings.reprojectArea
+    val tagTransform = settings.tagTransform
     val splitAt = if (srid == Srid.WGS84) 1.0 else 100 * 1000.0
 
     def project(g: Geometry): Geometry = GeomOps.transform(g, srid)
@@ -269,11 +276,7 @@ object ClassicPipeline {
     val filteredNodes = tagTransform.node
       .map(f => f(restrict(osm.nodes, subset.nodeIds)))
       .getOrElse(withFilter(restrict(osm.nodes, subset.nodeIds), style,
-        "node", wantPolygon = false, hstore = hstore,
-        hstoreMatchOnly = hstoreMatchOnly,
-        extraAttributes = extraAttributes,
-        keepCoastlines = keepCoastlines,
-        hstoreColumns = hstoreColumns))
+        "node", wantPolygon = false, settings))
     val points = filteredNodes
       .where(col("__keep") && size(col("__outtags")) > 0)
       .select(col("id").as("osm_id"), col("__outtags").as("tags"),
@@ -283,11 +286,7 @@ object ClassicPipeline {
     val filteredWays = tagTransform.way
       .map(f => f(restrict(osm.ways, subset.wayIds)))
       .getOrElse(withFilter(restrict(osm.ways, subset.wayIds), style,
-        "way", wantPolygon = true, hstore = hstore,
-        hstoreMatchOnly = hstoreMatchOnly,
-        extraAttributes = extraAttributes,
-        keepCoastlines = keepCoastlines,
-        hstoreColumns = hstoreColumns))
+        "way", wantPolygon = true, settings))
     val keptWays0 = filteredWays
       .where(col("__keep") && size(col("__outtags")) > 0)
       .where(size(col("nodes")) > 0) // ANSI element_at guard; no-ref ways
@@ -356,11 +355,7 @@ object ClassicPipeline {
     val filteredRels = tagTransform.relation
       .map(f => f(typed))
       .getOrElse(withFilter(typed, style, "relation",
-        wantPolygon = false, hstore = hstore,
-        hstoreMatchOnly = hstoreMatchOnly,
-        extraAttributes = extraAttributes,
-        keepCoastlines = keepCoastlines,
-        hstoreColumns = hstoreColumns)
+        wantPolygon = false, settings)
         .withColumn("__outtags",
           map_filter(col("__outtags"), (k, _) => k =!= "type")))
     val keptRels = filteredRels

@@ -68,40 +68,26 @@ object ClassicUpdate {
     */
   def incrementalUpdate(before: OsmDataFrames, changes: OsmDataFrames,
       prev: ClassicPipeline.Tables4, style: Style,
-      srid: Int = graft.geom.Srid.WebMercator,
-      hstore: Boolean = false, hstoreMatchOnly: Boolean = false,
-      extraAttributes: Boolean = false,
-      keepCoastlines: Boolean = false, multiGeometry: Boolean = false,
-      reprojectArea: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): ClassicPipeline.Tables4 =
-    applyDelta(prev, computeDelta(before, changes, style, srid,
-      hstore, hstoreMatchOnly, extraAttributes,
-      keepCoastlines, multiGeometry, reprojectArea, hstoreColumns))
+      settings: ClassicPipeline.Settings = ClassicPipeline.Settings())
+      : ClassicPipeline.Tables4 =
+    applyDelta(prev, computeDelta(before, changes, style, settings))
 
   /** Steps 1-3 of [[incrementalUpdate]]: the id closures plus the
     * re-derived rows, without merging into previous tables. */
   def computeDelta(before: OsmDataFrames, changes: OsmDataFrames,
-      style: Style, srid: Int = graft.geom.Srid.WebMercator,
-      hstore: Boolean = false, hstoreMatchOnly: Boolean = false,
-      extraAttributes: Boolean = false,
-      keepCoastlines: Boolean = false, multiGeometry: Boolean = false,
-      reprojectArea: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): Delta =
-    deltaOn(applyChanges(before, changes), changes, style, srid,
-      hstore, hstoreMatchOnly, extraAttributes,
-      keepCoastlines, multiGeometry, reprojectArea, hstoreColumns)
+      style: Style,
+      settings: ClassicPipeline.Settings = ClassicPipeline.Settings())
+      : Delta =
+    deltaOn(applyChanges(before, changes), changes, style, settings)
 
   /** [[computeDelta]] against the already-merged entity state `after`
     * (e.g. the updated middle, re-read from where it was written). The
     * id closures and the re-derived rows are each materialized once,
     * so the delta's consumers read stored rows. */
   def deltaOn(after: OsmDataFrames, changes: OsmDataFrames,
-      style: Style, srid: Int = graft.geom.Srid.WebMercator,
-      hstore: Boolean = false, hstoreMatchOnly: Boolean = false,
-      extraAttributes: Boolean = false,
-      keepCoastlines: Boolean = false, multiGeometry: Boolean = false,
-      reprojectArea: Boolean = false,
-      hstoreColumns: Seq[String] = Nil): Delta = {
+      style: Style,
+      settings: ClassicPipeline.Settings = ClassicPipeline.Settings())
+      : Delta = {
     val changedNodes = changes.nodes.select(col("id")).distinct()
     val changedWays = changes.ways.select(col("id")).distinct()
     val changedRels = changes.relations.select(col("id")).distinct()
@@ -128,13 +114,8 @@ object ClassicUpdate {
       ids.where(col("kind") === kind).select(col("id"))
     val (nodeIds, wayIds, relIds) = (idsOf("n"), idsOf("w"), idsOf("r"))
 
-    val rederived = ClassicPipeline.run(after, style, srid,
-      hstore = hstore, hstoreMatchOnly = hstoreMatchOnly,
-      extraAttributes = extraAttributes,
-      keepCoastlines = keepCoastlines, multiGeometry = multiGeometry,
-      reprojectArea = reprojectArea, hstoreColumns = hstoreColumns,
-      subset = ClassicPipeline.Subset(Some(nodeIds), Some(wayIds),
-        Some(relIds)))
+    val rederived = ClassicPipeline.run(after, style, settings,
+      ClassicPipeline.Subset(Some(nodeIds), Some(wayIds), Some(relIds)))
     Delta(nodeIds, wayIds, relIds, rederived,
       backing = idsRdd +: rederived.backing)
   }

@@ -137,6 +137,18 @@ object Main {
           java.nio.file.Paths.get(f)), "UTF-8"))
       case None => StyleFile.defaultStyle
     }
+    // the one derivation-settings value: the import and the append
+    // re-derive rows through the same transform and options
+    val settings = ClassicPipeline.Settings(srid = o.srid,
+      hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
+      extraAttributes = o.extraAttributes,
+      tagTransform = o.tagTransformScript
+        .map(graft.classic.LuaTagTransform.fromFile(_, o.extraAttributes))
+        .getOrElse(ClassicPipeline.TagTransform()),
+      keepCoastlines = o.keepCoastlines,
+      multiGeometry = o.multiGeometry,
+      reprojectArea = o.reprojectArea,
+      hstoreColumns = o.hstoreColumns)
     val out = java.nio.file.Paths.get(o.outputDir)
     java.nio.file.Files.createDirectories(out)
 
@@ -150,17 +162,7 @@ object Main {
     val needHstore = o.hstore || o.hstoreColumns.nonEmpty
 
     if (!o.append) {
-      val t = ClassicPipeline.run(osm, style, srid = o.srid,
-        hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
-        extraAttributes = o.extraAttributes,
-        tagTransform = o.tagTransformScript
-          .map(graft.classic.LuaTagTransform.fromFile(_,
-            o.extraAttributes))
-          .getOrElse(ClassicPipeline.TagTransform()),
-        keepCoastlines = o.keepCoastlines,
-        multiGeometry = o.multiGeometry,
-        reprojectArea = o.reprojectArea,
-        hstoreColumns = o.hstoreColumns)
+      val t = ClassicPipeline.run(osm, style, settings)
       // --slim: persist the middle so --append can pick up from here
       // (the flat-nodes/slim-tables analog: the raw entity frames)
       if (o.slim && !o.drop) {
@@ -200,8 +202,8 @@ object Main {
       tablesOf(o, t).foreach { case (name, df) =>
         df.write.mode("overwrite").parquet(s"$out/$name")
       }
-    } else appendClassic(spark, o, osm, style, stored, liveLoad = delta =>
-      liveDsn.foreach { dsn =>
+    } else appendClassic(spark, o, osm, style, settings, stored,
+      liveLoad = delta => liveDsn.foreach { dsn =>
         val postgis =
           graft.sinks.ClassicPgLoad.prepareServer(dsn, needHstore)
         graft.sinks.ClassicPgLoad.append(pgTables, delta, dsn,
@@ -254,13 +256,14 @@ object Main {
     // per-geometry cap inside the cover, the overall cap on the
     // streamed write — the tile list is never collected whole.
     if (o.expireZoomMax > 0) {
-      val dest = o.expireOutput.getOrElse(s"$out/dirty_tiles.txt")
-      val w = java.nio.file.Files.newBufferedWriter(
-        java.nio.file.Paths.get(dest))
+      val dest = java.nio.file.Paths.get(
+        o.expireOutput.getOrElse(s"$out/dirty_tiles.txt"))
       // tile expiry only applies in web-mercator output — the
       // reference's expire_tiles::from_geometry_if_3857 is a no-op for
       // any other projection, leaving the expire file empty
-      try if (o.srid == graft.geom.Srid.WebMercator) {
+      if (o.srid != graft.geom.Srid.WebMercator)
+        java.nio.file.Files.writeString(dest, "")
+      else {
         val limits = graft.operators.TileCover.Limits()
         // hybrid mode is the classic default: polygons larger than
         // --expire-bbox-size expire boundary-only
@@ -275,16 +278,12 @@ object Main {
           maxTilesPerGeometry = limits.maxTilesPerGeometry)
         val tiles = graft.operators.Expire.rollup(cover, "x", "y",
           o.expireZoomMax, o.expireZoomMin)
-        val it = graft.operators.Expire.formatTiles(tiles)
-          .orderBy("tile").toLocalIterator()
-        var n = 0L
-        while (it.hasNext && n < limits.maxTilesOverall) {
-          w.write(it.next().getString(0)); w.write("\n"); n += 1
-        }
-        if (it.hasNext)
-          System.err.println("[graft] Overall tile limit reached — " +
-            "dirty-tile list truncated at " + limits.maxTilesOverall)
-      } finally w.close()
+        graft.operators.Expire.writeLines(
+          graft.operators.Expire.formatTiles(tiles).orderBy("tile"), dest,
+          limits.maxTilesOverall, append = false,
+          "Overall tile limit reached — dirty-tile list truncated at " +
+            limits.maxTilesOverall)
+      }
     }
 
     // the JDBC form of the DSN for downstream loaders
@@ -317,7 +316,7 @@ object Main {
     * actions ran. */
   private def appendClassic(spark: SparkSession, o: Options,
       osm: OsmDataFrames, style: graft.classic.Style,
-      stored: Option[Map[String, String]],
+      settings: ClassicPipeline.Settings, stored: Option[Map[String, String]],
       liveLoad: ClassicUpdate.Delta => Unit): Unit = {
     val out = o.outputDir
     val middle = s"$out/${o.middleDir}"
@@ -338,13 +337,7 @@ object Main {
         spark.read.schema(df.schema).parquet(path)
     }
     val delta = ClassicUpdate.deltaOn(OsmDataFrames(nodes, ways, relations),
-      osm, style, srid = o.srid,
-      hstore = o.hstore, hstoreMatchOnly = o.hstoreMatchOnly,
-      extraAttributes = o.extraAttributes,
-      keepCoastlines = o.keepCoastlines,
-      multiGeometry = o.multiGeometry,
-      reprojectArea = o.reprojectArea,
-      hstoreColumns = o.hstoreColumns)
+      osm, style, settings)
     val named = tablesOf(o, ClassicUpdate.applyDelta(prev, delta))
     try {
       // the live delete-before-insert runs BEFORE the staged swap
@@ -441,21 +434,12 @@ object Main {
       res.expire.foreach { case (ename, tiles) =>
         val eo = outputs(ename)
         eo.filename.foreach { f =>
-          val dest = out.resolve(f) // relative names land in --output-dir
-          val w = java.nio.file.Files.newBufferedWriter(dest,
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-          try {
-            val it = graft.operators.Expire.formatTiles(tiles)
-              .orderBy("tile").toLocalIterator()
-            var n = 0L
-            while (it.hasNext && n < eo.maxTilesOverall) {
-              w.write(it.next().getString(0)); w.write("\n"); n += 1
-            }
-            if (it.hasNext) System.err.println(
-              s"[graft] Overall tile limit ${eo.maxTilesOverall} " +
-                s"reached for expire output '$ename'!")
-          } finally w.close()
+          // relative names land in --output-dir
+          graft.operators.Expire.writeLines(
+            graft.operators.Expire.formatTiles(tiles).orderBy("tile"),
+            out.resolve(f), eo.maxTilesOverall, append = true,
+            s"Overall tile limit ${eo.maxTilesOverall} " +
+              s"reached for expire output '$ename'!")
         }
         eo.table.foreach { tbl =>
           liveDsn match {

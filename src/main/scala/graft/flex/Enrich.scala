@@ -30,9 +30,7 @@ object Enrich {
     * The node-location probe still joins against the FULL nodes frame
     * (a changed way's unchanged nodes need their stored locations —
     * the reference's flat-nodes random reads, src/middle-pgsql.cpp:
-    * 693-727); as a semi-join-restricted probe it is prunable by id
-    * bucketing on a cluster (MiddleStore proves the zero-Exchange
-    * form). Everything else is proportional to the change closure,
+    * 693-727). Everything else is proportional to the change closure,
     * not the planet — the reference's append does per-object lookups
     * for exactly this touched set (src/osmdata.cpp:75-147).
     *

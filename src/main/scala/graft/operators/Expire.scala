@@ -57,6 +57,31 @@ object Expire {
   def formatTiles(tiles: DataFrame): DataFrame =
     tiles.select(concat_ws("/", col("zoom"), col("x"), col("y")).as("tile"))
 
+  /** Streams the ordered one-column `lines` to `path`, each ending in a
+    * newline, stopping at `maxOverall` lines (the reference's overall
+    * cap, src/expire-output.hpp:24-25). Rows arrive one partition at a
+    * time, so the list is never collected whole. `append` keeps the
+    * file's contents (the flex output's fopen("a")); otherwise the file
+    * is replaced. Prints `truncated` when rows were left over. Returns
+    * the number of lines written. */
+  def writeLines(lines: DataFrame, path: java.nio.file.Path,
+      maxOverall: Long, append: Boolean, truncated: String): Long = {
+    import java.nio.file.StandardOpenOption._
+    val w = java.nio.file.Files.newBufferedWriter(path,
+      java.nio.charset.StandardCharsets.UTF_8,
+      (if (append) Seq(CREATE, APPEND)
+      else Seq(CREATE, TRUNCATE_EXISTING, WRITE)): _*)
+    var n = 0L
+    try {
+      val it = lines.toLocalIterator()
+      while (it.hasNext && n < maxOverall) {
+        w.write(it.next().getString(0)); w.write("\n"); n += 1
+      }
+      if (it.hasNext) System.err.println(s"[graft] $truncated")
+    } finally w.close()
+    n
+  }
+
   /** Web-mercator extent of a tile (tile_t::box, src/tile.hpp:55-75):
     * (minx, miny, maxx, maxy). */
   def tileBox3857(x: Long, y: Long, zoom: Int): (Double, Double, Double, Double) = {

@@ -193,27 +193,15 @@ object ExpireMain {
     if (!preExisting) spark.stop()
   }
 
-  /** Streams the formatted tile (or geojson-feature) lines to `out`,
-    * stopping at `maxOverall` lines; driver memory stays bounded by
-    * one partition regardless of tile-list size. Returns lines written. */
-  def writeStreamed(rolled: DataFrame, out: String, maxOverall: Long): Long = {
-    val formatted =
+  /** Writes the tile (or, for a `.geojson` name, geojson-feature)
+    * lines to `out` through [[Expire.writeLines]], stopping at
+    * `maxOverall` lines. Returns lines written. */
+  def writeStreamed(rolled: DataFrame, out: String, maxOverall: Long): Long =
+    Expire.writeLines(
       if (out.endsWith(".geojson"))
         Expire.geojsonFeatures(rolled).orderBy("feature")
-      else Expire.formatTiles(rolled).orderBy("tile")
-    val w = java.nio.file.Files.newBufferedWriter(
-      java.nio.file.Paths.get(out), java.nio.charset.StandardCharsets.UTF_8)
-    var n = 0L
-    try {
-      val it = formatted.toLocalIterator()
-      while (it.hasNext && n < maxOverall) {
-        if (n > 0) w.write("\n")
-        w.write(it.next().getString(0)); n += 1
-      }
-      if (it.hasNext)
-        System.err.println("[graft] Overall tile limit reached — " +
-          "dirty-tile list truncated at " + maxOverall)
-    } finally w.close()
-    n
-  }
+      else Expire.formatTiles(rolled).orderBy("tile"),
+      java.nio.file.Paths.get(out), maxOverall, append = false,
+      "Overall tile limit reached — dirty-tile list truncated at " +
+        maxOverall)
 }

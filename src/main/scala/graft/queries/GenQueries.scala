@@ -17,9 +17,7 @@ import graft.operators.{Gen, RasterGen}
   * as plain integer comparisons, so DuckDB can count the same pixels
   * by brute-force enumeration of the global pixel grid.
   */
-object GenQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object GenQueries extends Registry {
 
   // ---- q43: river width aggregation (gen-rivers.cpp:202-233) ----
   // lineitem plays the segment table: way = order, len = quantity,

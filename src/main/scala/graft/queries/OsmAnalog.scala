@@ -15,9 +15,7 @@ import graft.functions.{GeomColumnFunctions, TagFunctions, TileFunctions}
   * a DuckDB oracle. (Lineitem plays "way nodes", part plays "nodes",
   * orders play "ways", customers play "relations".)
   */
-object OsmAnalog {
-
-  type Q = (SparkSession, String) => DataFrame
+object OsmAnalog extends Registry {
 
   // deterministic synthetic coordinates (pure integer → double math)
   private val LonExpr = "(((event_id * 2654435761) % 360000000) - 180000000) / 1000000.0"

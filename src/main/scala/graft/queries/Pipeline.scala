@@ -14,9 +14,7 @@ import graft.functions.VectorFunctions._
   * same deterministic arithmetic (salted-md5 MinHash, integer votes,
   * quantized-long vector math).
   */
-object Pipeline {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline extends Registry {
 
   // ---- shared SQL fragments (DuckDB side of the mirror) ----
 

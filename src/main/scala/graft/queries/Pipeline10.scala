@@ -19,9 +19,7 @@ import graft.sources.Multimodal
   * contract as
   * [[Pipeline]]: exact integer arithmetic only, so the DuckDB oracle
   * matches bit for bit. */
-object Pipeline10 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline10 extends Registry {
 
   private def cachedStore(kind: String, d: String)(
       build: String => Unit): String = StoreOnce.dir(kind, d)(build)

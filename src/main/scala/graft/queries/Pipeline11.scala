@@ -13,9 +13,7 @@ import graft.sources.Multimodal
   * n-gram LM perplexity filter (q148). Same contract as
   * [[Pipeline]]: exact integer arithmetic only, so the DuckDB oracle
   * matches bit for bit. */
-object Pipeline11 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline11 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

@@ -14,9 +14,7 @@ import graft.sources.Multimodal
   * classifier (q154), and image-text pair curation — the LAION shape
   * (q155). Same contract as [[Pipeline]]: exact integer arithmetic
   * only, so the DuckDB oracle matches bit for bit. */
-object Pipeline12 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline12 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

@@ -17,9 +17,7 @@ import graft.sources.Multimodal
   * re-crawl through the persisted wide index (q165). Same contract
   * as [[Pipeline]]: exact integer arithmetic only, so the DuckDB
   * oracle matches bit for bit. */
-object Pipeline13 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline13 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

@@ -13,9 +13,7 @@ import graft.functions.VectorFunctions
   * contract as [[Pipeline]]: every query has a DuckDB oracle computing
   * the identical deterministic (integer or single-division) arithmetic.
   */
-object Pipeline2 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline2 extends Registry {
 
   /** tokens of lower(text) — DuckDB side of TextFunctions.normToks */
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"

@@ -13,9 +13,7 @@ import graft.queries.Exact._
   * query has a DuckDB oracle computing identical deterministic
   * arithmetic.
   */
-object Pipeline3 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline3 extends Registry {
 
   /** tokens of lower(text) — DuckDB side of TextFunctions.normToks */
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"

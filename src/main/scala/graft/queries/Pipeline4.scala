@@ -12,9 +12,7 @@ import graft.operators.CorpusOps
   * contract as [[Pipeline]]: every query has a DuckDB oracle with
   * identical deterministic arithmetic.
   */
-object Pipeline4 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline4 extends Registry {
 
   /** tokens of lower(text) — DuckDB side of the Spark split */
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"

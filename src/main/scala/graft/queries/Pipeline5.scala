@@ -12,9 +12,7 @@ import graft.operators.{CorpusOps, Dedup, Sessions}
   * query has a DuckDB oracle with identical deterministic
   * arithmetic (integer weeks, windowed tie-breaks, gram-text
   * ordering). */
-object Pipeline5 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline5 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

@@ -13,9 +13,7 @@ import graft.operators.{CorpusOps, Dedup}
   * DuckDB oracle computing the identical deterministic arithmetic
   * (both engines' `levenshtein` is the classic DP; all other columns
   * are exact integers). */
-object Pipeline6 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline6 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

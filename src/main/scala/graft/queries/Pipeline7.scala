@@ -14,9 +14,7 @@ import graft.operators.{Dedup, Sampling, Similarity, TextAnalysis}
   * selection, and the mutual k-NN graph. Same contract as [[Pipeline]]:
   * every query's arithmetic is exact (integers or single divisions of
   * identical integers), so the DuckDB oracle matches bit for bit. */
-object Pipeline7 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline7 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

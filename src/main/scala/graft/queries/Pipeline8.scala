@@ -11,9 +11,7 @@ import graft.operators.Dedup
   * semantics), deliberately NOT conditioned on LSH candidate pairs.
   * Same contract as [[Pipeline]]: exact integer/string arithmetic
   * only, so the DuckDB oracle matches bit for bit. */
-object Pipeline8 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline8 extends Registry {
 
   private val W = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
 

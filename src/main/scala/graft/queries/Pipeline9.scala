@@ -12,9 +12,7 @@ import graft.sources.{Codecs, Multimodal}
   * pruning + ADC scoring, the FAISS IVFADC shape). Same contract as
   * [[Pipeline]]: exact integer arithmetic only, so the DuckDB oracle
   * matches bit for bit. */
-object Pipeline9 {
-
-  type Q = (SparkSession, String) => DataFrame
+object Pipeline9 extends Registry {
 
   // ---- q123: encode → REAL decode parity over synthetic media ----
 

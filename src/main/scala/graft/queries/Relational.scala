@@ -15,9 +15,7 @@ import Exact._
   * functions. Each entry has a DuckDB oracle; aggregated doubles go
   * through the [[Exact]] decimal pattern so hashes match cross-engine.
   */
-object Relational {
-
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends Registry {
 
   /** TPC-H Q1-style pricing summary. Filter is pushed to the parquet
     * scan; aggregation is a two-phase hash agg (partial + final). */

@@ -263,13 +263,10 @@ object O5m {
       try in.readAllBytes() finally in.close()
     } else raw
 
-  /** Read .o5m/.o5c files distributed, one split per file. */
-  def read(spark: SparkSession, paths: Seq[String]): OsmXml.OsmDataFrames =
-    readMaybeGz(spark, paths)
-
-  /** Same, transparently decompressing .gz/.bz2 payloads per task
+  /** Read .o5m/.o5c files distributed, one split per file,
+    * transparently decompressing .gz/.bz2 payloads per task
     * (binaryFiles does not run Hadoop codecs). */
-  def readMaybeGz(spark: SparkSession, paths: Seq[String]): OsmXml.OsmDataFrames = {
+  def read(spark: SparkSession, paths: Seq[String]): OsmXml.OsmDataFrames = {
     import spark.implicits._
     val parsed = spark.sparkContext
       .binaryFiles(paths.mkString(","))

@@ -113,7 +113,7 @@ object OsmSource {
       else Map(format -> paths)
     val parts = byFormat.toSeq.sortBy(_._1).map {
       case ("xml", ps) => OsmXml.read(spark, ps)
-      case ("o5m", ps) => O5m.readMaybeGz(spark, ps)
+      case ("o5m", ps) => O5m.read(spark, ps)
       case ("opl", ps) => Opl.read(spark, ps)
       case ("pbf", ps) =>
         // pbf carries no change sections; normalize to action=create so

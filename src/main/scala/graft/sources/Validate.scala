@@ -49,7 +49,8 @@ object Validate {
     * reference's int16 member-index limit. Pure filter; pushes to the
     * scan where the members column is shredded. */
   def dropOversizeRelations(rels: DataFrame,
-      membersCol: String = "members", max: Int = 32767): DataFrame =
+      membersCol: String = "members",
+      max: Int = graft.model.OsmSchema.MaxRelationMembers): DataFrame =
     // null members pass: delete tombstones in the append flow carry
     // no payload (delete-callbacks.feature) and must reach the
     // process_deleted_relation dispatch
@@ -66,8 +67,4 @@ object Validate {
   def dropInvalidLocations(nodes: DataFrame): DataFrame =
     nodes.where(!isnan(col("lon")) && !isnan(col("lat")) &&
       col("lon").between(-180.0, 180.0) && col("lat").between(-90.0, 90.0))
-
-  /** Oversized-relation drop (src/osmdata.cpp:151-156). */
-  def dropOversizedRelations(rels: DataFrame): DataFrame =
-    rels.where(size(col("members")) <= graft.model.OsmSchema.MaxRelationMembers)
 }

@@ -54,9 +54,13 @@ class AppendIvmSpec extends SparkSpecBase {
       s"appended output, $missing only in the fresh import")
   }
 
-  private def ivm(seed: Long, format: String): Unit = {
+  /** `flags(dir)` are given to the import, both appends and the fresh
+    * import alike. */
+  private def ivm(seed: Long, format: String,
+      flags: Path => Seq[String] = _ => Nil): Unit = {
     val dir = Files.createTempDirectory(s"graft-ivm-$seed")
     try {
+      val opts = flags(dir)
       val world = new GridWorld(seed)
       val base = world.write(dir, "base", format)
       val diffs = (1 to 2).map(k => world.writeDiff(dir, s"diff$k", format))
@@ -64,10 +68,11 @@ class AppendIvmSpec extends SparkSpecBase {
       val out = dir.resolve("out").toString
       val fresh = dir.resolve("fresh").toString
 
-      runMain("--slim", "--output-dir", out, base.toString)
-      diffs.foreach(d =>
-        runMain("-a", "--slim", "-e", "16", "--output-dir", out, d.toString))
-      runMain("--slim", "--output-dir", fresh, after.toString)
+      runMain(opts ++ Seq("--slim", "--output-dir", out, base.toString): _*)
+      diffs.foreach(d => runMain(opts ++ Seq("-a", "--slim", "-e", "16",
+        "--output-dir", out, d.toString): _*))
+      runMain(opts ++ Seq("--slim", "--output-dir", fresh,
+        after.toString): _*)
 
       def read(root: String, name: String) =
         spark.read.parquet(s"$root/$name")
@@ -94,6 +99,13 @@ class AppendIvmSpec extends SparkSpecBase {
   }
   test("append of two diffs equals a fresh import (seed 3, opl)") {
     ivm(3, "opl")
+  }
+
+  test("an append re-derives through the import's Lua tag transform " +
+      "and derivation options (seed 4, o5m/o5c)") {
+    ivm(4, "o5m", dir => Seq("--tag-transform-script",
+      Files.writeString(dir.resolve("style.lua"), LuaStyle).toString,
+      "-G", "--reproject-area"))
   }
 
   test("a flex import releases the caches it made") {
@@ -306,6 +318,36 @@ object AppendIvmSpec {
         chW.values.toSeq, chR.values.toSeq)
     }
   }
+
+  /** A `--tag-transform-script` style that disagrees with the default
+    * C transform on every kind of object: nodes keep only `amenity`,
+    * renamed `kind`; ways become polygons only for `building`;
+    * relations gain member-derived tags. */
+  val LuaStyle: String = """
+    |function filter_tags_node(kv, n)
+    |  if kv['amenity'] == nil then return 1, kv end
+    |  return 0, { kind = kv['amenity'] }
+    |end
+    |function filter_tags_way(kv, n)
+    |  if n == 0 then return 1, kv, 0, 0 end
+    |  local polygon = (kv['building'] ~= nil) and 1 or 0
+    |  local roads = (kv['highway'] == 'primary') and 1 or 0
+    |  kv['z_order'] = roads == 1 and 7 or 0
+    |  return 0, kv, polygon, roads
+    |end
+    |function filter_basic_tags_rel(kv, n)
+    |  if kv['type'] == nil then return 1, kv end
+    |  return 0, kv
+    |end
+    |function filter_tags_relation_member(kv, memberkv, roles, n)
+    |  local polygon = 0
+    |  if kv['type'] == 'multipolygon' then polygon = 1 end
+    |  kv['type'] = nil
+    |  kv['nmembers'] = n
+    |  kv['role1'] = roles[1]
+    |  return 0, kv, {}, 0, polygon, 0
+    |end
+    |""".stripMargin
 
   val Side = 25
   val Block = 6

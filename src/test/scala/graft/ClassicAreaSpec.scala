@@ -35,7 +35,7 @@ class ClassicAreaSpec extends SparkSpecBase {
 
   test("latlon projection: way_area in degrees²") {
     val t = ClassicPipeline.run(areaOsm, StyleFile.defaultStyle,
-      srid = Srid.WGS84)
+      ClassicPipeline.Settings(srid = Srid.WGS84))
     assert(t.polygon.count() == 2)
     val a = areasByName(t.polygon)
     approx(a("poly"), 1.0)
@@ -44,7 +44,7 @@ class ClassicAreaSpec extends SparkSpecBase {
 
   test("latlon + --reproject-area: way_area back in 3857") {
     val t = ClassicPipeline.run(areaOsm, StyleFile.defaultStyle,
-      srid = Srid.WGS84, reprojectArea = true)
+      ClassicPipeline.Settings(srid = Srid.WGS84, reprojectArea = true))
     assert(t.polygon.count() == 2)
     val a = areasByName(t.polygon)
     approx(a("poly"), 1.23927e10)
@@ -64,7 +64,7 @@ class ClassicAreaSpec extends SparkSpecBase {
     // polygons live near lon/lat 0/0, far west of zone 32: easting
     // is large-negative of the 500 km false easting)
     val t = ClassicPipeline.run(areaOsm, StyleFile.defaultStyle,
-      srid = 32632)
+      ClassicPipeline.Settings(srid = 32632))
     assert(t.polygon.count() == 2)
     val g = t.polygon.where("tags['name'] = 'poly'")
       .select("geom").collect().head.getAs[Array[Byte]](0)
@@ -110,14 +110,14 @@ class ClassicAreaSpec extends SparkSpecBase {
     val osm = OsmXml.read(spark, Seq(f.toString))
 
     val split = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WGS84)
+      ClassicPipeline.Settings(srid = Srid.WGS84))
     assert(split.polygon.count() == 2) // default: one row per part
     val splitAreas = split.polygon.selectExpr("cast(way_area as double)")
       .collect().map(_.getDouble(0)).sorted
     assert(splitAreas sameElements Array(1.0, 4.0))
 
     val merged = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WGS84, multiGeometry = true)
+      ClassicPipeline.Settings(srid = Srid.WGS84, multiGeometry = true))
     assert(merged.polygon.count() == 1)
     val row = merged.polygon
       .selectExpr("geom", "cast(way_area as double)").collect().head
@@ -153,7 +153,7 @@ class ClassicAreaSpec extends SparkSpecBase {
     // set regardless of keep_coastlines, tagtransform-c.cpp:200-204);
     // the way is open so it lands in the line table
     val kept = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      keepCoastlines = true)
+      ClassicPipeline.Settings(keepCoastlines = true))
     assert(kept.line.count() == 1)
     val tags = kept.line.select("tags").collect().head
       .getMap[String, String](0)

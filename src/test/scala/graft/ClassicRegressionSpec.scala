@@ -56,7 +56,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
     import spark.implicits._
     val osm = OsmPbf.read(spark, path)
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = graft.geom.Srid.WGS84)
+      ClassicPipeline.Settings(srid = graft.geom.Srid.WGS84))
     // -l counts differ from 3857: the 1° split threshold merges
     // differently than the 100km one
     assert(t.point.count() == 1342L)
@@ -105,15 +105,16 @@ class ClassicRegressionSpec extends SparkSpecBase {
     val style = StyleFile.parse(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
         "/root/reference/tests/data/hstore-match-only.style")), "UTF-8"))
-    val t = ClassicPipeline.run(osm, style, hstore = true,
-      hstoreMatchOnly = true)
+    val t = ClassicPipeline.run(osm, style,
+      ClassicPipeline.Settings(hstore = true, hstoreMatchOnly = true))
     assert(t.point.count() == 6L)
     assert(t.polygon.count() == 7L)
     assert(t.line.count() == 12L)
     assert(t.roads.count() == 3L)
     // without match-only, hstore mode keeps everything tagged:
     // strictly more objects
-    val all = ClassicPipeline.run(osm, style, hstore = true)
+    val all = ClassicPipeline.run(osm, style,
+      ClassicPipeline.Settings(hstore = true))
     assert(all.point.count() > 6L)
   }
 

@@ -40,7 +40,8 @@ class ClassicUpdateSpec extends SparkSpecBase {
     val before = OsmPbf.read(spark, pbf)
     val changes = OsmXml.readChangeFile(spark, osc)
     val after = ClassicUpdate.applyChanges(before, changes)
-    val t = ClassicPipeline.run(after, style, hstore = true)
+    val t = ClassicPipeline.run(after, style,
+      ClassicPipeline.Settings(hstore = true))
     val counts = (t.point.count(), t.line.count(), t.roads.count(),
       t.polygon.count())
     info(s"hstore: $counts")

@@ -24,7 +24,8 @@ class ExtraAttributesSpec extends SparkSpecBase {
     val osm = OsmText.toFrames(spark, data)
     val style = StyleFile.defaultStyle
 
-    val plain = ClassicPipeline.run(osm, style, hstore = true)
+    val plain = ClassicPipeline.run(osm, style,
+      ClassicPipeline.Settings(hstore = true))
     val plainTags = plain.roads.select($"osm_id", $"tags")
       .as[(Long, Map[String, String])].collect()
     assert(plainTags.map(_._1).toSet == Set(20L))
@@ -32,8 +33,8 @@ class ExtraAttributesSpec extends SparkSpecBase {
     assert(pt("highway") == "primary")
     assert(!pt.contains("osm_version") && !pt.contains("osm_changeset"))
 
-    val withX = ClassicPipeline.run(osm, style, hstore = true,
-      extraAttributes = true)
+    val withX = ClassicPipeline.run(osm, style,
+      ClassicPipeline.Settings(hstore = true, extraAttributes = true))
     val xt = withX.roads.select($"tags")
       .as[Map[String, String]].head()
     assert(xt("highway") == "primary")

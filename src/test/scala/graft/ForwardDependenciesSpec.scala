@@ -36,7 +36,8 @@ class ForwardDependenciesSpec extends SparkSpecBase {
   test("node and way changes propagate to ways and relations") {
     val style = StyleFile.defaultStyle
     val before = OsmText.toFrames(spark, base)
-    val prev = ClassicPipeline.run(before, style, srid = Srid.WGS84)
+    val prev = ClassicPipeline.run(before, style,
+      ClassicPipeline.Settings(srid = Srid.WGS84))
 
     // initial state sanity: r30's ring (w22+w23) assembles → polygon
     assert(prev.polygon.select($"osm_id").as[Long].collect().toSet ==
@@ -50,7 +51,8 @@ class ForwardDependenciesSpec extends SparkSpecBase {
       })
     val changes = OsmText.toFrames(spark, diff, change = true)
     val after = ClassicUpdate.applyChanges(before, changes)
-    val full = ClassicPipeline.run(after, style, srid = Srid.WGS84)
+    val full = ClassicPipeline.run(after, style,
+      ClassicPipeline.Settings(srid = Srid.WGS84))
 
     // the feature's exact expected table contents:
     assert(full.point.select($"osm_id").as[Long].collect().toSet ==
@@ -69,7 +71,7 @@ class ForwardDependenciesSpec extends SparkSpecBase {
 
     // and the INCREMENTAL path agrees with the full recompute
     val inc = ClassicUpdate.incrementalUpdate(before, changes, prev, style,
-      srid = Srid.WGS84)
+      ClassicPipeline.Settings(srid = Srid.WGS84))
     assert(inc.point.select($"osm_id").as[Long].collect().toSet ==
       Set(12L))
     assert(inc.line.select($"osm_id").as[Long].collect().toSet ==

@@ -101,7 +101,7 @@ class OperatorsSpec extends SparkSpecBase {
     val big = OsmRelation(30,
       members = (1 to 32768).map(i => OsmMember("n", i.toLong, "")))
     val ok = OsmRelation(31, members = Seq(OsmMember("n", 1, "")))
-    val out = Validate.dropOversizedRelations(Seq(big, ok).toDF())
+    val out = Validate.dropOversizeRelations(Seq(big, ok).toDF())
       .select("id").as[Long].collect().toSet
     assert(out == Set(31L))
   }

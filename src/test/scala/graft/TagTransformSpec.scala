@@ -43,9 +43,9 @@ class TagTransformSpec extends SparkSpecBase {
         col("tags").getItem("highway").isNotNull)
 
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WGS84,
-      tagTransform = ClassicPipeline.TagTransform(
-        node = Some(nodeXform), way = Some(wayXform)))
+      ClassicPipeline.Settings(srid = Srid.WGS84,
+        tagTransform = ClassicPipeline.TagTransform(
+          node = Some(nodeXform), way = Some(wayXform))))
 
     // n2 (hotel) dropped by the custom rule despite being in the
     // default style; n1 kept with the rewritten tag
@@ -66,7 +66,7 @@ class TagTransformSpec extends SparkSpecBase {
   test("default path is unchanged when no transform is given") {
     val osm = OsmText.toFrames(spark, data)
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WGS84)
+      ClassicPipeline.Settings(srid = Srid.WGS84))
     // the default style keeps both tagged nodes
     assert(t.point.select($"osm_id").as[Long].collect().toSet ==
       Set(1L, 2L))

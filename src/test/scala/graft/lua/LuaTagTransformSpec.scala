@@ -62,8 +62,8 @@ class LuaTagTransformSpec extends SparkSpecBase {
   test("the four filter functions drive node/way/relation processing") {
     val osm = OsmText.toFrames(spark, data)
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WGS84,
-      tagTransform = LuaTagTransform.fromSource(style))
+      ClassicPipeline.Settings(srid = Srid.WGS84,
+        tagTransform = LuaTagTransform.fromSource(style)))
 
     val pts = t.point.select($"osm_id", $"tags")
       .as[(Long, Map[String, String])].collect().toMap
@@ -114,10 +114,10 @@ class LuaTagTransformSpec extends SparkSpecBase {
     assume(new java.io.File(pbf).exists())
     val osm = graft.sources.OsmPbf.read(spark, pbf)
     val c = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WebMercator)
+      ClassicPipeline.Settings(srid = Srid.WebMercator))
     val l = ClassicPipeline.run(osm, StyleFile.defaultStyle,
-      srid = Srid.WebMercator,
-      tagTransform = LuaTagTransform.fromFile("/root/reference/style.lua"))
+      ClassicPipeline.Settings(srid = Srid.WebMercator,
+        tagTransform = LuaTagTransform.fromFile("/root/reference/style.lua")))
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select($"osm_id").as[Long].collect().toSet
     def diff(name: String, a: Set[Long], b: Set[Long]): Unit =
