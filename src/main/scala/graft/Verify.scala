@@ -6,6 +6,20 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Local-iteration aid: SPARK_GRAFT_ONLY=q103_containment,q104_...
+    // restricts the dump AND oracle_sql.json to those queries, so a
+    // local compare reports only what ran (the driver never sets it —
+    // full gate). A name that is no query is refused, not skipped.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    val queries = SparkEntry.queries
+    only.foreach { set =>
+      val unknown = set.filterNot(queries.contains)
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no query: " +
+        unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+    }
+    def selected[V](m: Map[String, V]): Map[String, V] =
+      only.fold(m)(set => m.filter { case (n, _) => set(n) })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,15 +36,7 @@ object Verify {
     // A failing query must surface as an explicit error artifact — not a
     // silently missing row in the driver's CORRECTNESS report.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Local-iteration aid: SPARK_GRAFT_ONLY=q103_containment,q104_...
-    // restricts the dump (the driver never sets it — full gate).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
-      case None      => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    selected(queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -53,7 +59,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors

@@ -566,20 +566,117 @@ object Dedup {
       .where(col("cos") >= threshold)
   }
 
-  /** Unsigned bit-slice `[lo, lo+width)` of a 64-bit hash column. */
+  /** Default hot-band threshold of every Hamming entry point: a band
+    * key holding more than this many distinct hashes (pair search)
+    * or index rows (probes) leaves the flat join. Callers reading a
+    * stats sidecar ([[BandIndexStore.readHotBands]]) pass the same
+    * value to the probe, so the two thresholds cannot drift apart. */
+  val DefaultMaxBandDf: Long = 100000L
+
+  /** How a Hamming fingerprint is stored: 64-bit `long` hashes, or
+    * WIDE `array<long>` ones (128/256-bit PDQ-class hashes — at ~10^10
+    * images even two-level 64-bit band keys go dense). Every Hamming
+    * operation below has ONE body over a layout. Words are
+    * little-endian (global bit i = bit (i mod 64) of word (i div
+    * 64)); `Long64`'s one word is the `long` column itself, so the
+    * 64-bit joins and shuffles stay on `long` keys. Each layout keeps
+    * its own band count and key family: persisted keys must not
+    * change. */
+  private[graft] sealed abstract class FpLayout(val nWords: Int,
+      val family: String, val keyFamily: String, val sqlType: String) {
+    final def bits: Int = 64 * nWords
+    /** the input hash column in this layout */
+    def cast(h: Column): Column
+    /** word `i` (0-based) as a `long` */
+    def word(h: Column, i: Int): Column
+    /** the typed all-zero hash */
+    def zero: Column
+    def nBands(maxDist: Int): Int
+    /** the band-key prefix pinning the banding geometry */
+    def keyPrefix(maxDist: Int): String
+    /** the public name of operation `op` for this layout */
+    def api(op: String): String
+    final def requireMaxDist(maxDist: Int): Unit =
+      require(maxDist >= 0 && maxDist < bits, s"bad maxDist $maxDist")
+  }
+
+  private[graft] object FpLayout {
+    /** 64-bit hashes: `maxDist + 1` bands (one 64-bit band at
+      * maxDist 0), keys `hb<nBands>.<b>:<value>`. */
+    case object Long64 extends FpLayout(1, "64-bit", "hb", "bigint") {
+      def cast(h: Column): Column = h.cast("long")
+      def word(h: Column, i: Int): Column = {
+        require(i == 0, s"word $i of a 64-bit hash"); h
+      }
+      def zero: Column = lit(0L)
+      def nBands(maxDist: Int): Int = maxDist + 1
+      def keyPrefix(maxDist: Int): String = s"hb${nBands(maxDist)}."
+      def api(op: String): String = op
+    }
+
+    /** `nWords`-word hashes: at least maxDist + 1 bands (pigeonhole)
+      * and enough that every band fits 63 bits — more bands than
+      * maxDist + 1 keep 100% recall (≤ maxDist differing bits still
+      * leave ≥ 1 band untouched). Keys `hw<bits>.<nBands>.<b>:<value>`:
+      * the hash width AND the band count live in the key. */
+    final case class Words(n: Int)
+        extends FpLayout(n, "wide", "hw", "array<bigint>") {
+      require(n >= 1 && n <= 16, s"bad nWords $n")
+      def cast(h: Column): Column = h
+      def word(h: Column, i: Int): Column = element_at(h, i + 1)
+      def zero: Column = array(Seq.fill(n)(lit(0L)): _*)
+      def nBands(maxDist: Int): Int = math.max(maxDist + 1, (bits + 62) / 63)
+      def keyPrefix(maxDist: Int): String = s"hw$bits.${nBands(maxDist)}."
+      def api(op: String): String = op + "Wide"
+    }
+  }
+
+  /** Unsigned bit-slice `[lo, lo+width)` of a `long` column. */
   private def bitSlice(h: Column, lo: Int, width: Int): Column = {
     val mask = if (width >= 64) -1L else (1L << width) - 1
     shiftrightunsigned(h, lo).bitwiseAND(lit(mask))
   }
 
-  /** The bits OUTSIDE band `[lo, hi)`, packed into one contiguous
-    * (64 − (hi − lo))-bit value (high run shifted down onto the low
-    * run) — the complement a second pigeonhole level bands over. */
-  private def bandComplement(h: Column, lo: Int, hi: Int): Column =
-    if (lo == 0) shiftrightunsigned(h, hi)
-    else if (hi == 64) h.bitwiseAND(lit((1L << lo) - 1))
-    else shiftleft(shiftrightunsigned(h, hi), lo)
-      .bitwiseOR(h.bitwiseAND(lit((1L << lo) - 1)))
+  /** Bits `[lo, lo+width)` of a fingerprint as one long; may span one
+    * word boundary. Band and sub-band widths stay ≤ 63 (sign bit
+    * clear), except the whole-hash band of a 64-bit key at maxDist 0. */
+  private def fpSlice(fp: FpLayout, h: Column, lo: Int,
+      width: Int): Column = {
+    require(width >= 0 && width <= 64, s"bad slice width $width")
+    if (width == 0) return lit(0L)
+    val w0 = lo / 64
+    val off = lo % 64
+    if (off + width <= 64) bitSlice(fp.word(h, w0), off, width)
+    else {
+      val lowW = 64 - off
+      shiftleft(bitSlice(fp.word(h, w0 + 1), 0, width - lowW), lowW)
+        .bitwiseOR(bitSlice(fp.word(h, w0), off, lowW))
+    }
+  }
+
+  /** Exact Hamming distance: an unrolled per-word xor/popcount sum
+    * (one `bit_count` for a 64-bit hash). */
+  private[graft] def fpDist(fp: FpLayout, a: Column, b: Column): Column =
+    (0 until fp.nWords)
+      .map(i => bit_count(fp.word(a, i).bitwiseXOR(fp.word(b, i))))
+      .reduce(_ + _)
+
+  /** One level-2 sub-key: complement coordinates `[c0, c1)` of the
+    * band `[lo, hi)` (complement = all bits outside the band, in
+    * increasing position order), packed into one long. The interval
+    * maps to at most two contiguous original-bit runs (the complement
+    * has at most two contiguous regions), each ≤ 63 bits. */
+  private def complementSlice(fp: FpLayout, h: Column, lo: Int, hi: Int,
+      c0: Int, c1: Int): Column = {
+    if (c1 <= c0) return lit(0L)
+    def orig(c: Int) = if (c < lo) c else hi + (c - lo)
+    if (c1 <= lo || c0 >= lo) fpSlice(fp, h, orig(c0), c1 - c0)
+    else {
+      val w1 = lo - c0
+      shiftleft(fpSlice(fp, h, hi, c1 - lo), w1)
+        .bitwiseOR(fpSlice(fp, h, c0, w1))
+    }
+  }
 
   /** Hamming near-dup pairs over 64-bit fingerprints (perceptual
     * hashes like [[graft.sources.Multimodal.aHash64]], SimHash) by
@@ -598,83 +695,87 @@ object Dedup {
     *   - IDENTICAL hashes never enter the band join at all: the
     *     banded search runs over DISTINCT fingerprints only, and
     *     identical-hash pairs come from one exact equi-join on the
-    *     full 64-bit hash (per-hash output is the true duplicate
-    *     set — output-bound, AQE-skew-splittable, no wasted
-    *     verification);
+    *     full hash (per-hash output is the true duplicate set —
+    *     output-bound, AQE-skew-splittable, no wasted verification);
     *   - bands holding more than `maxBandDf` DISTINCT hashes are
     *     routed out of the flat pair join into a SECOND pigeonhole
     *     level over the band's complement bits (the multi-index
     *     -hashing construction, Norouzi et al. 2012): hashes agreeing
     *     on a hot band and within `maxDist` overall differ by ≤
-    *     maxDist bits on the remaining 64 − width bits, so they share
-    *     one of maxDist + 1 sub-bands — the candidate key grows from
-    *     ~64/(maxDist+1) bits to ~2× that, shrinking per-key width
-    *     quadratically while preserving EXACT 100% recall (unlike a
-    *     df-cap drop, nothing is ever skipped). This is also the
-    *     planet-scale path: at 10^10 fingerprints every 16-bit band
-    *     is "hot" under any sane cap, and the doubled key is what
-    *     keeps per-key candidate width bounded. */
+    *     maxDist bits on the remaining bits, so they share one of
+    *     the complement's sub-bands — the candidate key roughly
+    *     doubles in width, shrinking per-key width quadratically
+    *     while preserving EXACT 100% recall (unlike a df-cap drop,
+    *     nothing is ever skipped). This is also the planet-scale
+    *     path: at 10^10 fingerprints every 16-bit band is "hot" under
+    *     any sane cap, and the doubled key is what keeps per-key
+    *     candidate width bounded;
+    *   - a level-2 sub-band still holding more than `maxBandDf`
+    *     DISTINCT hashes is refused loudly with its density, never
+    *     joined output-quadratically. */
   def hammingNearDup(df: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int = 3, maxBandDf: Long = 100000): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64, s"bad maxDist $maxDist")
-    require(maxBandDf >= 1, s"bad maxBandDf $maxBandDf")
-    // Materialize the (id, h) projection once: the identical-hash
-    // self-join, the distinct-hash banding and the final pair
-    // expansion reference it 5×, and the upstream may be an
-    // arbitrarily expensive computed hash (decode + perceptual hash) —
-    // the "decode once, decide on small rows" rule. 16 bytes/row at
-    // MEMORY_AND_DISK; superseded blocks are freed by the context
-    // cleaner once the result is consumed. LAZY: the pinned body's
-    // hot-key collect is the first action and computes base inside its
-    // own job, so the pin costs no separate barrier job (driver job
-    // gaps dominate these queries — §1.5 job hygiene); every later
-    // branch reads the populated cache.
-    val base = df.select(col(idCol).as("id"),
-      col(hashCol).cast("long").as("h")).localCheckpoint(eager = false)
-    hammingPairsPinned(base, maxDist, maxBandDf, skipIdent = false)
+      maxDist: Int = 3, maxBandDf: Long = DefaultMaxBandDf): DataFrame =
+    fpNearDup(FpLayout.Long64, df, idCol, hashCol, maxDist, maxBandDf)
+
+  /** [[hammingNearDup]] over WIDE (`array<long>`, `nWords` words)
+    * fingerprints; dist is exact over all 64·nWords bits. */
+  def hammingNearDupWide(df: DataFrame, idCol: String, hashCol: String,
+      nWords: Int, maxDist: Int = 6, maxBandDf: Long = DefaultMaxBandDf)
+      : DataFrame =
+    fpNearDup(FpLayout.Words(nWords), df, idCol, hashCol, maxDist,
+      maxBandDf)
+
+  private def fpNearDup(fp: FpLayout, df: DataFrame, idCol: String,
+      hashCol: String, maxDist: Int, maxBandDf: Long): DataFrame = {
+    // Materialize the (id, h) projection once: the pair search
+    // references it 5× and the upstream may be an expensive computed
+    // hash (decode once, decide on small rows). LAZY: the pair
+    // search's hot-key collect is the first action and fills it inside
+    // its own job — no separate barrier job (§1.5 job hygiene).
+    val base = df.select(col(idCol).as("id"), fp.cast(col(hashCol)).as("h"))
+      .localCheckpoint(eager = false)
+    fpPairs(fp, base, maxDist, maxBandDf, skipIdent = false)
   }
 
-  /** [[hammingNearDup]] body over a pre-materialized (id, h) frame.
+  /** The pair search over a pre-materialized (id, h) frame.
     * `skipIdent` drops the identical-hash equi-join when the caller
     * guarantees hashes are DISTINCT (e.g. [[imageDedupClusters]]'
     * per-hash representatives — the join is provably empty there). */
-  private def hammingPairsPinned(base: DataFrame, maxDist: Int,
+  private def fpPairs(fp: FpLayout, base: DataFrame, maxDist: Int,
       maxBandDf: Long, skipIdent: Boolean): DataFrame = {
-    val nBands = maxDist + 1
+    fp.requireMaxDist(maxDist)
+    require(maxBandDf >= 1, s"bad maxBandDf $maxBandDf")
     // identical fingerprints: one equi-join on the full hash — these
     // pairs are all true duplicates (dist 0), so the join output IS
     // the answer, never a candidate set to verify
     lazy val ident = base.alias("a").join(base.alias("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.h").bitwiseXOR(col("b.h"))).as("dist"))
+        fpDist(fp, col("a.h"), col("b.h")).as("dist"))
     if (maxDist == 0) {
       require(!skipIdent, "maxDist 0 with distinct hashes has no pairs")
       return ident
     }
 
-    // skipIdent's contract (caller-guaranteed DISTINCT hashes) also
-    // makes the distinct here a re-aggregation of already-unique rows
-    // — a full exchange + hash aggregate for nothing (guide §2.4
-    // "a distinct on data that is already unique")
+    val bits = fp.bits
+    val nBands = fp.nBands(maxDist)
+    // skipIdent ⇒ hashes already DISTINCT: no exchange + aggregate
+    // for a distinct on data that is already unique (guide §2.4)
     val hs =
       if (skipIdent) base.select(col("h"))
       else base.select(col("h")).distinct()
-    // band b covers bits [b·64/nBands, (b+1)·64/nBands) — uneven tail
-    // widths are fine, the pigeonhole argument only needs a partition;
-    // each band carries its precomputed level-2 sub-keys (sub-bands of
-    // the complement bits), used only if the band goes over the cap
+    // band b covers bits [b·bits/nBands, (b+1)·bits/nBands) (the
+    // pigeonhole argument only needs a partition) and carries its
+    // level-2 sub-keys, used only if the band goes over the cap
     val bands = (0 until nBands).map { b =>
-      val lo = b * 64 / nBands
-      val hi = (b + 1) * 64 / nBands
-      val compWidth = 64 - (hi - lo)
-      val comp = bandComplement(col("h"), lo, hi)
+      val lo = b * bits / nBands
+      val hi = (b + 1) * bits / nBands
+      val cw = bits - (hi - lo)
       val sks = (0 until nBands).map { b2 =>
-        val lo2 = b2 * compWidth / nBands
-        val w2 = (b2 + 1) * compWidth / nBands - lo2
-        bitSlice(comp, lo2, w2)
+        complementSlice(fp, col("h"), lo, hi,
+          b2 * cw / nBands, (b2 + 1) * cw / nBands)
       }
-      struct(lit(b).as("t"), bitSlice(col("h"), lo, hi - lo).as("k"),
+      struct(lit(b).as("t"), fpSlice(fp, col("h"), lo, hi - lo).as("k"),
         array(sks: _*).as("sks"))
     }
     // Materialized once: the hot-key aggregate, the cold anti/semi
@@ -690,15 +791,12 @@ object Dedup {
         col("bk.sks").as("sks"))
       .localCheckpoint(eager = false)
     // hot set = (t, k) keys holding > maxBandDf DISTINCT hashes; tiny
-    // by construction (≤ bandRows / maxBandDf keys) — the same bound
-    // that already justified broadcasting it. COLLECTED to the driver
-    // (one job, same barrier the former localCheckpoint paid; the
-    // broadcast build shipped the identical rows through the driver
-    // anyway) and re-planted as a LocalRelation, so when the set is
-    // EMPTY — the normal shape under the default cap — the whole hot
-    // routing (anti/semi joins, level-2 sub-band pair join, escalation
-    // guard) is pruned from the plan instead of executing as empty
-    // stages; a non-empty set keeps the full routing, now over an
+    // by construction (≤ bandRows / maxBandDf keys). COLLECTED to the
+    // driver (one job) and re-planted as a LocalRelation, so when the
+    // set is EMPTY — the normal shape under the default cap — the
+    // whole hot routing (anti/semi joins, level-2 sub-band pair join,
+    // escalation guard) is pruned from the plan instead of executing
+    // as empty stages; a non-empty set keeps the full routing over an
     // exactly-sized broadcast relation.
     val sparkS = base.sparkSession
     import sparkS.implicits._
@@ -733,18 +831,21 @@ object Dedup {
       // keys), and the raise_error fires only if a violating key exists.
       val hot2 = hotK.groupBy(col("t"), col("k"), col("t2"), col("k2"))
         .agg(count(lit(1)).as("n2")).where(col("n2") > maxBandDf)
+      // hb must be a NON-NULL literal: a null literal would let the
+      // optimizer null-propagate the dist expression to constant null,
+      // prune the raise_error column, and silently drop the guard
       val guard = hot2.select(
         raise_error(format_string(
-          "hammingNearDup: level-2 sub-band (band %s, sub-band %s) still " +
-            "holds %s distinct hashes > maxBandDf — corpus density exceeds " +
-            "the two-level pigeonhole bound; raise maxBandDf or collapse " +
-            "identical hash regions first",
-          col("t"), col("t2"), col("n2"))).cast("long").as("ha"),
-        lit(0L).as("hb"))
+          s"${fp.api("hammingNearDup")}: level-2 sub-band (band %s, " +
+            "sub-band %s) still holds %s distinct hashes > maxBandDf — " +
+            "corpus density exceeds the two-level pigeonhole bound; " +
+            "raise maxBandDf or collapse identical hash regions first",
+          col("t"), col("t2"), col("n2"))).cast(fp.sqlType).as("ha"),
+        fp.zero.as("hb"))
       coldPairsOf(cold).unionByName(hotPairs).unionByName(guard)
     }
     val hashPairs = rawPairs
-      .withColumn("dist", bit_count(col("ha").bitwiseXOR(col("hb"))))
+      .withColumn("dist", fpDist(fp, col("ha"), col("hb")))
       .where(col("dist") <= maxDist)
       .distinct()
     // expand verified DISTINCT-hash pairs back to member id pairs
@@ -770,34 +871,108 @@ object Dedup {
     * mismatch can never join, and [[incrementalHammingCandidates]]
     * additionally REFUSES it loudly (one-row sample check). */
   def hammingBands(df: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64, s"bad maxDist $maxDist")
-    val nBands = maxDist + 1
+      maxDist: Int = 3): DataFrame =
+    fpBands(FpLayout.Long64, df, idCol, hashCol, maxDist)
+
+  /** [[hammingBands]] for wide fingerprints, under the
+    * `hw<bits>.<nBands>.<b>:<value>` key family — a probe with
+    * mismatched width or maxDist can never equi-join, and
+    * [[incrementalHammingCandidatesWide]] refuses it loudly. */
+  def hammingBandsWide(df: DataFrame, idCol: String, hashCol: String,
+      nWords: Int, maxDist: Int = 6): DataFrame =
+    fpBands(FpLayout.Words(nWords), df, idCol, hashCol, maxDist)
+
+  private[graft] def fpBands(fp: FpLayout, df: DataFrame, idCol: String,
+      hashCol: String, maxDist: Int): DataFrame = {
+    fp.requireMaxDist(maxDist)
+    val nBands = fp.nBands(maxDist)
+    val prefix = fp.keyPrefix(maxDist)
     val bands = (0 until nBands).map { b =>
-      val lo = b * 64 / nBands
-      val width = (b + 1) * 64 / nBands - lo
-      concat(lit(s"hb$nBands.$b:"),
-        bitSlice(col("h"), lo, width).cast("string"))
+      val lo = b * fp.bits / nBands
+      val hi = (b + 1) * fp.bits / nBands
+      concat(lit(s"$prefix$b:"),
+        fpSlice(fp, col("h"), lo, hi - lo).cast("string"))
     }
     df.select(col(idCol).cast("long").as("id"),
-        col(hashCol).cast("long").as("h"))
+        fp.cast(col(hashCol)).as("h"))
       .select(col("id"), explode(array(bands: _*)).as("band"))
+  }
+
+  /** The band-key families a persisted [[BandIndexStore]] index can
+    * hold: key prefix → (what its rows are, the API that probes
+    * them). Every geometry check refuses the families that are not
+    * its own with a pointer to the right API. */
+  private val bandFamilies = Seq(
+    "hb" -> ("64-bit fingerprint bands", "incrementalHammingCandidates"),
+    "hw" -> ("WIDE fingerprint bands", "incrementalHammingCandidatesWide"),
+    "cdc" -> ("CDC chunk bands", "incrementalCdcChunkDedup"))
+
+  /** One bounded driver read sampling each band-key family present
+    * in a persisted index — ONE Spark action instead of one limit-1
+    * collect per family (the per-family branches stay independent
+    * short-circuiting local limits, never a full index scan, and a
+    * MIXED index surfaces every family deterministically, not
+    * whichever row partition ordering yields first). Refuses any
+    * family but `own` (probed by the `probe` API) and returns a
+    * sampled `own` key, if the index holds one. */
+  private def ownBandKey(index: DataFrame, own: String,
+      probe: String): Option[String] = {
+    val prefixes = bandFamilies.map(_._1)
+    val bands = index.select(col("band"))
+    val sampled = prefixes
+      .map(p => bands.where(col("band").startsWith(p)).limit(1))
+      .reduce(_.unionAll(_))
+      .collect().map(_.getString(0))
+      .flatMap(k => prefixes.find(k.startsWith).map(_ -> k)).toMap
+    for ((fam, (what, api)) <- bandFamilies if fam != own;
+         k <- sampled.get(fam))
+      require(false,
+        s"index holds $what ('$k') — probe with $api, not the $probe API")
+    sampled.get(own)
+  }
+
+  /** Loud geometry check for a persisted fingerprint index: the
+    * sampled key must carry the probe's prefix (`hb<n>.` /
+    * `hw<bits>.<n>.`) — a width or maxDist mismatch, or an `hb`
+    * index that predates band-count encoding, would otherwise
+    * return silently-empty candidates forever, since mismatched keys
+    * can never equi-join. Shared by the batch probe and the
+    * streaming probe ([[graft.streaming.Streams]]). */
+  private[graft] def checkHammingIndexGeometry(index: DataFrame,
+      fp: FpLayout, maxDist: Int): Unit = {
+    val expect = fp.keyPrefix(maxDist)
+    ownBandKey(index, fp.keyFamily, fp.family)
+      .filterNot(_.startsWith(expect)).foreach { key =>
+        require(false, fp match {
+          case FpLayout.Long64 =>
+            val enc = key.stripPrefix("hb").takeWhile(_ != '.')
+            if (!key.contains(".") || enc.isEmpty || !enc.forall(_.isDigit))
+              s"index band key '$key' predates band-count encoding — " +
+                "rebuild the index"
+            else s"index was banded with maxDist ${enc.toInt - 1}, " +
+              s"probe uses maxDist $maxDist"
+          case FpLayout.Words(n) =>
+            s"index band key '$key' does not match wide probe geometry " +
+              s"'$expect' (nWords=$n, maxDist=$maxDist) — rebuild the " +
+              "index or fix the probe parameters"
+        })
+      }
   }
 
   /** Incremental Hamming near-dup: candidates of a NEW batch against
     * the PERSISTED fingerprint index (the image re-crawl shape — the
     * [[incrementalNearDupCandidates]] sibling for perceptual hashes):
     * band the batch now, equi-join the resolved index's band rows,
-    * emit (batch_id, corpus_id) candidates. The pigeonhole guarantee
-    * carries over: every (batch, corpus) pair within `maxDist` shares
-    * a band, so recall vs the index is 100% by construction; the
-    * caller verifies exact distances against its hash table (the
-    * index stores bands only, like the minhash form).
+    * emit distinct (batch_id, corpus_id) candidates. The pigeonhole
+    * guarantee carries over: every (batch, corpus) pair within
+    * `maxDist` shares a band, so recall vs the index is 100% by
+    * construction; the caller verifies exact distances against its
+    * hash table (the index stores bands only, like the minhash form).
     *
     * Geometry check: the probe REFUSES an index banded with a
-    * different maxDist (one-row sample of the index's `hb<n>.` key
-    * prefix — a mismatch would otherwise return silently-empty
-    * candidates, since mismatched keys can never equi-join).
+    * different maxDist or hash width, or holding another band family
+    * ([[checkHammingIndexGeometry]] — a mismatch would otherwise
+    * return silently-empty candidates).
     *
     * Hot-band guard (same hazard as [[hammingNearDup]]): the batch
     * side probes once per DISTINCT batch fingerprint (members are
@@ -805,92 +980,54 @@ object Dedup {
     * side, bands holding more than `maxBandDf` index rows are routed
     * out of the direct join and deduplicated per DISTINCT corpus
     * hash first when `corpusHashes` (an `(id, hash)` frame covering
-    * the index's live ids — the table any real pipeline keeps, 16
-    * bytes/doc) is supplied, then re-expanded through the index's own
-    * rows so tombstoned ids can never resurface. Both routes are
-    * EXACT — recall stays 100%; without `corpusHashes` the hot bands
-    * fall back to the direct join (still exact, output-bound, AQE
+    * the index's live ids — the table any real pipeline keeps) is
+    * supplied, then re-expanded through the index's own rows so
+    * tombstoned ids can never resurface. Both routes are EXACT —
+    * recall stays 100%; without `corpusHashes` the hot bands fall
+    * back to the direct join (still exact, output-bound, AQE
     * -skew-splittable) and the guard only bounds the batch side. */
-  /** Loud geometry check for a persisted fingerprint index: bounded
-    * one-row driver read of the index's `hb<n>.` key prefix — a
-    * maxDist mismatch (or a pre-band-count-encoding index) would
-    * otherwise return silently-empty candidates forever, since
-    * mismatched keys can never equi-join. Shared by the batch probe
-    * and the streaming probe ([[graft.streaming.Streams]]). */
-  /** One bounded driver read sampling each band-key family present
-    * in a persisted index — ONE Spark action instead of one limit-1
-    * collect per family (the per-family branches stay independent
-    * short-circuiting local limits, never a full index scan, and a
-    * MIXED index still surfaces every family deterministically).
-    * Returns prefix → sampled key for the families found. */
-  private def sampleBandFamilies(index: DataFrame,
-      prefixes: Seq[String]): Map[String, String] = {
-    val bands = index.select(col("band"))
-    prefixes.map(p => bands.where(col("band").startsWith(p)).limit(1))
-      .reduce(_.unionAll(_))
-      .collect().map(_.getString(0))
-      .flatMap(k => prefixes.find(k.startsWith).map(_ -> k)).toMap
-  }
-
-  private[graft] def checkHammingIndexGeometry(index: DataFrame,
-      maxDist: Int): Unit = {
-    // the wrong-family refusal keeps its OWN bounded lookup branch:
-    // sampling one row of either family would make a MIXED hb/hw
-    // index pass or fail depending on which row partition ordering
-    // yields first
-    val fams = sampleBandFamilies(index, Seq("hw", "cdc", "hb"))
-    fams.get("hw").foreach { k =>
-      require(false,
-        s"index holds WIDE fingerprint bands ('$k') — " +
-          "probe with incrementalHammingCandidatesWide, not the " +
-          "64-bit API")
-    }
-    fams.get("cdc").foreach { k =>
-      require(false,
-        s"index holds CDC chunk bands ('$k') — probe " +
-          "with incrementalCdcChunkDedup, not the fingerprint API")
-    }
-    fams.get("hb").foreach { key =>
-      val enc = key.stripPrefix("hb").takeWhile(_ != '.')
-      require(key.contains(".") && enc.nonEmpty && enc.forall(_.isDigit),
-        s"index band key '$key' predates band-count encoding — rebuild the index")
-      require(enc.toInt == maxDist + 1,
-        s"index was banded with maxDist ${enc.toInt - 1}, probe uses maxDist $maxDist")
-    }
-  }
-
   def incrementalHammingCandidates(batch: DataFrame, idCol: String,
       hashCol: String, index: DataFrame, maxDist: Int = 3,
       corpusHashes: Option[DataFrame] = None,
-      maxBandDf: Long = 100000,
-      hotBands: Option[Seq[String]] = None): DataFrame = {
+      maxBandDf: Long = DefaultMaxBandDf,
+      hotBands: Option[Seq[String]] = None): DataFrame =
+    fpProbe(FpLayout.Long64, batch, idCol, hashCol, index, maxDist,
+      corpusHashes, maxBandDf, hotBands)
+
+  /** [[incrementalHammingCandidates]] for wide fingerprints. */
+  def incrementalHammingCandidatesWide(batch: DataFrame, idCol: String,
+      hashCol: String, index: DataFrame, nWords: Int, maxDist: Int = 6,
+      corpusHashes: Option[DataFrame] = None,
+      maxBandDf: Long = DefaultMaxBandDf,
+      hotBands: Option[Seq[String]] = None): DataFrame =
+    fpProbe(FpLayout.Words(nWords), batch, idCol, hashCol, index,
+      maxDist, corpusHashes, maxBandDf, hotBands)
+
+  private[graft] def fpProbe(fp: FpLayout, batch: DataFrame, idCol: String,
+      hashCol: String, index: DataFrame, maxDist: Int,
+      corpusHashes: Option[DataFrame], maxBandDf: Long,
+      hotBands: Option[Seq[String]]): DataFrame = {
     require(maxBandDf >= 1, s"bad maxBandDf $maxBandDf")
-    checkHammingIndexGeometry(index, maxDist)
+    checkHammingIndexGeometry(index, fp, maxDist)
     // batch projection materialized once (referenced by the distinct
     // -rep aggregate and the final member expansion; the upstream may
     // be an expensive computed hash)
     val bh = batch.select(col(idCol).cast("long").as("bid"),
-      col(hashCol).cast("long").as("bhash")).localCheckpoint()
+      fp.cast(col(hashCol)).as("bhash")).localCheckpoint()
     // probe once per distinct batch fingerprint
     val reps = bh.groupBy(col("bhash")).agg(min(col("bid")).as("rep"))
-    val b = hammingBands(reps, "rep", "bhash", maxDist)
+    val b = fpBands(fp, reps, "rep", "bhash", maxDist)
       .select(col("id").as("rep"), col("band"))
     val idx = index.select(col("id").as("cid"), col("band"))
-    // hot band set (tiny by construction: ≤ indexRows / maxBandDf)
-    // COLLECTED to the driver — same one-job barrier the former
-    // localCheckpoint paid, and the broadcast build shipped the
-    // identical rows through the driver anyway. An EMPTY set (the
-    // normal shape under the default cap) prunes the whole hot
-    // routing (anti/semi joins, per-hash dedup, fallback union) from
-    // the plan; a non-empty set keeps it over an exactly-sized
-    // job-less LocalRelation broadcast.
+    // hot band set (≤ indexRows / maxBandDf): from the caller's
+    // write-time stats sidecar when available (no index scan at all),
+    // else the full aggregate, COLLECTED and re-planted as a
+    // LocalRelation. The hot/cold routes partition the index rows and
+    // are result-identical, so a stats approximation only shifts
+    // bands between two exact routes; an EMPTY set (the normal shape
+    // under the default cap) prunes the whole hot routing.
     val sparkS = bh.sparkSession
     import sparkS.implicits._
-    // hot set: from the caller's write-time stats sidecar when
-    // available ([[BandIndexStore.readHotBands]] — no index scan at
-    // all), else the full aggregate. Either way the hot/cold routes
-    // partition the index rows and are result-identical, so a stats
-    // approximation only shifts bands between two exact routes.
     val hotKeys = hotBands.getOrElse(
       idx.groupBy(col("band")).agg(count(lit(1)).as("n"))
         .where(col("n") > maxBandDf).select(col("band"))
@@ -905,9 +1042,9 @@ object Dedup {
       val hotIdx = idx.join(broadcast(hot), Seq("band"), "left_semi")
       val hotCands = corpusHashes match {
         case Some(ch0) =>
-          // contract: first column = id, second = 64-bit hash
+          // contract: first column = id, second = the hash
           val ch = ch0.select(col(ch0.columns.head).cast("long").as("cid"),
-            col(ch0.columns(1)).cast("long").as("chash"))
+            fp.cast(col(ch0.columns(1))).as("chash"))
           // LEFT join: an index id missing from the caller's hash table
           // must not silently lose recall — uncovered rows fall back to
           // the direct (exact, possibly wide) route instead
@@ -941,298 +1078,6 @@ object Dedup {
       .distinct()
   }
 
-  // ------------------------------------------------------------------
-  // WIDE fingerprints (128/256-bit): production image dedup hashes
-  // (PDQ-class) outgrow 64 bits — at ~10^10 images even two-level
-  // 64-bit band keys go dense. The wide family generalizes the whole
-  // Hamming toolchain to `array<long>` hashes (little-endian words:
-  // global bit i = bit (i mod 64) of word (i div 64)), with
-  // proportionally more bands and the same exact pigeonhole recall.
-  // ------------------------------------------------------------------
-
-  /** Bits `[lo, lo+width)` of a little-endian `array<long>` hash,
-    * width ≤ 63 (so the value fits one long with the sign bit clear);
-    * may span one word boundary. */
-  private def wideBitSlice(h: Column, lo: Int, width: Int): Column = {
-    require(width >= 0 && width <= 63, s"bad slice width $width")
-    if (width == 0) return lit(0L)
-    val w0 = lo / 64
-    val off = lo % 64
-    if (off + width <= 64) bitSlice(element_at(h, w0 + 1), off, width)
-    else {
-      val lowW = 64 - off
-      shiftleft(bitSlice(element_at(h, w0 + 2), 0, width - lowW), lowW)
-        .bitwiseOR(bitSlice(element_at(h, w0 + 1), off, lowW))
-    }
-  }
-
-  /** Exact Hamming distance between two `array<long>` hashes of
-    * `nWords` words — an unrolled per-word xor/popcount sum. */
-  private def wideDist(a: Column, b: Column, nWords: Int): Column =
-    (1 to nWords).map(i =>
-      bit_count(element_at(a, i).bitwiseXOR(element_at(b, i))))
-      .reduce(_ + _)
-
-  /** One level-2 sub-key: complement coordinates `[c0, c1)` of the
-    * band `[lo, hi)` (complement = all bits outside the band, in
-    * increasing position order), packed into one long. The interval
-    * maps to at most two contiguous original-bit runs (the complement
-    * has at most two contiguous regions), each ≤ 63 bits. */
-  private def wideComplementSlice(h: Column, lo: Int, hi: Int,
-      c0: Int, c1: Int): Column = {
-    if (c1 <= c0) return lit(0L)
-    def orig(c: Int) = if (c < lo) c else hi + (c - lo)
-    if (c1 <= lo || c0 >= lo) wideBitSlice(h, orig(c0), c1 - c0)
-    else {
-      val w1 = lo - c0
-      shiftleft(wideBitSlice(h, hi, c1 - lo), w1)
-        .bitwiseOR(wideBitSlice(h, c0, w1))
-    }
-  }
-
-  /** Shared wide banding geometry: at least maxDist + 1 bands
-    * (pigeonhole), and enough that every band fits 63 bits. More
-    * bands than maxDist + 1 keeps 100% recall (≤ maxDist differing
-    * bits still leave ≥ 1 band untouched). */
-  private[graft] def wideBandCount(nWords: Int, maxDist: Int): Int =
-    math.max(maxDist + 1, (64 * nWords + 62) / 63)
-
-  /** [[hammingNearDup]] over WIDE (`array<long>`, `nWords` words)
-    * fingerprints — identical structure: identical hashes via one
-    * full-hash equi-join (output-bound true pairs), banded search
-    * over DISTINCT hashes, hot bands routed through a second
-    * pigeonhole level over the band's complement bits, and a loud
-    * escalation refusal when even a sub-band exceeds `maxBandDf`.
-    * Returns (id_a < id_b, dist), dist exact over all 64·nWords
-    * bits. */
-  def hammingNearDupWide(df: DataFrame, idCol: String, hashCol: String,
-      nWords: Int, maxDist: Int = 6, maxBandDf: Long = 100000)
-      : DataFrame = {
-    require(nWords >= 1 && nWords <= 16, s"bad nWords $nWords")
-    require(maxDist >= 0 && maxDist < 64 * nWords, s"bad maxDist $maxDist")
-    require(maxBandDf >= 1, s"bad maxBandDf $maxBandDf")
-    // same materialize-once contract as [[hammingNearDup]] — the
-    // (id, h) projection is referenced 5× downstream; LAZY for the
-    // same reason (the pinned body's hot-key collect materializes it)
-    val base = df.select(col(idCol).as("id"), col(hashCol).as("h"))
-      .localCheckpoint(eager = false)
-    hammingWidePairsPinned(base, nWords, maxDist, maxBandDf,
-      skipIdent = false)
-  }
-
-  /** [[hammingNearDupWide]] body over a pre-materialized (id, h)
-    * frame; `skipIdent` as in [[hammingPairsPinned]]. */
-  private def hammingWidePairsPinned(base: DataFrame, nWords: Int,
-      maxDist: Int, maxBandDf: Long, skipIdent: Boolean): DataFrame = {
-    val bits = 64 * nWords
-    lazy val ident = base.alias("a").join(base.alias("b"),
-        col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        wideDist(col("a.h"), col("b.h"), nWords).as("dist"))
-    if (maxDist == 0) {
-      require(!skipIdent, "maxDist 0 with distinct hashes has no pairs")
-      return ident
-    }
-
-    val nBands = wideBandCount(nWords, maxDist)
-    // see the narrow form: skipIdent ⇒ hashes already distinct
-    val hs =
-      if (skipIdent) base.select(col("h"))
-      else base.select(col("h")).distinct()
-    val bands = (0 until nBands).map { b =>
-      val lo = b * bits / nBands
-      val hi = (b + 1) * bits / nBands
-      val cw = bits - (hi - lo)
-      val sks = (0 until nBands).map { b2 =>
-        val c0 = b2 * cw / nBands
-        val c1 = (b2 + 1) * cw / nBands
-        wideComplementSlice(col("h"), lo, hi, c0, c1)
-      }
-      struct(lit(b).as("t"), wideBitSlice(col("h"), lo, hi - lo).as("k"),
-        array(sks: _*).as("sks"))
-    }
-    // materialized once — see the narrow form's note (6 subtree
-    // evaluations otherwise); LAZY: the hot-key collect below is the
-    // first action and populates the cache inside its own job
-    val keyed = hs
-      .select(col("h"), explode(array(bands: _*)).as("bk"))
-      .select(col("h"), col("bk.t").as("t"), col("bk.k").as("k"),
-        col("bk.sks").as("sks"))
-      .localCheckpoint(eager = false)
-    // hot set collected to the driver and re-planted as a
-    // LocalRelation — see the narrow form's note: same one-job barrier
-    // and driver exposure as the former checkpoint+broadcast, but an
-    // EMPTY set (the normal shape under the default cap) prunes the
-    // whole hot routing from the plan instead of running it as empty
-    // stages.
-    val sparkS = base.sparkSession
-    import sparkS.implicits._
-    val hotKeys = keyed.groupBy(col("t"), col("k"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBandDf)
-      .select(col("t"), col("k"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val coldPairsOf = (cold: DataFrame) => cold.alias("a")
-      .join(cold.alias("b"),
-        col("a.t") === col("b.t") && col("a.k") === col("b.k") &&
-          col("a.h") < col("b.h"))
-      .select(col("a.h").as("ha"), col("b.h").as("hb"))
-    val rawPairs = if (hotKeys.isEmpty) coldPairsOf(keyed) else {
-      val hot = hotKeys.toDF("t", "k") // LocalRelation: job-less broadcast
-      val cold = keyed.join(broadcast(hot), Seq("t", "k"), "left_anti")
-        .select(col("h"), col("t"), col("k"))
-      val hotK = keyed.join(broadcast(hot), Seq("t", "k"), "left_semi")
-        .select(col("h"), col("t"), col("k"),
-          posexplode(col("sks")).as(Seq("t2", "k2")))
-      val hotPairs = hotK.alias("a").join(hotK.alias("b"),
-          col("a.t") === col("b.t") && col("a.k") === col("b.k") &&
-            col("a.t2") === col("b.t2") && col("a.k2") === col("b.k2") &&
-            col("a.h") < col("b.h"))
-        .select(col("a.h").as("ha"), col("b.h").as("hb"))
-      // same escalation contract as the 64-bit form: never silently
-      // quadratic — refuse a still-dense sub-band with its density
-      val hot2 = hotK.groupBy(col("t"), col("k"), col("t2"), col("k2"))
-        .agg(count(lit(1)).as("n2")).where(col("n2") > maxBandDf)
-      // hb must be a NON-NULL literal: a null literal would let the
-      // optimizer null-propagate the dist expression to constant null,
-      // prune the raise_error column, and silently drop the guard
-      val guard = hot2.select(
-        raise_error(format_string(
-          "hammingNearDupWide: level-2 sub-band (band %s, sub-band %s) " +
-            "still holds %s distinct hashes > maxBandDf — corpus density " +
-            "exceeds the two-level pigeonhole bound; raise maxBandDf or " +
-            "collapse identical hash regions first",
-          col("t"), col("t2"), col("n2"))).cast("array<bigint>").as("ha"),
-        array((0 until nWords).map(_ => lit(0L)): _*).as("hb"))
-      coldPairsOf(cold).unionByName(hotPairs).unionByName(guard)
-    }
-    val hashPairs = rawPairs
-      .withColumn("dist", wideDist(col("ha"), col("hb"), nWords))
-      .where(col("dist") <= maxDist)
-      .distinct()
-    val expanded = hashPairs
-      .join(base.select(col("id").as("ia"), col("h").as("ha")), "ha")
-      .join(base.select(col("id").as("ib"), col("h").as("hb")), "hb")
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("dist"))
-    if (skipIdent) expanded else expanded.unionByName(ident)
-  }
-
-  /** [[hammingBands]] for wide fingerprints: persistable (id, band)
-    * rows under the `hw<bits>.<nBands>.<b>:<value>` key family — the
-    * full geometry (hash width AND band count) lives in the key, so
-    * a probe with mismatched width or maxDist can never equi-join,
-    * and [[incrementalHammingCandidatesWide]] refuses it loudly. */
-  def hammingBandsWide(df: DataFrame, idCol: String, hashCol: String,
-      nWords: Int, maxDist: Int = 6): DataFrame = {
-    require(nWords >= 1 && nWords <= 16, s"bad nWords $nWords")
-    require(maxDist >= 0 && maxDist < 64 * nWords, s"bad maxDist $maxDist")
-    val bits = 64 * nWords
-    val nBands = wideBandCount(nWords, maxDist)
-    val bands = (0 until nBands).map { b =>
-      val lo = b * bits / nBands
-      val hi = (b + 1) * bits / nBands
-      concat(lit(s"hw$bits.$nBands.$b:"),
-        wideBitSlice(col("h"), lo, hi - lo).cast("string"))
-    }
-    df.select(col(idCol).cast("long").as("id"), col(hashCol).as("h"))
-      .select(col("id"), explode(array(bands: _*)).as("band"))
-  }
-
-  /** Loud geometry check for a persisted WIDE fingerprint index:
-    * the `hw<bits>.<nBands>.` prefix must match the probe's geometry
-    * exactly; a 64-bit (`hb`) index is refused with a pointer to the
-    * narrow API. */
-  private[graft] def checkHammingIndexGeometryWide(index: DataFrame,
-      nWords: Int, maxDist: Int): Unit = {
-    val expect = s"hw${64 * nWords}.${wideBandCount(nWords, maxDist)}."
-    // per-family bounded lookups in ONE action — deterministic on a
-    // MIXED hb/hw index (see checkHammingIndexGeometry)
-    val fams = sampleBandFamilies(index, Seq("hb", "cdc", "hw"))
-    fams.get("hb").foreach { k =>
-      require(false,
-        s"index holds 64-bit fingerprint bands ('$k') " +
-          "— probe with incrementalHammingCandidates, not the wide API")
-    }
-    fams.get("cdc").foreach { k =>
-      require(false,
-        s"index holds CDC chunk bands ('$k') — probe " +
-          "with incrementalCdcChunkDedup, not the fingerprint API")
-    }
-    fams.get("hw").foreach { key =>
-      require(key.startsWith(expect),
-        s"index band key '$key' does not match wide probe geometry " +
-          s"'$expect' (nWords=$nWords, maxDist=$maxDist) — rebuild " +
-          "the index or fix the probe parameters")
-    }
-  }
-
-  /** [[incrementalHammingCandidates]] for wide fingerprints: batch
-    * bands probe the persisted wide index with the same hot-band
-    * routing (per-distinct-corpus-hash dedup when `corpusHashes` is
-    * supplied, LEFT-join fallback for uncovered ids, tombstone-safe
-    * re-expansion through the index's own rows) and the same loud
-    * geometry refusal. Returns distinct (batch_id, corpus_id). */
-  def incrementalHammingCandidatesWide(batch: DataFrame, idCol: String,
-      hashCol: String, index: DataFrame, nWords: Int, maxDist: Int = 6,
-      corpusHashes: Option[DataFrame] = None,
-      maxBandDf: Long = 100000,
-      hotBands: Option[Seq[String]] = None): DataFrame = {
-    require(maxBandDf >= 1, s"bad maxBandDf $maxBandDf")
-    checkHammingIndexGeometryWide(index, nWords, maxDist)
-    // batch projection materialized once — see the narrow form
-    val bh = batch.select(col(idCol).cast("long").as("bid"),
-      col(hashCol).as("bhash")).localCheckpoint()
-    val reps = bh.groupBy(col("bhash")).agg(min(col("bid")).as("rep"))
-    val b = hammingBandsWide(reps, "rep", "bhash", nWords, maxDist)
-      .select(col("id").as("rep"), col("band"))
-    val idx = index.select(col("id").as("cid"), col("band"))
-    // hot set collected and re-planted as a LocalRelation — see the
-    // narrow probe's note: an empty set (the normal shape) prunes
-    // the whole hot routing from the plan.
-    val sparkS = bh.sparkSession
-    import sparkS.implicits._
-    // stats-sidecar hot set when available — see the narrow probe
-    val hotKeys = hotBands.getOrElse(
-      idx.groupBy(col("band")).agg(count(lit(1)).as("n"))
-        .where(col("n") > maxBandDf).select(col("band"))
-        .collect().map(_.getString(0)).toSeq)
-    val cands = if (hotKeys.isEmpty) {
-      b.join(idx, "band").select(col("rep"), col("cid"))
-    } else {
-      val hot = hotKeys.toDF("band")
-      val coldCands = b
-        .join(idx.join(broadcast(hot), Seq("band"), "left_anti"), "band")
-        .select(col("rep"), col("cid"))
-      val hotIdx = idx.join(broadcast(hot), Seq("band"), "left_semi")
-      val hotCands = corpusHashes match {
-        case Some(ch0) =>
-          val ch = ch0.select(col(ch0.columns.head).cast("long").as("cid"),
-            col(ch0.columns(1)).as("chash"))
-          val hotIdxH = hotIdx.join(ch, Seq("cid"), "left")
-          val covered = hotIdxH.where(col("chash").isNotNull)
-          val uncovered = hotIdxH.where(col("chash").isNull)
-            .select(col("cid"), col("band"))
-          val hotDistinct = covered.select(col("band"), col("chash"))
-            .distinct()
-          b.join(hotDistinct, "band")
-            .join(covered, Seq("band", "chash"))
-            .select(col("rep"), col("cid"))
-            .unionByName(
-              b.join(uncovered, "band").select(col("rep"), col("cid")))
-        case None =>
-          b.join(hotIdx, "band").select(col("rep"), col("cid"))
-      }
-      coldCands.unionByName(hotCands)
-    }
-    val repPairs = cands.distinct()
-    repPairs
-      .join(reps.select(col("rep"), col("bhash")), "rep")
-      .join(bh, "bhash")
-      .where(col("bid") =!= col("cid"))
-      .select(col("bid").as("batch_id"), col("cid").as("corpus_id"))
-      .distinct()
-  }
-
   /** O(N) keep/drop decisions for image dedup — the composition a
     * 100 TB pipeline actually consumes ([[hammingNearDup]] →
     * [[connectedComponents]] → canonical selection), returning ONE
@@ -1251,47 +1096,32 @@ object Dedup {
     * even if dist(A,C) > maxDist) — the standard dedup contract,
     * same as [[nearDupClusters]]. */
   def imageDedupClusters(df: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int = 3, maxBandDf: Long = 100000): DataFrame = {
+      maxDist: Int = 3, maxBandDf: Long = DefaultMaxBandDf): DataFrame =
+    fpClusters(FpLayout.Long64, df, idCol, hashCol, maxDist, maxBandDf)
+
+  /** [[imageDedupClusters]] over WIDE fingerprints. */
+  def imageDedupClustersWide(df: DataFrame, idCol: String,
+      hashCol: String, nWords: Int, maxDist: Int = 6,
+      maxBandDf: Long = DefaultMaxBandDf): DataFrame =
+    fpClusters(FpLayout.Words(nWords), df, idCol, hashCol, maxDist,
+      maxBandDf)
+
+  private def fpClusters(fp: FpLayout, df: DataFrame, idCol: String,
+      hashCol: String, maxDist: Int, maxBandDf: Long): DataFrame = {
     val base = df.select(col(idCol).cast("long").as("id"),
-      col(hashCol).cast("long").as("h"))
+      fp.cast(col(hashCol)).as("h"))
     // one (h → min id) representative per distinct fingerprint,
     // materialized once: it feeds the banded pair search AND the
-    // final member-inheritance join. LAZY: the pinned body's hot-key
+    // final member-inheritance join. LAZY: the pair search's hot-key
     // collect computes reps (via the banding chain) inside its own
     // job — no separate barrier.
     val reps = base.groupBy(col("h")).agg(min(col("id")).as("rep"))
       .localCheckpoint(eager = false)
     // distinct-fingerprint pair graph; hashes are unique here so the
     // identical-hash join is provably empty — skipped outright
-    val repPairs = hammingPairsPinned(
+    val repPairs = fpPairs(fp,
       reps.select(col("rep").as("id"), col("h")), maxDist, maxBandDf,
       skipIdent = true)
-    val cc = connectedComponents(repPairs, "id_a", "id_b")
-      .select(col("id").as("rep"), col("component"))
-    base.join(reps, "h")
-      .join(cc, Seq("rep"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("rep")).as("cluster_id"))
-      .withColumn("keep", col("id") === col("cluster_id"))
-  }
-
-  /** [[imageDedupClusters]] over WIDE fingerprints: the same O(N)
-    * keep/drop contract (distinct-hash pair graph →
-    * large-star/small-star components → member inheritance), with the
-    * pair graph built by [[hammingNearDupWide]]. A million identical
-    * 256-bit thumbnails still contribute ONE graph node. */
-  def imageDedupClustersWide(df: DataFrame, idCol: String,
-      hashCol: String, nWords: Int, maxDist: Int = 6,
-      maxBandDf: Long = 100000): DataFrame = {
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(hashCol).as("h"))
-    // materialized once (LAZY) + ident join skipped — see the narrow
-    // form
-    val reps = base.groupBy(col("h")).agg(min(col("id")).as("rep"))
-      .localCheckpoint(eager = false)
-    val repPairs = hammingWidePairsPinned(
-      reps.select(col("rep").as("id"), col("h")), nWords, maxDist,
-      maxBandDf, skipIdent = true)
     val cc = connectedComponents(repPairs, "id_a", "id_b")
       .select(col("id").as("rep"), col("component"))
     base.join(reps, "h")
@@ -1687,23 +1517,13 @@ object Dedup {
 
   /** Loud geometry check for a persisted CDC chunk index: the
     * `cdc<k>.<t>:` prefix must match the probe's parameters; a
-    * fingerprint (`hb`/`hw`) index is refused with a pointer to the
-    * Hamming APIs. Per-family bounded lookups, so the refusal is
-    * deterministic on a MIXED index in both directions (same contract
-    * as [[checkHammingIndexGeometry]]). */
+    * fingerprint (`hb`/`hw`) index is refused with a pointer to its
+    * Hamming API (the same family table and bounded per-family
+    * lookups as [[checkHammingIndexGeometry]]). */
   private[graft] def checkCdcIndexGeometry(index: DataFrame, k: Int,
       hexThreshold: String): Unit = {
     val expect = s"cdc$k.$hexThreshold:"
-    // per-family bounded lookups in ONE action (see
-    // checkHammingIndexGeometry)
-    val fams = sampleBandFamilies(index, Seq("hb", "hw", "cdc"))
-    (fams.get("hb") orElse fams.get("hw")).foreach { k =>
-      require(false,
-        s"index holds fingerprint bands ('$k') — " +
-          "probe with the incrementalHammingCandidates APIs, not the " +
-          "CDC chunk API")
-    }
-    fams.get("cdc").foreach { key =>
+    ownBandKey(index, "cdc", "CDC chunk").foreach { key =>
       require(key.startsWith(expect),
         s"index band key '$key' does not match CDC probe geometry " +
           s"'$expect' (k=$k, hexThreshold='$hexThreshold') — rebuild " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.{BandIndexStore, Dedup}
 import graft.sources.Multimodal
 
 /** Round-12 additions beyond the SQ8 tier: the IVF-SQ8 composition
@@ -417,15 +418,6 @@ object Pipeline10 extends Registry {
 
   // ---- q141: Hamming near-dup over 64-bit fingerprints ----
 
-  /** The scale path for perceptual-hash image dedup
-    * ([[graft.operators.Dedup.hammingNearDup]]): pigeonhole banding
-    * guarantees every pair within Hamming distance 6 shares one of 7
-    * exact bands, so candidates are an equi-join, never all-pairs —
-    * with 100% recall by construction. Fingerprints are a pure
-    * integer bit formula (groups of 4 docs share a 63-bit base, each
-    * member XOR-flips up to 3 positions), and the oracle brute-forces
-    * ALL pairs with `bit_count(xor())` — a hash match proves the
-    * banded join finds exactly the brute-force pair set. */
   /** The q141/q145 fingerprint fixture: groups of 4 docs share a
     * 63-bit base pattern, each member XOR-flips up to 3 positions —
     * a pure integer bit formula both the Spark side and the DuckDB
@@ -434,23 +426,37 @@ object Pipeline10 extends Registry {
     import s.implicits._
     Tables.documents(s, d).select(col("doc_id"), col("source"))
       .as[(Long, String)]
-      .map { case (id, src) =>
-        var h = 0L
-        var i = 0
-        while (i < 63) {
-          var bit = if ((((id / 4) * 31 + i * 17) % 97) % 5 == 0) 1 else 0
-          var f = 0
-          while (f < (id % 4).toInt) {
-            if ((id * 11 + f * 23) % 63 == i) bit ^= 1
-            f += 1
-          }
-          if (bit == 1) h |= 1L << i
-          i += 1
-        }
-        (id, h, src)
-      }.toDF("doc_id", "h", "source")
+      .map { case (id, src) => (id, fpWords(id, 1)(0), src) }
+      .toDF("doc_id", "h", "source")
   }
 
+  /** The fixture's `nWords` little-endian words for doc `id`: global
+    * position p < 63·nWords is bit p mod 63 of word p div 63 (the top
+    * bit of each word stays clear); the base pattern and the flips
+    * range over all 63·nWords positions. */
+  private[queries] def fpWords(id: Long, nWords: Int): Array[Long] = {
+    val bits = 63 * nWords
+    val words = Array.fill(nWords)(0L)
+    var p = 0
+    while (p < bits) {
+      var bit = if ((((id / 4) * 31 + p * 17) % 97) % 5 == 0) 1 else 0
+      var f = 0
+      while (f < (id % 4).toInt) {
+        if ((id * 11 + f * 23) % bits == p) bit ^= 1
+        f += 1
+      }
+      if (bit == 1) words(p / 63) |= 1L << (p % 63)
+      p += 1
+    }
+    words
+  }
+
+  /** The scale path for perceptual-hash image dedup
+    * ([[graft.operators.Dedup.hammingNearDup]]): pigeonhole banding
+    * guarantees every pair within Hamming distance 6 shares one of 7
+    * exact bands, so candidates are an equi-join, never all-pairs.
+    * The oracle brute-forces ALL pairs with `bit_count(xor())` — a
+    * hash match proves the banded join finds exactly that set. */
   def hammingPairs(s: SparkSession, d: String): DataFrame =
     graft.operators.Dedup.hammingNearDup(fpHashes(s, d), "doc_id", "h",
         maxDist = 6)
@@ -652,43 +658,43 @@ object Pipeline10 extends Registry {
 
   // ---- q145: incremental image dedup vs the persisted hash index ----
 
-  /** The image re-crawl shape, end to end through the PERSISTED
-    * fingerprint index: the src0 corpus's Hamming bands are written
-    * into the [[graft.operators.BandIndexStore]] lifecycle (same
-    * snapshot/log/compaction machinery as the minhash index — the
-    * store is banding-agnostic), a later batch (everything non-src0)
-    * probes the resolved index for candidates, and exact
-    * `bit_count(xor)` verifies. Pigeonhole banding makes recall vs
-    * the index 100% by construction, so the oracle can brute-force
-    * all new-vs-old pairs and the hash must match exactly. */
-  def hammingIncremental(s: SparkSession, d: String): DataFrame = {
-    val hashes = fpHashes(s, d)
-    val path = cachedStore("hashidx", d) { p =>
-      graft.operators.BandIndexStore.writeBands(
-        graft.operators.Dedup.hammingBands(
-          hashes.where(col("source") === "src0"), "doc_id", "h",
-          maxDist = 6), p)
-    }
-    val index = graft.operators.BandIndexStore.read(s, path)
+  /** The image re-crawl over 64-bit fingerprints
+    * ([[fingerprintRecrawl]]). Pigeonhole banding makes recall vs the
+    * index 100% by construction, so the oracle can brute-force all
+    * new-vs-old pairs and the hash must match exactly. */
+  def hammingIncremental(s: SparkSession, d: String): DataFrame =
+    fingerprintRecrawl(s, d, "hashidx", Dedup.FpLayout.Long64, fpHashes(s, d))
+
+  /** The image re-crawl through a PERSISTED fingerprint index, shared
+    * by q145, q156 and q165: src0's bands (`hashes` is doc_id, h,
+    * source) are committed once into the [[BandIndexStore]] store
+    * `kind`, the non-src0 batch probes the resolved index with the
+    * corpus-hash routing and the write-time stats sidecar's hot set
+    * (no per-probe O(index) aggregate; the probe gets the same
+    * threshold the sidecar was read with), and an exact xor/popcount
+    * over the hash table verifies (the index stores bands only). */
+  private[queries] def fingerprintRecrawl(s: SparkSession, d: String,
+      kind: String, fp: Dedup.FpLayout, hashes: DataFrame): DataFrame = {
+    val maxDist = 6
+    val corpus = hashes.where(col("source") === "src0")
+      .select(col("doc_id"), col("h"))
     val batch = hashes.where(col("source") =!= "src0")
-    val cands = graft.operators.Dedup.incrementalHammingCandidates(
-      batch, "doc_id", "h", index, maxDist = 6,
-      corpusHashes = Some(hashes.where(col("source") === "src0")
-        .select(col("doc_id"), col("h"))),
-      // hot set from the write-time stats sidecar: no per-probe
-      // O(index) aggregate (falls back inside the probe when None)
-      hotBands = graft.operators.BandIndexStore.readHotBands(
-        s, path, maxBandDf = 100000))
-    // exact verify against the hash table (the index stores bands
-    // only): ≤ candidate-count integer xor/popcounts
-    val bh = batch.select(col("doc_id").as("batch_id"),
-      col("h").as("bh"))
-    val ch = hashes.where(col("source") === "src0")
-      .select(col("doc_id").as("corpus_id"), col("h").as("ch"))
-    cands.join(bh, Seq("batch_id")).join(ch, Seq("corpus_id"))
+    val path = cachedStore(kind, d) { p =>
+      BandIndexStore.writeBands(
+        Dedup.fpBands(fp, corpus, "doc_id", "h", maxDist), p)
+    }
+    val cands = Dedup.fpProbe(fp, batch, "doc_id", "h",
+      BandIndexStore.read(s, path), maxDist, corpusHashes = Some(corpus),
+      maxBandDf = Dedup.DefaultMaxBandDf,
+      hotBands = BandIndexStore.readHotBands(s, path, Dedup.DefaultMaxBandDf))
+    cands
+      .join(batch.select(col("doc_id").as("batch_id"), col("h").as("bh")),
+        Seq("batch_id"))
+      .join(corpus.select(col("doc_id").as("corpus_id"), col("h").as("ch")),
+        Seq("corpus_id"))
       .select(col("batch_id"), col("corpus_id"),
-        bit_count(col("bh").bitwiseXOR(col("ch"))).cast("int").as("dist"))
-      .where(col("dist") <= 6)
+        Dedup.fpDist(fp, col("bh"), col("ch")).cast("int").as("dist"))
+      .where(col("dist") <= maxDist)
   }
 
   val hammingIncrementalSql: String =

@@ -28,23 +28,8 @@ object Pipeline12 extends Registry {
     import s.implicits._
     Tables.documents(s, d).select(col("doc_id"), col("source"))
       .as[(Long, String)]
-      .map { case (id, src) =>
-        val words = Array.fill(2)(0L)
-        var p = 0
-        while (p < 126) {
-          val w = p / 63
-          val i = p % 63
-          var bit = if ((((id / 4) * 31 + p * 17) % 97) % 5 == 0) 1 else 0
-          var f = 0
-          while (f < (id % 4).toInt) {
-            if ((id * 11 + f * 23) % 126 == p) bit ^= 1
-            f += 1
-          }
-          if (bit == 1) words(w) |= 1L << i
-          p += 1
-        }
-        (id, words.toSeq, src)
-      }.toDF("doc_id", "h", "source")
+      .map { case (id, src) => (id, Pipeline10.fpWords(id, 2).toSeq, src) }
+      .toDF("doc_id", "h", "source")
   }
 
   def hammingWide(s: SparkSession, d: String): DataFrame =
@@ -272,43 +257,13 @@ object Pipeline12 extends Registry {
 
   // ---- q156: wide incremental probe vs the persisted index ----
 
-  /** The 128-bit image re-crawl shape end to end through the
-    * PERSISTED index (q145's wide sibling): src0's wide bands land in
-    * the [[graft.operators.BandIndexStore]] lifecycle under the
-    * `hw128.7.` key family, the non-src0 batch probes with
-    * [[graft.operators.Dedup.incrementalHammingCandidatesWide]]
-    * (hot-band corpus-hash routing enabled), exact two-word
-    * xor/popcount verifies. Pigeonhole recall is 100% by
-    * construction, so the oracle brute-forces all new-vs-old pairs
-    * and the hash must match exactly. */
-  def hammingWideIncremental(s: SparkSession, d: String): DataFrame = {
-    val hashes = fpHashesWide(s, d)
-    val path = StoreOnce.dir("widehashidx", d) { p =>
-      graft.operators.BandIndexStore.writeBands(
-        graft.operators.Dedup.hammingBandsWide(
-          hashes.where(col("source") === "src0"), "doc_id", "h",
-          nWords = 2, maxDist = 6), p)
-    }
-    val index = graft.operators.BandIndexStore.read(s, path)
-    val batch = hashes.where(col("source") =!= "src0")
-    val cands = graft.operators.Dedup.incrementalHammingCandidatesWide(
-      batch, "doc_id", "h", index, nWords = 2, maxDist = 6,
-      corpusHashes = Some(hashes.where(col("source") === "src0")
-        .select(col("doc_id"), col("h"))),
-      // stats-sidecar hot set — see q145
-      hotBands = graft.operators.BandIndexStore.readHotBands(
-        s, path, maxBandDf = 100000))
-    val dist2 = (a: String, b: String) =>
-      (bit_count(element_at(col(a), 1).bitwiseXOR(element_at(col(b), 1))) +
-        bit_count(element_at(col(a), 2).bitwiseXOR(element_at(col(b), 2))))
-    val bh = batch.select(col("doc_id").as("batch_id"), col("h").as("bh"))
-    val ch = hashes.where(col("source") === "src0")
-      .select(col("doc_id").as("corpus_id"), col("h").as("ch"))
-    cands.join(bh, Seq("batch_id")).join(ch, Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        dist2("bh", "ch").cast("int").as("dist"))
-      .where(col("dist") <= 6)
-  }
+  /** q145's 128-bit sibling: the image re-crawl through the
+    * PERSISTED index ([[Pipeline10.fingerprintRecrawl]], `hw128.7.`
+    * keys). Pigeonhole recall is 100% by construction, so the oracle
+    * brute-forces all new-vs-old pairs and the hash must match. */
+  def hammingWideIncremental(s: SparkSession, d: String): DataFrame =
+    Pipeline10.fingerprintRecrawl(s, d, "widehashidx",
+      graft.operators.Dedup.FpLayout.Words(2), fpHashesWide(s, d))
 
   val hammingWideIncrementalSql: String =
     """WITH p AS (SELECT doc_id, source FROM documents),

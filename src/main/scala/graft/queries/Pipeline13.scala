@@ -439,44 +439,17 @@ object Pipeline13 extends Registry {
   // ---- q165: pixel-derived incremental image re-crawl ----
 
   /** The FULL production image re-crawl loop with nothing synthetic
-    * left: pixels → [[Multimodal.dctHash256]] → src0's wide bands
-    * committed into the [[graft.operators.BandIndexStore]] lifecycle
-    * (`hw256.7.` key family) → the non-src0 batch probes with
-    * [[graft.operators.Dedup.incrementalHammingCandidatesWide]]
-    * (hot-band corpus-hash routing) → exact four-word xor/popcount
-    * verify. q156 proved this plumbing on synthetic fingerprints;
-    * q165 is the same contract fed by the hash the pixels actually
-    * produce. Pigeonhole recall is 100% by construction, so the
+    * left: pixels → [[Multimodal.dctHash256]] → the persisted-index
+    * re-crawl ([[Pipeline10.fingerprintRecrawl]], `hw256.7.` keys) —
+    * q156's plumbing fed by the hash the pixels actually produce. The
     * oracle brute-forces all batch-vs-corpus pairs over the
     * recomputed DCT hashes and the hash must match exactly. */
-  def pdqIncremental(s: SparkSession, d: String): DataFrame = {
-    val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-    val hashes = pdqHashes(s, d).join(src, "doc_id")
-    val corpus = hashes.where(col("source") === "src0")
-    val path = StoreOnce.dir("pdqhashidx", d) { p =>
-      graft.operators.BandIndexStore.writeBands(
-        graft.operators.Dedup.hammingBandsWide(corpus, "doc_id", "h",
-          nWords = 4, maxDist = 6), p)
-    }
-    val index = graft.operators.BandIndexStore.read(s, path)
-    val batch = hashes.where(col("source") =!= "src0")
-    val cands = graft.operators.Dedup.incrementalHammingCandidatesWide(
-      batch, "doc_id", "h", index, nWords = 4, maxDist = 6,
-      corpusHashes = Some(corpus.select(col("doc_id"), col("h"))),
-      // stats-sidecar hot set — see q145
-      hotBands = graft.operators.BandIndexStore.readHotBands(
-        s, path, maxBandDf = 100000))
-    val bh = batch.select(col("doc_id").as("batch_id"), col("h").as("bh"))
-    val ch = corpus.select(col("doc_id").as("corpus_id"),
-      col("h").as("ch"))
-    val dist4 = (1 to 4).map(i =>
-      bit_count(element_at(col("bh"), i)
-        .bitwiseXOR(element_at(col("ch"), i)))).reduce(_ + _)
-    cands.join(bh, Seq("batch_id")).join(ch, Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        dist4.cast("int").as("dist"))
-      .where(col("dist") <= 6)
-  }
+  def pdqIncremental(s: SparkSession, d: String): DataFrame =
+    Pipeline10.fingerprintRecrawl(s, d, "pdqhashidx",
+      graft.operators.Dedup.FpLayout.Words(4),
+      pdqHashes(s, d).join(
+        Tables.documents(s, d).select(col("doc_id"), col("source")),
+        "doc_id"))
 
   val pdqIncrementalSql: String =
     s"""WITH $pdqHashCtes,

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Dedup
 
 /** Structured-Streaming form of the incremental machinery (SURVEY.md
   * §2.8): the reference's append mode is a batch-incremental job, and
@@ -340,7 +342,7 @@ object Streams {
     val banded = docs
       .select(col(idCol).cast("long").as("id"),
         col(tsCol).cast("timestamp").as("ts"),
-        explode(graft.operators.Dedup.bandKeysExpr(col(textCol)))
+        explode(Dedup.bandKeysExpr(col(textCol)))
           .as("band"))
       .withWatermark("ts", watermark) // after the projection, so the
       // watermark tag survives onto the column the timeout reads
@@ -401,7 +403,7 @@ object Streams {
   def indexProbeStream(docs: DataFrame, idCol: String, textCol: String,
       index: DataFrame): DataFrame = {
     val probe = docs.select(col(idCol).cast("long").as("new_id"),
-      explode(graft.operators.Dedup.bandKeysExpr(col(textCol)))
+      explode(Dedup.bandKeysExpr(col(textCol)))
         .as("band"))
     probe.join(index.select(col("id").as("indexed_id"), col("band")),
         "band")
@@ -419,48 +421,29 @@ object Streams {
     * state; exact `bit_count(xor)` verification is the consumer's
     * per-batch step, same contract as [[indexProbeStream]].
     *
-    * Hot-band guard (the static half of
-    * [[graft.operators.Dedup.incrementalHammingCandidates]]'s guard —
-    * the stream side is per-row, so only the INDEX side can be
-    * bounded here): with `corpusHashes` supplied, index bands holding
-    * more than `maxBandDf` rows are pre-deduplicated to one row per
-    * DISTINCT corpus hash before the stream-static join, and matches
-    * through those representative rows are re-expanded through the
-    * index's own rows afterwards (static-static join — tombstoned ids
-    * can never resurface). Exact: recall stays 100% either way. */
+    * Hot-band guard (the static half of the batch probe's — the
+    * stream side is per-row, so only the INDEX side can be bounded):
+    * with `corpusHashes`, index bands holding more than `maxBandDf`
+    * rows are pre-deduplicated to one row per DISTINCT corpus hash
+    * before the stream-static join and re-expanded through the
+    * index's own rows afterwards (tombstoned ids never resurface).
+    * Exact: recall stays 100% either way. */
   def hashProbeStream(hashes: DataFrame, idCol: String,
       hashCol: String, index: DataFrame, maxDist: Int = 3,
       corpusHashes: Option[DataFrame] = None,
-      maxBandDf: Long = 100000): DataFrame = {
-    // the index is static, so the geometry mismatch the batch probe
-    // refuses loudly is checkable HERE, at stream definition — not
-    // left to produce a silently-empty candidate stream forever
-    graft.operators.Dedup.checkHammingIndexGeometry(index, maxDist)
-    val probe = graft.operators.Dedup
-      .hammingBands(hashes, idCol, hashCol, maxDist)
-      .select(col("id").as("new_id"), col("band"))
-    hashProbeJoin(probe, index, corpusHashes, maxBandDf,
-      castHash = _.cast("long"), grpType = "long")
-  }
+      maxBandDf: Long = Dedup.DefaultMaxBandDf): DataFrame =
+    hashProbe(Dedup.FpLayout.Long64, hashes, idCol, hashCol, index,
+      maxDist, corpusHashes, maxBandDf)
 
   /** [[hashProbeStream]] for WIDE (`array<long>`, `nWords` words)
     * fingerprints — the continuous form of
-    * [[graft.operators.Dedup.incrementalHammingCandidatesWide]]:
-    * identical geometry refusal at stream definition (width AND band
-    * count must match the `hw<bits>.<nBands>.` index keys) and the
-    * identical index-side hot-band discipline via the shared join. */
+    * [[graft.operators.Dedup.incrementalHammingCandidatesWide]]. */
   def hashProbeStreamWide(hashes: DataFrame, idCol: String,
       hashCol: String, index: DataFrame, nWords: Int, maxDist: Int = 6,
       corpusHashes: Option[DataFrame] = None,
-      maxBandDf: Long = 100000): DataFrame = {
-    graft.operators.Dedup
-      .checkHammingIndexGeometryWide(index, nWords, maxDist)
-    val probe = graft.operators.Dedup
-      .hammingBandsWide(hashes, idCol, hashCol, nWords, maxDist)
-      .select(col("id").as("new_id"), col("band"))
-    hashProbeJoin(probe, index, corpusHashes, maxBandDf,
-      castHash = identity, grpType = "array<bigint>")
-  }
+      maxBandDf: Long = Dedup.DefaultMaxBandDf): DataFrame =
+    hashProbe(Dedup.FpLayout.Words(nWords), hashes, idCol, hashCol,
+      index, maxDist, corpusHashes, maxBandDf)
 
   /** Streaming CDC chunk probe against the PERSISTED chunk index —
     * the continuous form of
@@ -488,10 +471,10 @@ object Streams {
     require(hexThreshold.length == 1 &&
       "0123456789abcdef".contains(hexThreshold),
       s"hexThreshold must be one lowercase hex digit, got '$hexThreshold'")
-    graft.operators.Dedup.checkCdcIndexGeometry(index, k, hexThreshold)
+    Dedup.checkCdcIndexGeometry(index, k, hexThreshold)
     val w = graft.functions.TextFunctions.normToks(col(textCol))
     val probe = docs.select(col(idCol).cast("long").as("new_id"),
-        explode(graft.operators.Dedup.cdcChunks(w, k, hexThreshold))
+        explode(Dedup.cdcChunks(w, k, hexThreshold))
           .as("chunk"))
       .select(col("new_id"),
         concat(lit(s"cdc$k.$hexThreshold:"), md5(col("chunk")))
@@ -504,15 +487,16 @@ object Streams {
       .select(col("new_id"), col("indexed_id"), col("band"))
   }
 
-  /** The stream-static band join shared by the 64-bit and wide hash
-    * probes: cold bands join directly; hot index bands (with
-    * `corpusHashes`) pre-deduplicate to one row per DISTINCT corpus
-    * hash and re-expand through the index's own rows (tombstones can
-    * never resurface), uncovered ids fall back to the direct route
-    * so recall stays 100%. */
-  private def hashProbeJoin(probe: DataFrame, index: DataFrame,
-      corpusHashes: Option[DataFrame], maxBandDf: Long,
-      castHash: Column => Column, grpType: String): DataFrame = {
+  /** The fingerprint stream probe for either layout. The index is
+    * static, so the geometry mismatch the batch probe refuses loudly
+    * is checked HERE, at stream definition — not left to produce a
+    * silently-empty candidate stream forever. */
+  private def hashProbe(fp: Dedup.FpLayout, hashes: DataFrame,
+      idCol: String, hashCol: String, index: DataFrame, maxDist: Int,
+      corpusHashes: Option[DataFrame], maxBandDf: Long): DataFrame = {
+    Dedup.checkHammingIndexGeometry(index, fp, maxDist)
+    val probe = Dedup.fpBands(fp, hashes, idCol, hashCol, maxDist)
+      .select(col("id").as("new_id"), col("band"))
     val idx = index.select(col("id").as("indexed_id"), col("band"))
     corpusHashes match {
       case None =>
@@ -523,19 +507,19 @@ object Streams {
         // contract: first column = id, second = the hash
         val ch = ch0.select(
           col(ch0.columns.head).cast("long").as("indexed_id"),
-          castHash(col(ch0.columns(1))).as("chash"))
+          fp.cast(col(ch0.columns(1))).as("chash"))
         val hot = idx.groupBy(col("band")).agg(count(lit(1)).as("n"))
           .where(col("n") > maxBandDf).select(col("band"))
         val cold = idx.join(broadcast(hot), Seq("band"), "left_anti")
-          .withColumn("grp", lit(null).cast(grpType))
+          .withColumn("grp", lit(null).cast(fp.sqlType))
         // LEFT join: hot-band index ids missing from the caller's
-        // hash table keep full recall through the direct route
+        // hash table (uncovered) keep full recall via the direct route
         val hotIdxH0 = idx.join(broadcast(hot), Seq("band"), "left_semi")
           .join(ch, Seq("indexed_id"), "left")
         val hotIdxH = hotIdxH0.where(col("chash").isNotNull)
         val hotUncovered = hotIdxH0.where(col("chash").isNull)
           .select(col("indexed_id"), col("band"))
-          .withColumn("grp", lit(null).cast(grpType))
+          .withColumn("grp", lit(null).cast(fp.sqlType))
         val hotRep = hotIdxH.groupBy(col("band"), col("chash"))
           .agg(min(col("indexed_id")).as("indexed_id"))
           .select(col("indexed_id"), col("band"),

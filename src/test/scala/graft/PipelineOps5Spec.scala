@@ -154,33 +154,68 @@ class PipelineOps5Spec extends SparkSpecBase {
 
   test("hamming near-dup: pigeonhole banding has 100% recall vs brute force") {
     // deterministic 64-bit fingerprints in noisy clusters: groups of
-    // three share a base pattern, each member flips a few bits
-    val hashes = (0L until 60L).map { id =>
-      val g = id / 3
-      var h = 0L
-      (0 until 63).foreach { i =>
-        if ((g * 31 + i * 17) % 5 == 0) h |= 1L << i
+    // three share a base pattern, each member flips a few bits. The
+    // second fixture draws over all 64 bits, so the sign bit is set
+    // in some bases and flipped in some members, as aHash64 does.
+    for (width <- Seq(63, 64)) {
+      val hashes = (0L until 60L).map { id =>
+        val g = id / 3
+        var h = 0L
+        (0 until width).foreach { i =>
+          if ((g * 31 + i * 17) % 5 == 0) h |= 1L << i
+        }
+        // flip (id%3)*2 distinct positions
+        (0 until (id % 3).toInt * 2).foreach { f =>
+          h ^= 1L << ((id * 11 + f * 23) % width).toInt
+        }
+        (id, h)
       }
-      // flip (id%3)*2 distinct positions
-      (0 until (id % 3).toInt * 2).foreach { f =>
-        h ^= 1L << ((id * 11 + f * 23) % 63).toInt
-      }
-      (id, h)
+      if (width == 64) assert(hashes.exists(_._2 < 0))
+      val df = hashes.toDF("id", "h")
+      val got = Dedup.hammingNearDup(df, "id", "h", maxDist = 5)
+        .as[(Long, Long, Int)].collect()
+        .map(t => (t._1, t._2) -> t._3).toMap
+      // brute force over all pairs
+      val want = (for {
+        (a, ha) <- hashes; (b, hb) <- hashes; if a < b
+        d = java.lang.Long.bitCount(ha ^ hb); if d <= 5
+      } yield (a, b) -> d).toMap
+      assert(want.nonEmpty) // the fixture produces in-group pairs
+      assert(got == want, s"width=$width") // exact: no missed pair, no junk
+      // and the candidate stage is banded, not all-pairs: distance-6+
+      // pairs never surface
+      assert(got.values.forall(_ <= 5))
     }
-    val df = hashes.toDF("id", "h")
-    val got = Dedup.hammingNearDup(df, "id", "h", maxDist = 5)
-      .as[(Long, Long, Int)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    // brute force over all pairs
-    val want = (for {
-      (a, ha) <- hashes; (b, hb) <- hashes; if a < b
-      d = java.lang.Long.bitCount(ha ^ hb); if d <= 5
-    } yield (a, b) -> d).toMap
-    assert(want.nonEmpty) // the fixture produces in-group pairs
-    assert(got == want) // exact: no missed pair (pigeonhole), no junk
-    // and the candidate stage is banded, not all-pairs: distance-6+
-    // pairs never surface
-    assert(got.values.forall(_ <= 5))
+  }
+
+  test("hammingBands golden keys: the hb on-disk format") {
+    // literal keys of persisted 64-bit indexes: `hb<nBands>.<b>:` plus
+    // the unsigned band value (the whole signed hash in the one band
+    // at maxDist 0); an index written by any earlier release must
+    // keep equi-joining, so these strings never change
+    val hashes = Seq(0x0123456789ABCDEFL, 0xFEDCBA9876543210L,
+      0x5A5A5A5A5A5A5AL)
+    val golden = Map(
+      0 -> Seq(Seq("hb1.0:81985529216486895"),
+        Seq("hb1.0:-81985529216486896"), Seq("hb1.0:25432092013386330")),
+      3 -> Seq(Seq("hb4.0:52719", "hb4.1:35243", "hb4.2:17767", "hb4.3:291"),
+        Seq("hb4.0:12816", "hb4.1:30292", "hb4.2:47768", "hb4.3:65244"),
+        Seq("hb4.0:23130", "hb4.1:23130", "hb4.2:23130", "hb4.3:90")),
+      6 -> Seq(Seq("hb7.0:495", "hb7.1:486", "hb7.2:106", "hb7.3:241",
+          "hb7.4:86", "hb7.5:282", "hb7.6:4"),
+        Seq("hb7.0:16", "hb7.1:25", "hb7.2:405", "hb7.3:270", "hb7.4:425",
+          "hb7.5:229", "hb7.6:1019"),
+        Seq("hb7.0:90", "hb7.1:301", "hb7.2:150", "hb7.3:331", "hb7.4:421",
+          "hb7.5:210", "hb7.6:1")))
+    val df = hashes.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+      .toDF("id", "h")
+    for ((maxDist, want) <- golden) {
+      val got = Dedup.hammingBands(df, "id", "h", maxDist)
+        .as[(Long, String)].collect().groupBy(_._1)
+        .map { case (id, ks) => id -> ks.map(_._2).sorted.toSeq }
+      assert(got == want.zipWithIndex.map { case (ks, i) => i.toLong -> ks }
+        .toMap, s"maxDist=$maxDist")
+    }
   }
 
   test("persisted fingerprint index: lifecycle + guaranteed candidate recall") {
@@ -227,6 +262,22 @@ class PipelineOps5Spec extends SparkSpecBase {
       // the appended twin surfaces for batch members near id 39
       if (want.exists(_._2 == 100L))
         assert(cands.exists(_._2 == 100L))
+      // an index from before band-count encoding (`hb<b>:` keys)
+      // cannot join the current keys: refused, not silently empty
+      val legacy = java.nio.file.Files
+        .createTempDirectory("fpidx_legacy").toString
+      try {
+        BandIndexStore.writeBands(corpus.flatMap { case (id, h) =>
+          (0 until 6).map(b => (id, s"hb$b:${(h >>> (b * 64 / 6)) & 0x3ff}"))
+        }.toDF("id", "band"), legacy)
+        val ex = intercept[IllegalArgumentException] {
+          Dedup.incrementalHammingCandidates(batch.toDF("id", "h"), "id",
+            "h", BandIndexStore.read(spark, legacy), maxDist = 5).count()
+        }
+        assert(ex.getMessage.contains("predates band-count encoding") &&
+          ex.getMessage.contains("rebuild the index"), ex.getMessage)
+      } finally org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(legacy))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(path))
   }

@@ -32,15 +32,18 @@ class WideHammingSpec extends SparkSpecBase {
   }
 
   test("wide near-dup: brute-force parity at 128 and 256 bits") {
-    for (nWords <- Seq(2, 4)) {
+    // nWords = 1 also checks the wide layout against hammingNearDup
+    // on the same hashes as `long`
+    for (nWords <- Seq(1, 2, 4)) {
       // clusters: groups of 3 share a base, members flip ≤ 4 positions
+      val pos = (x: Long) => (x % 120 % (63 * nWords)).toInt
       val rows = (0L until 60L).map { id =>
         val base = spread(id / 3, nWords)
         val h = (id % 3) match {
           case 0 => base
-          case 1 => flip(base, (id * 7 % 120).toInt)
-          case _ => flip(base, (id * 7 % 120).toInt, (id * 13 % 120).toInt,
-            ((id * 17 + 5) % 120).toInt, ((id * 19 + 9) % 120).toInt)
+          case 1 => flip(base, pos(id * 7))
+          case _ => flip(base, pos(id * 7), pos(id * 13),
+            pos(id * 17 + 5), pos(id * 19 + 9))
         }
         (id, h)
       } ++ Seq((200L, spread(0L, nWords)), (201L, spread(0L, nWords)))
@@ -54,6 +57,14 @@ class WideHammingSpec extends SparkSpecBase {
         .as[(Long, Long, Int)].collect()
         .map(t => (t._1, t._2) -> t._3).toMap
       assert(got == want, s"nWords=$nWords")
+      if (nWords == 1) {
+        val narrow = Dedup.hammingNearDup(
+            rows.map { case (id, h) => (id, h.head) }.toDF("id", "h"),
+            "id", "h", maxDist = 6)
+          .as[(Long, Long, Int)].collect()
+          .map(t => (t._1, t._2) -> t._3).toMap
+        assert(narrow == got, "nWords=1 differs from hammingNearDup")
+      }
     }
   }
 
