@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -142,8 +142,20 @@ object Pipeline8 extends Registry {
     * (Σ xxhash64 over canonical entity strings: id, 1e-7-grid coords,
     * sorted tags, ordered refs/members — the fields all four wire
     * formats transport). Four identical rows == the source layer
-    * agrees with itself and with the reference's pinned counts. */
+    * agrees with itself and with the reference's pinned counts.
+    * The fixture is read, the three round-trip files written and the
+    * four digest jobs run when the DataFrame is executed, not when it
+    * is built ([[Deferred]]): building q112 opens no file. */
   def sourceParity(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val schema = Seq.empty[(String, Long, Long, Long, Long, Long, Long,
+      String)].toDF("format", "n_nodes", "n_ways", "n_rels", "sum_ids",
+      "sum_nds", "sum_members", "digest").schema
+    Deferred.rows(s, schema)(sourceParityRows(s).map(Row.fromTuple))
+  }
+
+  /** q112's rows, one per format, computed on the driver. */
+  private def sourceParityRows(s: SparkSession) = {
     import graft.sources.{O5m, Opl, OsmPbf, OsmXml}
     val fixture =
       "/root/reference/tests/data/test_multipolygon.osm"
@@ -207,15 +219,12 @@ object Pipeline8 extends Registry {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Seq(
+    Seq(
       Future(digestRow("o5m", O5m.read(s, Seq(dir.resolve("f.o5m").toString)))),
       Future(digestRow("opl", Opl.read(s, Seq(dir.resolve("f.opl").toString)))),
       Future(digestRow("pbf", OsmPbf.read(s, dir.resolve("f.osm.pbf").toString))),
       Future(digestRow("xml", OsmXml.read(s, Seq(fixture)))))
       .map(Await.result(_, Duration.Inf))
-    import s.implicits._
-    rows.toDF("format", "n_nodes", "n_ways", "n_rels",
-      "sum_ids", "sum_nds", "sum_members", "digest")
   }
 
   /** Pinned constants — the counter values are the reference's own

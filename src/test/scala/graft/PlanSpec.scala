@@ -337,4 +337,71 @@ class PlanSpec extends SparkSpecBase {
     assert(offenders.isEmpty,
       s"unpartitioned Window in:\n  ${offenders.mkString("\n  ")}")
   }
+
+  // the two registry queries whose rows are driver-side work over
+  // reference fixtures, each with its fixtures in the order it reads them
+  private val fixtureQueries = Seq(
+    "q112_source_parity" ->
+      Seq("/root/reference/tests/data/test_multipolygon.osm"),
+    "q125_flex_lua_e2e" -> Seq(
+      "/root/reference/flex-config/simple.lua",
+      "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"))
+
+  test("fixture queries: building starts no job; running names a missing fixture") {
+    val sc = spark.sparkContext
+    // the status tracker learns of jobs asynchronously, but job ids are
+    // handed out in submission order: the id of a marker job of our
+    // own, once the tracker lists it, bounds every job started before
+    var marks = 0
+    def markerJobId(): Int = {
+      marks += 1
+      val group = s"planspec-marker-$marks"
+      sc.setJobGroup(group, "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      var ids = sc.statusTracker.getJobIdsForGroup(group)
+      while (ids.isEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(10)
+        ids = sc.statusTracker.getJobIdsForGroup(group)
+      }
+      assert(ids.length == 1, s"marker job $group not reported")
+      ids.head
+    }
+    fixtureQueries.foreach { case (name, fixtures) =>
+      val before = markerJobId()
+      val df = SparkEntry.queries(name)(spark, sf)
+      val after = markerJobId()
+      assert(after == before + 1,
+        s"building $name started ${after - before - 1} Spark job(s)")
+      fixtures.find(f => !java.nio.file.Files.exists(
+          java.nio.file.Paths.get(f))) match {
+        case Some(missing) =>
+          val e = intercept[Exception](df.collect())
+          val messages = Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).map(x => String.valueOf(x.getMessage))
+            .toSeq
+          assert(messages.exists(_.contains(missing)),
+            s"running $name without $missing failed with: " +
+              messages.mkString(" / "))
+        case None =>
+          assert(df.collect().nonEmpty, s"$name returned no rows")
+      }
+    }
+  }
+
+  test("fixture queries keep their output schemas") {
+    import org.apache.spark.sql.types._
+    def cols(fs: (String, DataType, Boolean)*) =
+      StructType(fs.map { case (n, t, nullable) => StructField(n, t, nullable) })
+    // the tuple-encoder schemas the rows always had: strings nullable,
+    // longs not
+    assert(SparkEntry.queries("q112_source_parity")(spark, sf).schema ==
+      cols(("format", StringType, true), ("n_nodes", LongType, false),
+        ("n_ways", LongType, false), ("n_rels", LongType, false),
+        ("sum_ids", LongType, false), ("sum_nds", LongType, false),
+        ("sum_members", LongType, false), ("digest", StringType, true)))
+    assert(SparkEntry.queries("q125_flex_lua_e2e")(spark, sf).schema ==
+      cols(("table_name", StringType, true), ("n_rows", LongType, false)))
+  }
 }
