@@ -782,7 +782,7 @@ case class WhtRotateExpr(child: Expression, signs: IndexedSeq[Long])
 
 /** Argmax-cosine assignment of a quantized vector against ≤256
   * embedded IVF centroids — the map-only kernel behind the streaming
-  * IVF-SQ8 ingest ([[graft.operators.IvfSqIndexStore.encodeFrozen]]).
+  * IVF-SQ8 ingest ([[graft.operators.VectorStore.encodeFrozenSq8]]).
   * Reproduces the batch assignment's struct-max BIT FOR BIT: the
   * score is the same double `dot.toDouble / (sqrt(qq) · cn)` with the
   * stored centroid norm `cn`, and an exact score tie keeps the

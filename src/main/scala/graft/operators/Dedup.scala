@@ -752,10 +752,9 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         fpDist(fp, col("a.h"), col("b.h")).as("dist"))
-    if (maxDist == 0) {
-      require(!skipIdent, "maxDist 0 with distinct hashes has no pairs")
-      return ident
-    }
+    // distinct hashes have no pair at distance 0: the empty frame
+    // (limit 0 plans as an empty relation, no job)
+    if (maxDist == 0) return if (skipIdent) ident.limit(0) else ident
 
     val bits = fp.bits
     val nBands = fp.nBands(maxDist)
@@ -1238,8 +1237,9 @@ object Dedup {
     * signature minima, which on real corpora means verbatim/near
     * -verbatim duplicates — those candidates verify at jaccard ≈ 1,
     * so the fan-out is OUTPUT-bound (true pairs), not wasted work,
-    * and the single hot key is the AQE-skew-split case. Measured
-    * (ScaleProbe `minhash_band_skew`, 2% of docs sharing one text):
+    * and the single hot key is the AQE-skew-split case. Measured by
+    * a since-deleted scale probe (`minhash_band_skew`, 2% of docs
+    * sharing one text):
     * candidates track the true-pair count K²/2 exactly — 3.1M/19.3M/
     * 77.4M rows at 20×/50×/100× with no all-pairs term over the
     * other 98% — and wall time follows the output (8.8/16.4/97.3 s).

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Checked Hadoop-FS mutations shared by the persisted stores
-  * ([[BandIndexStore]], [[IvfIndexStore]]): Hadoop FileSystems report
+  * ([[BandIndexStore]], [[VectorStore]]): Hadoop FileSystems report
   * many failures by RETURNING FALSE rather than throwing, and an
   * unchecked false on a commit path converts a transient FS problem
   * into silent data loss (round-10 ADVICE). A false return here aborts
@@ -27,14 +27,14 @@ private[operators] object FsOps {
     if (!f.rename(src, dst)) fail(s"rename $src -> $dst")
 }
 
-/** The committed-version protocol shared by [[IvfIndexStore]] and
-  * [[IvfPqIndexStore]]: artifacts stage into `path/v=N/`, a
-  * `_COMMITTED` marker (atomic rename) makes the version visible,
-  * readers serve the HIGHEST committed version, and the next write
-  * garbage-collects superseded/torn versions — so an interrupted
-  * write is simply invisible, never a torn artifact set. One
-  * implementation so a protocol fix can never apply to one store and
-  * silently miss the other. */
+/** The committed-version protocol of [[VectorStore]] (every codec,
+  * with or without a coarse quantizer): artifacts stage into
+  * `path/v=N/`, a `_COMMITTED` marker (atomic rename) makes the
+  * version visible, readers serve the HIGHEST committed version, and
+  * the next write garbage-collects superseded/torn versions — so an
+  * interrupted write is simply invisible, never a torn artifact set.
+  * The store's one write body and one probe body are its only
+  * callers, so a protocol fix reaches every store kind at once. */
 private[operators] object VersionedStore {
 
   import FsOps.{deleteChecked, renameChecked}

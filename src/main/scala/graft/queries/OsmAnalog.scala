@@ -220,7 +220,7 @@ object OsmAnalog extends Registry {
     // Algebraic pushdown of Update.dependencyClosure over middle
     // tables REBUILT from flat rows (pinned by MiddlePushdownSpec).
     // The operator contract is unchanged for real array-shaped
-    // middles (flex/classic/ScaleProbe still exercise it); here both
+    // middles (flex/classic still exercise it); here both
     // its inputs were assembled with collect_list only for
     // parentsOf*'s explode to flatten them again. Pushing the
     // closure onto the flat rows drops BOTH wide collect_list

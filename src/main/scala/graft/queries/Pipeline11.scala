@@ -74,10 +74,8 @@ object Pipeline11 extends Registry {
     * the generating formula — a hash match certifies the container
     * walk, the decode, and the boundary rule. */
   /** The q147 shot fixture (one AVI/MJPEG video per doc, 3-frame
-    * shots with even within-shot drift) — ONE definition shared by
-    * the query and the ScaleProbe curve, so the probe can never
-    * silently measure a different workload than the query. */
-  private[graft] def shotFixtureRow(id: Long): Multimodal.MediaRow = {
+    * shots with even within-shot drift). */
+  private def shotFixtureRow(id: Long): Multimodal.MediaRow = {
     val w = 16; val h = 16
     val nf = (4 + id % 5).toInt
     val frames = (0 until nf).map { f =>

@@ -44,6 +44,13 @@ class PipelineOps6Spec extends SparkSpecBase {
     val msg = ex.getMessage +
       Option(ex.getCause).map(_.getMessage).getOrElse("")
     assert(msg.contains("level-2 sub-band"), s"got: $msg")
+    // maxDist 0 clusters identical hashes only
+    val exact = Dedup.imageDedupClusters(
+        Seq((1L, 5L), (2L, 5L), (3L, 9L)).toDF("id", "h"), "id", "h",
+        maxDist = 0)
+      .as[(Long, Long, Boolean)].collect().sortBy(_._1)
+    assert(exact.toSeq ==
+      Seq((1L, 1L, true), (2L, 1L, false), (3L, 3L, true)))
   }
 
   test("videoShotBoundaries: exact diffs, strict threshold, non-video skipped") {

@@ -109,5 +109,12 @@ class PipelineOps7Spec extends SparkSpecBase {
       assert(cl == want(id), s"cluster of $id")
       assert(keep == (id == cl), s"keep of $id")
     }
+    // maxDist 0 clusters identical hashes only
+    val exact = Dedup.imageDedupClustersWide(
+        Seq((1L, Seq(5L, 0L)), (2L, Seq(5L, 0L)), (3L, Seq(9L, 0L)))
+          .toDF("id", "h"), "id", "h", nWords = 2, maxDist = 0)
+      .as[(Long, Long, Boolean)].collect().sortBy(_._1)
+    assert(exact.toSeq ==
+      Seq((1L, 1L, true), (2L, 1L, false), (3L, 3L, true)))
   }
 }

@@ -135,12 +135,13 @@ class LuaParserSpec extends AnyFunSuite {
       "/root/reference/flex-config",
       "/root/reference/flex-config/gen",
       "/root/reference/flex-config/locator")
-    val files = dirs.flatMap { d =>
-      val f = new java.io.File(d)
-      if (!f.exists()) Nil
-      else f.listFiles().filter(_.getName.endsWith(".lua")).toSeq
-    }
-    assert(files.size >= 25, s"expected the shipped corpus, got $files")
+    val (present, missing) =
+      dirs.map(new java.io.File(_)).partition(_.isDirectory)
+    val files = present.flatMap(
+      _.listFiles().filter(_.getName.endsWith(".lua")).toSeq)
+    assert(files.size >= 25, s"expected the shipped corpus, got $files" +
+      (if (missing.isEmpty) ""
+       else s"; missing directories: ${missing.mkString(", ")}"))
     files.foreach { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
         java.nio.charset.StandardCharsets.UTF_8)
