@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark entry: runs every registered query on
+/** Benchmark entry: runs every registered query (or the subset
+  * SPARK_GRAFT_ONLY names, [[SparkEntry.selected]]) on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * {"metric":…,"value":total,"unit":"sec","queries":{…},"sf":…}.
   *
@@ -23,16 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.selected(SparkEntry.queries)
+    val spark = LocalSpark.session("graft-bench", LocalSpark.cpus, 32)
 
     // warmup: touch codegen + file listing once, unbilled
     try SparkEntry.queries.get("q1_pricing_summary")
@@ -45,11 +38,11 @@ object Bench {
       fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = queries.keys.toSeq.sorted
     // one full pass over every query; None = failed (reported
     // separately, never masquerades as a fast success)
     def fullPass(): Map[String, Option[Double]] = names.map { name =>
-      name -> (try Some(once(SparkEntry.queries(name)))
+      name -> (try Some(once(queries(name)))
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -79,7 +72,7 @@ object Bench {
     val results: Seq[(String, Option[Double])] = names.map { n =>
       n -> (mins(n) match {
         case Some(s) if s > threshold =>
-          Some(math.min(s, try once(SparkEntry.queries(n))
+          Some(math.min(s, try once(queries(n))
           catch { case _: Throwable => s }))
         case other => other
       })
@@ -127,8 +120,9 @@ object Bench {
     // COMPACT record as the true last line. The compact form is
     // truncation-proof at any query count: per-query values are
     // integer milliseconds in sorted-query-name order (~6 bytes each;
-    // names are recoverable from SparkEntry.queries.keys.sorted, and
-    // n guards against a name-set drift). Failed queries encode -1.
+    // names are recoverable from SparkEntry.queries.keys.sorted, or
+    // the SPARK_GRAFT_ONLY list, and n guards against a name-set
+    // drift). Failed queries encode -1.
     println(json)
     val msInts = results.map {
       case (_, Some(v)) => math.round(v * 1000).toString

@@ -33,6 +33,18 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     merged("oracle", registries.map(_.oracles))
 
+  /** Restricts `m` (keyed by query name) to the queries that
+    * `SPARK_GRAFT_ONLY` names, a comma-separated list; `m` whole when
+    * that is unset. A name that is no query is refused, not skipped. */
+  def selected[V](m: Map[String, V]): Map[String, V] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(m) { list =>
+      val names = list.split(",").map(_.trim).toSet
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no query: " +
+        unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+      m.filter { case (n, _) => names(n) }
+    }
+
   /** The union of the registries' maps; a name defined by two
     * registries fails here instead of one silently replacing the
     * other. */

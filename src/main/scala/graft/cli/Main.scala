@@ -34,19 +34,12 @@ object Main {
     val o =
       try Options.parse(args.toIndexedSeq)
       catch { case Options.ExitEarly(code) => sys.exit(code) }
-    val spark = SparkSession.builder()
-      .master(s"local[${o.numProcesses}]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", o.numProcesses)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(o.logLevel match {
-      case "debug" => "INFO" // spark's DEBUG is firehose; INFO is the analog
-      case "info"  => "WARN"
-      case _       => "ERROR"
-    })
+    val spark = graft.LocalSpark.session("graft", o.numProcesses,
+      o.numProcesses, o.logLevel match {
+        case "debug" => "INFO" // spark's DEBUG is firehose; INFO is the analog
+        case "info"  => "WARN"
+        case _       => "ERROR"
+      })
     val t0 = System.nanoTime()
     try run(spark, o)
     finally {

@@ -111,15 +111,8 @@ object ReplicationMain {
 
   def main(args: Array[String]): Unit = {
     val o = parse(args.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[${o.numProcesses}]")
-      .appName("graft-replication")
-      .config("spark.sql.shuffle.partitions", o.numProcesses)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session("graft-replication",
+      o.numProcesses, o.numProcesses, "ERROR")
     val code = try run(spark, o) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

@@ -121,7 +121,7 @@ object CorpusOps {
     // codegen'd n-gram kernel (ShinglesExpr): one straight-line pass,
     // empty for documents shorter than n words. The Column form
     // (transform(sequence)+slice) is CodegenFallback and measured 2×
-    // slower at sf0.1 (GramProbe: 3.3s vs 1.7s for the 8-gram scan).
+    // slower at sf0.1 (3.3s vs 1.7s for the 8-gram scan).
     val grams = graft.expressions.VectorExpressions.shinglesN(w, n)
     // two cascaded aggregates instead of count(DISTINCT): the
     // (gram, doc) pre-aggregate avoids the distinct-expand doubling

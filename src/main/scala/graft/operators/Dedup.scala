@@ -1590,7 +1590,7 @@ object Dedup {
     val w = normToks(col(textCol))
     // ceil(n/chunk) chunks, last one partial — the codegen'd chunk
     // kernel (ChunksExpr); the transform(sequence)+slice Column form
-    // is an interpreted HOF and measured ~4× slower (GramProbe)
+    // is an interpreted HOF and measured ~4× slower
     val chunkArr = graft.expressions.VectorExpressions
       .chunksN(w, chunkTokens)
     val chunks = df.select(col(idCol),

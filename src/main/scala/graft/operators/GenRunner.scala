@@ -116,14 +116,8 @@ object GenMain {
           s"Bad parameter '$kv': expected k=v")
       }
     }.toMap
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("graft-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-gen",
+      Runtime.getRuntime.availableProcessors(), 32)
     try run(spark, strategy, in, out, params)
     finally spark.stop()
   }
@@ -144,17 +138,14 @@ object GenMain {
   */
 object ExpireMain {
   def main(args: Array[String]): Unit = {
+    val spark = graft.LocalSpark.session("graft-expire", 8, 32)
+    try run(spark, args)
+    finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(in, geomCol, zoomS, minzoomS, mode, out) = args
     val zoom = zoomS.toInt
-    // only stop a session this main created (getOrCreate may hand us a
-    // host session, e.g. under test)
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val cfg = TileCover.Config(zoom, mode match {
       case "boundary-only" => TileCover.BoundaryOnly
       case "full-area"     => TileCover.FullArea
@@ -190,7 +181,6 @@ object ExpireMain {
     val n = writeStreamed(rolled, out, limits.maxTilesOverall)
     osmFrames.foreach(_.unpersistBacking())
     println(s"wrote $n tiles to $out")
-    if (!preExisting) spark.stop()
   }
 
   /** Writes the tile (or, for a `.geojson` name, geojson-feature)

@@ -384,7 +384,7 @@ object VectorStore {
     // materialized once (≤ |queries| · nprobe rows): the pruning
     // collect and the cells join would otherwise each re-run the
     // crossJoin + ranking window. Deliberately EAGER: a lazy pin was
-    // A/B-measured (family MiniBench 12.0 s lazy vs 11.6 s eager) —
+    // A/B-measured (family subset bench 12.0 s lazy vs 11.6 s eager) —
     // the barrier job is ~ms on the tiny probe set.
     val probes = q.crossJoin(cent)
       .select(Seq(col("qid"), col("cid"),

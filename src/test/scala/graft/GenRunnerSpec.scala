@@ -95,7 +95,9 @@ class GenRunnerSpec extends SparkSpecBase {
     val out = s"$dir/tiles.txt"
     Seq(Tuple1(rectEwkb(100, 100, 4, 4, grid = 1024)))
       .toDF("geom").write.parquet(in)
-    ExpireMain.main(Array(in, "geom", "10", "8", "full-area", out))
+    ExpireMain.run(spark, Array(in, "geom", "10", "8", "full-area", out))
+    // run uses the session it is given as configured (the suite's)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     val lines = new String(Files.readAllBytes(
       java.nio.file.Paths.get(out)), "UTF-8").split("\n")
     assert(lines.nonEmpty)

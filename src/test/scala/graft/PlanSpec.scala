@@ -284,12 +284,12 @@ class PlanSpec extends SparkSpecBase {
     // scan; the keep/drop join back to the batch is a hash equi-join
     "q159_semantic_incremental",
     // SQ8 flat scan vs the bounded broadcast probe set — the same
-    // exact-scoring contract (SqIndexStore.scala probe Scaladoc);
+    // exact-scoring contract (VectorStore.scanSq8 Scaladoc);
     // q133 is the SQ8 shortlist + semi-join exact refine over it
     "q132_sq8_topk", "q133_sq8_rerank",
     // IVF-SQ8: the same ≤256-row broadcast coarse rank as q25/q122,
     // then a HASH join of probes onto the partition-pruned SQ8 cells
-    // (IvfSqIndexStore.probeCandidates Scaladoc); q135 adds the
+    // (VectorStore.probe Scaladoc); q135 adds the
     // semi-join exact refine over the bounded shortlist
     "q134_ivfsq_topk", "q135_ivfsq_rerank",
     // single-row broadcast corpus stats (N, avgdl / doc count / Σw;

@@ -31,14 +31,7 @@ object SparkSpecBase {
   @volatile private var started = false
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSpark.session("graft-test", 4, 4)
     started = true
     s
   }
