@@ -39,8 +39,8 @@ import graft.sources.OsmXml.OsmDataFrames
   */
 object ClassicPipeline {
 
-  /** The four output tables. `backing` holds the RDDs of rows the
-    * pipeline materialized for them (restricted runs only). */
+  /** The four output tables. `backing` holds the RDDs of rows
+    * [[derive]] materialized for them (none for [[run]]). */
   final case class Tables4(point: DataFrame, line: DataFrame,
       polygon: DataFrame, roads: DataFrame,
       backing: Seq[RDD[_]] = Nil) {
@@ -201,8 +201,46 @@ object ClassicPipeline {
         "left_semi")
     }.getOrElse(df)
 
-  def run(osm: OsmDataFrames, style: Style, settings: Settings = Settings(),
+  /** The four tables as lazy plans: every action on a table derives
+    * it again (and roads is the line plan again). For callers that read
+    * each table once. */
+  def run(osm: OsmDataFrames, style: Style,
+      settings: Settings = Settings()): Tables4 =
+    tables(rows(osm, style, settings, Subset()), Nil)
+
+  /** The four tables for callers with several sinks (table writes, a
+    * live load): the point, line and polygon rows become ONE plan,
+    * tagged by table and materialized once, so every sink reads the
+    * stored rows and roads is the stored line rows filtered by the
+    * roads flag. Release them with `unpersistBacking` once every sink
+    * ran. */
+  def derive(osm: OsmDataFrames, style: Style, settings: Settings = Settings(),
       subset: Subset = Subset()): Tables4 = {
+    val parts = rows(osm, style, settings, subset)
+    val (tagged, rdd) = materialize(parts.zipWithIndex
+      .map { case (df, t) => df.withColumn("__t", lit(t)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true)))
+    tables(parts.zipWithIndex.map { case (df, t) =>
+      tagged.where(col("__t") === t).select(df.columns.map(col): _*)
+    }, Seq(rdd))
+  }
+
+  /** Point, line (roads flag included) and polygon rows → the four
+    * tables. */
+  private def tables(rows: Seq[DataFrame], backing: Seq[RDD[_]]): Tables4 = {
+    val Seq(point, lines, polygon) = rows
+    Tables4(
+      point = point,
+      line = lines.drop("__roads"),
+      polygon = polygon,
+      roads = lines.where(col("__roads")).drop("__roads"),
+      backing = backing)
+  }
+
+  /** The derivation as three lazy plans: point, line (with the
+    * `__roads` flag) and polygon rows. */
+  private def rows(osm: OsmDataFrames, style: Style, settings: Settings,
+      subset: Subset): Seq[DataFrame] = {
     // plain values: the geometry UDFs must not capture `settings`,
     // which holds the tag transform's closures
     val srid = settings.srid
@@ -447,26 +485,7 @@ object ClassicPipeline {
         col("__z").as("z_order"), col("__pg._1").as("geom"),
         format_string("%g", col("__pg._2")).cast("float").as("way_area"))
 
-    val line = wayLineRows.unionByName(relLineRows)
-    val tables = Seq(points, line, wayPolyRows.unionByName(relPolyRows))
-    val (Seq(point, lines, polygon), backing) =
-      if (subset == Subset()) (tables, Nil)
-      else {
-        // a restricted run feeds several sinks (table writes, the live
-        // load): its rows become ONE plan, tagged by table and
-        // materialized once, so the sinks read stored rows
-        val (tagged, rdd) = materialize(tables.zipWithIndex
-          .map { case (df, t) => df.withColumn("__t", lit(t)) }
-          .reduce(_.unionByName(_, allowMissingColumns = true)))
-        (tables.zipWithIndex.map { case (df, t) =>
-          tagged.where(col("__t") === t).select(df.columns.map(col): _*)
-        }, Seq(rdd))
-      }
-    Tables4(
-      point = point,
-      line = lines.drop("__roads"),
-      polygon = polygon,
-      roads = lines.where(col("__roads")).drop("__roads"),
-      backing = backing)
+    Seq(points, wayLineRows.unionByName(relLineRows),
+      wayPolyRows.unionByName(relPolyRows))
   }
 }

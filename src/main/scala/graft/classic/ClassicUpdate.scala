@@ -114,7 +114,7 @@ object ClassicUpdate {
       ids.where(col("kind") === kind).select(col("id"))
     val (nodeIds, wayIds, relIds) = (idsOf("n"), idsOf("w"), idsOf("r"))
 
-    val rederived = ClassicPipeline.run(after, style, settings,
+    val rederived = ClassicPipeline.derive(after, style, settings,
       ClassicPipeline.Subset(Some(nodeIds), Some(wayIds), Some(relIds)))
     Delta(nodeIds, wayIds, relIds, rederived,
       backing = idsRdd +: rederived.backing)

@@ -154,93 +154,15 @@ object Main {
     // the hstore extension is needed for -k/-j AND for any -z column
     val needHstore = o.hstore || o.hstoreColumns.nonEmpty
 
-    if (!o.append) {
-      val t = ClassicPipeline.run(osm, style, settings)
-      // --slim: persist the middle so --append can pick up from here
-      // (the flat-nodes/slim-tables analog: the raw entity frames)
-      if (o.slim && !o.drop) {
-        osm.nodes.write.mode("overwrite").parquet(s"$out/${o.middleDir}/nodes")
-        osm.ways.write.mode("overwrite").parquet(s"$out/${o.middleDir}/ways")
-        osm.relations.write.mode("overwrite")
-          .parquet(s"$out/${o.middleDir}/relations")
-      }
-      // the osm2pgsql_properties analog (src/osm2pgsql.cpp:102-145):
-      // import settings + the single input's PBF-header replication
-      // info when present, so `replication init` can start from the
-      // import alone (store_data_properties)
-      val replProps = (o.inputFiles match {
-        case Seq(single) if single.endsWith(".pbf") =>
-          scala.util.Try(graft.sources.OsmPbf.readHeader(single)).toOption
-        case _ => None
-      }).map { h =>
-        h.replicationBaseUrl.map("replication_base_url" -> _).toMap ++
-          h.replicationSequence
-            .map(s => "replication_sequence_number" -> s.toString) ++
-          h.replicationTimestamp
-            .map(t => "replication_timestamp" -> t.toString)
-      }.getOrElse(Map.empty)
-      graft.sinks.Properties.save(spark, s"$out/properties",
-        graft.sinks.Properties.importProperties(osm,
-          attributes = o.extraAttributes, prefix = o.prefix,
-          updatable = o.slim && !o.drop, output = o.output,
-          // the reference stores the ABSOLUTE style path
-          // (src/osm2pgsql.cpp:121-128); "default.style" marks the
-          // built-in style
-          style = o.styleFile.map(f => java.nio.file.Paths.get(f)
-            .toAbsolutePath.toString).getOrElse("default.style"),
-          // the reference stores the ABSOLUTE flat-nodes path
-          // (src/osm2pgsql.cpp:210)
-          flatNodeFile = o.flatNodes.map(f => java.nio.file.Paths
-            .get(f).toAbsolutePath.toString).getOrElse("")) ++ replProps)
-      tablesOf(o, t).foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$out/$name")
-      }
-    } else appendClassic(spark, o, osm, style, settings, stored,
+    if (!o.append) importClassic(spark, o, osm, style, settings, pgTables,
+      liveDsn, needHstore)
+    else appendClassic(spark, o, osm, style, settings, stored,
       liveLoad = delta => liveDsn.foreach { dsn =>
         val postgis =
           graft.sinks.ClassicPgLoad.prepareServer(dsn, needHstore)
         graft.sinks.ClassicPgLoad.append(pgTables, delta, dsn,
           o.tableSchema, o.hstoreAll, postgis)
       })
-
-    // create-mode database step: live load from the landed parquet
-    // (zero recompute — exactly the written rows), or the load
-    // artifacts when the server is unreachable
-    if (!o.append) o.database.foreach { dsn =>
-      // the --drop import is not updatable: no osm_id index either way
-      val updatable = o.slim && !o.drop
-      liveDsn match {
-        case Some(live) =>
-          val postgis =
-            graft.sinks.ClassicPgLoad.prepareServer(live, needHstore)
-          pgTables.foreach { t =>
-            graft.sinks.ClassicPgLoad.createLoad(t,
-              spark.read.parquet(s"$out/${t.name}"), live, o.tableSchema,
-              o.hstoreAll, updatable, postgis,
-              hstoreIndex = o.hstoreAddIndex,
-              tablespace = o.tablespaceMainData,
-              tablespaceIndex = o.tablespaceMainIndex)
-          }
-        case None =>
-          System.err.println(s"[graft] '$dsn' unreachable — writing " +
-            "DDL + COPY artifacts instead of loading live")
-          val ddl = pgTables.flatMap { t =>
-            val (create, postLoad) = graft.sinks.PgClassic.createStatements(
-              t, o.tableSchema, updatable, hstoreIndex = o.hstoreAddIndex,
-              tablespace = o.tablespaceMainData,
-              tablespaceIndex = o.tablespaceMainIndex)
-            create ++ postLoad
-          }
-          java.nio.file.Files.writeString(out.resolve("ddl.sql"),
-            ddl.mkString("", ";\n", ";\n"))
-          pgTables.foreach { t =>
-            graft.sinks.PgClassic.copyLines(
-              graft.sinks.PgClassic.copyFrame(
-                spark.read.parquet(s"$out/${t.name}"), t, o.hstoreAll),
-              t).write.mode("overwrite").text(s"$out/copy/${t.name}")
-          }
-      }
-    }
 
     // expire: dirty tiles of every tagged entity processed this run
     // (points included — the parquet point table carries lon/lat, not
@@ -294,6 +216,108 @@ object Main {
     s"${o.prefix}_line"    -> t.line,
     s"${o.prefix}_polygon" -> t.polygon,
     s"${o.prefix}_roads"   -> t.roads)
+
+  /** The classic import (src/osm2pgsql.cpp:47-83). The tables are
+    * derived once and materialized ([[ClassicPipeline.derive]]); the
+    * middle, the properties file and the four table writes then run
+    * side by side ([[graft.operators.Par.overlap]]), and the stored
+    * rows are released. The database step reads the landed parquet
+    * with its known schema: exactly the written rows, no inference
+    * job. A reachable `-d` gets the four live loads side by side, or
+    * one at a time under -I (the reference's parallel table
+    * post-processing, src/output-pgsql.cpp:168-182); an unreachable
+    * one gets the load artifacts. */
+  private def importClassic(spark: SparkSession, o: Options,
+      osm: OsmDataFrames, style: graft.classic.Style,
+      settings: ClassicPipeline.Settings,
+      pgTables: Seq[graft.sinks.PgClassic.ClassicTable],
+      liveDsn: Option[String], needHstore: Boolean): Unit = {
+    val out = java.nio.file.Paths.get(o.outputDir)
+    // the osm2pgsql_properties analog (src/osm2pgsql.cpp:102-145):
+    // import settings + the single input's PBF-header replication
+    // info when present, so `replication init` can start from the
+    // import alone (store_data_properties)
+    def saveProperties(): Unit = {
+      val replProps = (o.inputFiles match {
+        case Seq(single) if single.endsWith(".pbf") =>
+          scala.util.Try(graft.sources.OsmPbf.readHeader(single)).toOption
+        case _ => None
+      }).map { h =>
+        h.replicationBaseUrl.map("replication_base_url" -> _).toMap ++
+          h.replicationSequence
+            .map(s => "replication_sequence_number" -> s.toString) ++
+          h.replicationTimestamp
+            .map(t => "replication_timestamp" -> t.toString)
+      }.getOrElse(Map.empty)
+      graft.sinks.Properties.save(spark, s"$out/properties",
+        graft.sinks.Properties.importProperties(osm,
+          attributes = o.extraAttributes, prefix = o.prefix,
+          updatable = o.slim && !o.drop, output = o.output,
+          // the reference stores the ABSOLUTE style path
+          // (src/osm2pgsql.cpp:121-128); "default.style" marks the
+          // built-in style
+          style = o.styleFile.map(f => java.nio.file.Paths.get(f)
+            .toAbsolutePath.toString).getOrElse("default.style"),
+          // the reference stores the ABSOLUTE flat-nodes path
+          // (src/osm2pgsql.cpp:210)
+          flatNodeFile = o.flatNodes.map(f => java.nio.file.Paths
+            .get(f).toAbsolutePath.toString).getOrElse("")) ++ replProps)
+    }
+    // --slim: persist the middle so --append can pick up from here
+    // (the flat-nodes/slim-tables analog: the raw entity frames)
+    val middle =
+      if (!o.slim || o.drop) Nil
+      else Seq("nodes" -> osm.nodes, "ways" -> osm.ways,
+        "relations" -> osm.relations)
+        .map { case (stream, df) => s"${o.middleDir}/$stream" -> df }
+    val t = ClassicPipeline.derive(osm, style, settings)
+    val named = tablesOf(o, t)
+    try graft.operators.Par.overlap(spark)(
+      (middle ++ named).map { case (name, df) =>
+        () => df.write.mode("overwrite").parquet(s"$out/$name")
+      } :+ (() => saveProperties()): _*)
+    finally t.unpersistBacking()
+    val schemas = named.map { case (name, df) => name -> df.schema }.toMap
+    def landed(name: String): DataFrame =
+      spark.read.schema(schemas(name)).parquet(s"$out/$name")
+
+    o.database.foreach { dsn =>
+      // the --drop import is not updatable: no osm_id index either way
+      val updatable = o.slim && !o.drop
+      liveDsn match {
+        case Some(live) =>
+          val postgis =
+            graft.sinks.ClassicPgLoad.prepareServer(live, needHstore)
+          graft.operators.Par.overlap(spark,
+            width = if (o.disableParallelIndexing) 1 else Int.MaxValue)(
+            pgTables.map { t => () =>
+              graft.sinks.ClassicPgLoad.createLoad(t, landed(t.name), live,
+                o.tableSchema, o.hstoreAll, updatable, postgis,
+                hstoreIndex = o.hstoreAddIndex,
+                tablespace = o.tablespaceMainData,
+                tablespaceIndex = o.tablespaceMainIndex)
+            }: _*)
+        case None =>
+          System.err.println(s"[graft] '$dsn' unreachable — writing " +
+            "DDL + COPY artifacts instead of loading live")
+          val ddl = pgTables.flatMap { t =>
+            val (create, postLoad) = graft.sinks.PgClassic.createStatements(
+              t, o.tableSchema, updatable, hstoreIndex = o.hstoreAddIndex,
+              tablespace = o.tablespaceMainData,
+              tablespaceIndex = o.tablespaceMainIndex)
+            create ++ postLoad
+          }
+          java.nio.file.Files.writeString(out.resolve("ddl.sql"),
+            ddl.mkString("", ";\n", ";\n"))
+          pgTables.foreach { t =>
+            graft.sinks.PgClassic.copyLines(
+              graft.sinks.PgClassic.copyFrame(landed(t.name), t,
+                o.hstoreAll), t).write.mode("overwrite")
+              .text(s"$out/copy/${t.name}")
+          }
+      }
+    }
+  }
 
   /** The reference's append flow (src/osmdata.cpp:371-406): change ids
     * → dependency closure → re-derive subset → delete-then-insert

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CoGroup,
   FlatMapGroupsWithState, GlobalLimit, Join, MapGroups,
   RepartitionOperation, Sort, Window => LWindow}
@@ -73,5 +75,75 @@ object Par {
     }) df
     else if (df.rdd.getNumPartitions < target) df.repartition(target)
     else df
+  }
+
+  /** Runs independent driver-side branches side by side and returns
+    * their results in branch order — the reference's thread pool for
+    * per-table post-processing (src/output-pgsql.cpp:168-182).
+    *
+    * The pool is made per call: `min(width, branches,
+    * defaultParallelism)` threads, so `width = 1` runs the branches
+    * one at a time, in order, on one thread. Pool threads inherit the
+    * caller's Spark local properties (job group, tags, scheduler
+    * pool), and each branch adds its own job tag on top, so the
+    * caller's own group and tags are left as they were.
+    *
+    * On the first failure no further branch starts, the branches' tags
+    * are cancelled (again every 50 ms until the branches end, so a job
+    * a branch submits after the first cancel is cancelled too), every
+    * thread is joined, and that failure is rethrown with the other
+    * branches' failures added as suppressed. */
+  def overlap[A](spark: SparkSession, width: Int = Int.MaxValue)(
+      branches: (() => A)*): Seq[A] = {
+    require(width >= 1, s"overlap width must be >= 1, got $width")
+    val sc = spark.sparkContext
+    val n = branches.size
+    val call = java.util.UUID.randomUUID.toString.take(8)
+    val tags = (0 until n).map(i => s"graft-overlap-$call-$i")
+    val results = new Array[Any](n)
+    val errors = new Array[Throwable](n)
+    val first = new AtomicReference[Throwable]()
+    val next = new AtomicInteger(0)
+    def work(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < n && first.get == null) {
+        sc.addJobTag(tags(i))
+        try results(i) = branches(i)()
+        catch {
+          case t: Throwable =>
+            errors(i) = t
+            first.compareAndSet(null, t)
+        } finally sc.removeJobTag(tags(i))
+        i = next.getAndIncrement()
+      }
+    }
+    val threads = Seq(width, n, sc.defaultParallelism).min
+    val pool = (0 until threads).map { k =>
+      val t = new Thread(() => work(), s"graft-overlap-$call-t$k")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    // an interrupted caller fails the call like a branch would, but
+    // still waits for the threads it started
+    var interrupted = false
+    pool.foreach { t =>
+      while (t.isAlive) {
+        try t.join(50)
+        catch {
+          case e: InterruptedException =>
+            first.compareAndSet(null, e)
+            interrupted = true
+        }
+        if (first.get != null) tags.foreach(sc.cancelJobsWithTag)
+      }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    Option(first.get) match {
+      case Some(e) =>
+        errors.filter(x => x != null && (x ne e)).foreach(e.addSuppressed)
+        throw e
+      case None => results.toSeq.asInstanceOf[Seq[A]]
+    }
   }
 }

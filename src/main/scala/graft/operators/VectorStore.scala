@@ -476,18 +476,13 @@ object VectorStore {
     require(rerank >= k, s"rerank window $rerank must be >= k $k")
     // the two probes are independent until the final semi-join, and
     // each runs a chain of small driver actions (probe pin, pruning
-    // collect, store listing) during CONSTRUCTION — build them on two
-    // threads so their jobs interleave instead of queuing
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fShortlist = Future(topK(probe(spark, pqPath, queries, Pq(m = m),
-      nprobe).candidates, "score", rerank).select(col("qid"), col("nid")))
-    val fCands =
-      Future(probe(spark, flatPath, queries, Flat, nprobe).candidates)
-    val shortlist = Await.result(fShortlist, Duration.Inf)
-    topK(Await.result(fCands, Duration.Inf)
-      .join(shortlist, Seq("qid", "nid"), "left_semi"), "cos", k)
+    // collect, store listing) during CONSTRUCTION — build them side by
+    // side so their jobs interleave instead of queuing
+    val Seq(shortlist, cands) = Par.overlap(spark)(
+      () => topK(probe(spark, pqPath, queries, Pq(m = m), nprobe)
+        .candidates, "score", rerank).select(col("qid"), col("nid")),
+      () => probe(spark, flatPath, queries, Flat, nprobe).candidates)
+    topK(cands.join(shortlist, Seq("qid", "nid"), "left_semi"), "cos", k)
   }
 
   /** Rerank the ADC shortlist by the cosine against the PQ

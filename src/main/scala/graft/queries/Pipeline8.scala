@@ -214,17 +214,13 @@ object Pipeline8 extends Registry {
           .toBigInteger.toString)
     }
     // the four formats are independent single-row collects — run them
-    // on four threads so the jobs interleave instead of queuing
+    // side by side so the jobs interleave instead of queuing
     // (guide §2.6; each was ~0.25 s of driver round-trips in series)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Seq(
-      Future(digestRow("o5m", O5m.read(s, Seq(dir.resolve("f.o5m").toString)))),
-      Future(digestRow("opl", Opl.read(s, Seq(dir.resolve("f.opl").toString)))),
-      Future(digestRow("pbf", OsmPbf.read(s, dir.resolve("f.osm.pbf").toString))),
-      Future(digestRow("xml", OsmXml.read(s, Seq(fixture)))))
-      .map(Await.result(_, Duration.Inf))
+    graft.operators.Par.overlap(s)(
+      () => digestRow("o5m", O5m.read(s, Seq(dir.resolve("f.o5m").toString))),
+      () => digestRow("opl", Opl.read(s, Seq(dir.resolve("f.opl").toString))),
+      () => digestRow("pbf", OsmPbf.read(s, dir.resolve("f.osm.pbf").toString)),
+      () => digestRow("xml", OsmXml.read(s, Seq(fixture))))
   }
 
   /** Pinned constants — the counter values are the reference's own

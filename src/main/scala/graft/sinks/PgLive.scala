@@ -133,7 +133,8 @@ object PgLive {
     * (table_t::start/stop, src/table.cpp:64-232; flex-table.cpp):
     * the `create` statements (drop, create), COPY of `lines` into
     * `qualified` when there are rows to load, then the `postLoad`
-    * batch (SET LOGGED, indexes, ANALYZE).
+    * batch (SET LOGGED, indexes, ANALYZE). Each batch is one psql
+    * call, which stops at its first failing statement.
     *
     * The transport is chosen here: N concurrent per-partition COPY
     * writers ([[PgWire.copyPartitioned]], staged and published
@@ -142,12 +143,14 @@ object PgLive {
     * cluster; otherwise one psql session fed through the driver. */
   def loadTable(dsn: String, qualified: String, create: Seq[String],
       lines: Option[Dataset[String]], postLoad: Seq[String]): Unit = {
-    create.foreach(s => execOrThrow(dsn, s + ";"))
+    def batch(sql: Seq[String]): Unit =
+      if (sql.nonEmpty) execOrThrow(dsn, sql.map(_ + ";\n").mkString)
+    batch(create)
     lines.foreach { l =>
       if (PgWire.reachableFromExecutors(l.sparkSession, dsn))
         PgWire.copyPartitioned(l, dsn, qualified)
       else copyInto(dsn, qualified, l.toLocalIterator().asScala)
     }
-    postLoad.foreach(s => execOrThrow(dsn, s + ";"))
+    batch(postLoad)
   }
 }

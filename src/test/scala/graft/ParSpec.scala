@@ -8,7 +8,12 @@ import graft.operators.Par
   * it widens ONLY an under-partitioned shuffle-free frame, and is the
   * identity everywhere else — the property that makes it free at real
   * scale and safe to compose (no AQE stage materialization at
-  * query-construction time, no effect on streaming plans). */
+  * query-construction time, no effect on streaming plans).
+  *
+  * And `overlap`'s: results in branch order, width 1 is sequential,
+  * a failure cancels the siblings' jobs and is rethrown promptly, no
+  * pool thread outlives the call, and the caller's job group and tags
+  * are left as they were. */
 class ParSpec extends SparkSpecBase {
 
   private val target = spark.sparkContext.defaultParallelism
@@ -79,5 +84,115 @@ class ParSpec extends SparkSpecBase {
     assert("PushedFilters: \\[[^\\]]*GreaterThan".r.findFirstIn(plan)
       .isDefined, s"filter must push to the scan:\n$plan")
     assert(fanned.count() == 499)
+  }
+
+  private def overlapThreads: Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-overlap-"))
+  }
+
+  test("overlap returns results in branch order") {
+    // later branches finish first
+    val got = Par.overlap(spark)((0 until 6).map { i => () =>
+      Thread.sleep(20L * (6 - i)); i * 10
+    }: _*)
+    assert(got == (0 until 6).map(_ * 10))
+    assert(overlapThreads.isEmpty, "a pool thread outlived the call")
+  }
+
+  test("overlap at width 1 runs the branches one at a time, in order") {
+    val active = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Par.overlap(spark, width = 1)((0 until 5).map { i => () =>
+      val now = active.incrementAndGet()
+      peak.accumulateAndGet(now, math.max)
+      order.add(i)
+      threads.add(Thread.currentThread.getName)
+      Thread.sleep(20)
+      active.decrementAndGet()
+    }: _*)
+    import scala.jdk.CollectionConverters._
+    assert(peak.get == 1)
+    assert(order.asScala.toSeq == (0 until 5))
+    assert(threads.asScala.toSet.size == 1)
+    assert(overlapThreads.isEmpty, "a pool thread outlived the call")
+  }
+
+  test("a failing branch cancels a sibling's long Spark job, and the " +
+      "first failure is rethrown within seconds") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("parspec-caller", "caller's group")
+    sc.addJobTag("parspec-caller-tag")
+    try {
+      val groupBefore = sc.getLocalProperty("spark.jobGroup.id")
+      val tagsBefore = sc.getJobTags()
+      val boom = new IllegalStateException("boom")
+      val t0 = System.nanoTime()
+      // the sibling's own branch tag, so the failing branch waits for
+      // that job, not for one the status store still lists as active
+      val siblingTag = new java.util.concurrent.atomic.AtomicReference[String]()
+      val e = intercept[IllegalStateException](Par.overlap(spark)(
+        // ~10 minutes of tasks unless cancelled; each element passes
+        // the task's kill check, and the filter hides the iterator's
+        // known size from count()
+        () => {
+          siblingTag.set((sc.getJobTags() - "parspec-caller-tag").head)
+          sc.parallelize(0 until 240000, 4)
+            .map { i => Thread.sleep(10); i }.filter(_ >= 0).count()
+        },
+        () => {
+          val deadline = System.nanoTime() + 30L * 1000000000L
+          while (Option(siblingTag.get).forall(t =>
+              sc.statusTracker.getJobIdsForTag(t).isEmpty) &&
+              System.nanoTime() < deadline) Thread.sleep(10)
+          throw boom
+        }))
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(e eq boom, "the first failure must be rethrown as it is")
+      assert(seconds < 10, s"overlap took $seconds s to give up")
+      assert(e.getSuppressed.exists(s =>
+        String.valueOf(s.getMessage).contains("cancelled")),
+        s"the sibling's job should end as cancelled: " +
+          e.getSuppressed.map(x => s"${x.getClass.getName}: ${x.getMessage}")
+            .mkString("; ") + s" (${e.getSuppressed.length} suppressed)")
+      assert(overlapThreads.isEmpty, "a pool thread outlived the call")
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(25)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty,
+        "a cancelled job is still running")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == groupBefore)
+      assert(sc.getJobTags() == tagsBefore)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeJobTag("parspec-caller-tag")
+    }
+  }
+
+  test("overlap leaves the caller's job group and tags as they were") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("parspec-group", "caller's group")
+    sc.addJobTag("parspec-tag")
+    try {
+      val seen = Par.overlap(spark)((0 until 3).map { _ => () =>
+        val tags = sc.getJobTags()
+        spark.range(10).count()
+        (sc.getLocalProperty("spark.jobGroup.id"), tags)
+      }: _*)
+      // branches run in the caller's group, under its tag plus their own
+      seen.foreach { case (group, tags) =>
+        assert(group == "parspec-group")
+        assert(tags.contains("parspec-tag") && tags.size == 2, tags)
+      }
+      assert(seen.map(_._2).distinct.size == 3, "one tag per branch")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "parspec-group")
+      assert(sc.getJobTags() == Set("parspec-tag"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeJobTag("parspec-tag")
+    }
   }
 }

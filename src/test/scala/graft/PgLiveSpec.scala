@@ -493,4 +493,53 @@ class PgLiveSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
+
+  test("classic --slim -d -I: the one-at-a-time live loads hold the " +
+      "parquet rows") {
+    val dsn = PgTestCluster.dsn
+    val dir = Files.createTempDirectory("graft-classic-seq")
+    val kinds = Seq("point", "line", "polygon", "roads")
+    try {
+      val base = new AppendIvmSpec.GridWorld(6).write(dir, "base", "o5m")
+      val out = dir.resolve("out").toString
+      Main.run(spark, Options.parse(Seq("--slim", "-d", dsn, "-I",
+        "-p", "graft_live_seq", "--output-dir", out, base.toString)))
+      kinds.foreach { k =>
+        val t = s"graft_live_seq_$k"
+        val landed = spark.read.parquet(s"$out/$t").count()
+        assert(landed > 0, s"$t is empty")
+        assert(liveCount(q(t)) == landed, t)
+      }
+    } finally {
+      psql(kinds.map(k =>
+        s"DROP TABLE IF EXISTS ${q(s"graft_live_seq_$k")};").mkString)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("classic --slim -d with a missing index tablespace fails with " +
+      "the server's message, and leaves no Spark job running") {
+    val dsn = PgTestCluster.dsn
+    val dir = Files.createTempDirectory("graft-classic-nosuch")
+    val kinds = Seq("point", "line", "polygon", "roads")
+    try {
+      val base = new AppendIvmSpec.GridWorld(7).write(dir, "base", "o5m")
+      val e = intercept[IllegalStateException](Main.run(spark,
+        Options.parse(Seq("--slim", "-d", dsn,
+          "--tablespace-main-index", "nosuch", "-p", "graft_live_nosuch",
+          "--output-dir", dir.resolve("out").toString, base.toString))))
+      assert(e.getMessage.contains("tablespace \"nosuch\" does not exist"),
+        e.getMessage)
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (tracker.getActiveJobIds().nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(25)
+      assert(tracker.getActiveJobIds().isEmpty,
+        "a Spark job of the failed load is still running")
+    } finally {
+      psql(kinds.map(k =>
+        s"DROP TABLE IF EXISTS ${q(s"graft_live_nosuch_$k")};").mkString)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }
