@@ -51,12 +51,20 @@ object ClassicPipeline {
 
   /** Eager local checkpoint: `df` runs once and its lineage is cut, so
     * every consumer reads the stored blocks. Returns the frame and the
-    * RDD holding those blocks, for release. */
-  private[classic] def materialize(df: DataFrame): (DataFrame, RDD[_]) = {
-    val cp = df.localCheckpoint()
-    (cp, cp.queryExecution.logical.collectFirst {
+    * RDD holding those blocks, for release; a failed or cancelled run
+    * releases the blocks it stored before rethrowing. */
+  def materialize(df: DataFrame): (DataFrame, RDD[_]) = {
+    val cp = df.localCheckpoint(eager = false)
+    val rdd = cp.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd
-    }.get)
+    }.get
+    try rdd.count()
+    catch {
+      case t: Throwable =>
+        rdd.unpersist(blocking = false)
+        throw t
+    }
+    (cp, rdd)
   }
 
   /** value_to_bool (src/osmtypes.hpp:162-174) as a Column. */

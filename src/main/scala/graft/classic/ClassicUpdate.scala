@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Middle
+import graft.operators.{Middle, Par}
 import graft.sources.OsmXml.OsmDataFrames
 
 /** Append mode for the classic output (reference: src/osmdata.cpp +
@@ -40,6 +40,34 @@ object ClassicUpdate {
       // merged frames' unpersistBacking()
       backing = base.backing ++ ch.backing)
 
+  /** [[applyChanges]] run once: the three merged streams are
+    * materialized side by side, so the middle writes, the dependency
+    * closure and the re-derivation all read the stored rows. `backing`
+    * holds exactly those rows (the inputs' own caches stay with the
+    * inputs); a failure releases the streams already stored. */
+  def mergeOnce(base: OsmDataFrames, ch: OsmDataFrames): OsmDataFrames = {
+    val spark = base.nodes.sparkSession
+    val merged = applyChanges(base, ch)
+    val stored = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+    val streams = Seq("nodes" -> merged.nodes, "ways" -> merged.ways,
+      "relations" -> merged.relations)
+    val Seq(nodes, ways, relations) =
+      try Par.overlap(spark)(streams.map { case (name, df) => () =>
+        Par.describe(spark, s"merge $name") {
+          val (cp, rdd) = ClassicPipeline.materialize(df)
+          stored.add(rdd)
+          cp
+        }
+      }: _*)
+      catch {
+        case t: Throwable =>
+          stored.forEach(_.unpersist(blocking = false))
+          throw t
+      }
+    OsmDataFrames(nodes, ways, relations,
+      backing = stored.toArray(Array.empty[RDD[_]]).toSeq)
+  }
+
   /** The append computation's pieces, exposed for sinks that apply
     * delete-then-insert natively (the live PostgreSQL load keys
     * deletes on the id sets and inserts only `rederived`, matching
@@ -48,6 +76,11 @@ object ClassicUpdate {
   final case class Delta(changedNodes: DataFrame, pendingWays: DataFrame,
       pendingRels: DataFrame, rederived: ClassicPipeline.Tables4,
       backing: Seq[RDD[_]] = Nil) {
+    /** The key set of the line, polygon and roads tables: pending ways
+      * ∪ negated pending relations (relation rows key on -id). */
+    val wayKeys: DataFrame = pendingWays.select(col("id"))
+      .unionByName(pendingRels.select((-col("id")).as("id")))
+
     /** Release the materialized id sets and rows; call once every
       * consumer ran. */
     def unpersistBacking(): Unit =
@@ -81,9 +114,9 @@ object ClassicUpdate {
     deltaOn(applyChanges(before, changes), changes, style, settings)
 
   /** [[computeDelta]] against the already-merged entity state `after`
-    * (e.g. the updated middle, re-read from where it was written). The
-    * id closures and the re-derived rows are each materialized once,
-    * so the delta's consumers read stored rows. */
+    * (e.g. the stored streams of [[mergeOnce]]). The id closures and
+    * the re-derived rows are each materialized once, so the delta's
+    * consumers read stored rows; a failure releases what was stored. */
   def deltaOn(after: OsmDataFrames, changes: OsmDataFrames,
       style: Style,
       settings: ClassicPipeline.Settings = ClassicPipeline.Settings())
@@ -114,30 +147,33 @@ object ClassicUpdate {
       ids.where(col("kind") === kind).select(col("id"))
     val (nodeIds, wayIds, relIds) = (idsOf("n"), idsOf("w"), idsOf("r"))
 
-    val rederived = ClassicPipeline.derive(after, style, settings,
-      ClassicPipeline.Subset(Some(nodeIds), Some(wayIds), Some(relIds)))
+    val rederived =
+      try ClassicPipeline.derive(after, style, settings,
+        ClassicPipeline.Subset(Some(nodeIds), Some(wayIds), Some(relIds)))
+      catch {
+        case t: Throwable =>
+          idsRdd.unpersist(blocking = false)
+          throw t
+      }
     Delta(nodeIds, wayIds, relIds, rederived,
       backing = idsRdd +: rederived.backing)
   }
 
   /** Step 4 of [[incrementalUpdate]]: delete-then-insert against the
-    * previous table state (relations key with negative ids). */
+    * previous table state, one anti-join per table: the point table
+    * keys on the changed nodes, the way tables on [[Delta.wayKeys]]. */
   def applyDelta(prev: ClassicPipeline.Tables4,
       d: Delta): ClassicPipeline.Tables4 = {
-    def minus(prevT: DataFrame, ids: DataFrame, negate: Boolean): DataFrame = {
-      val keyed = ids.select(
-        (if (negate) -col("id") else col("id")).as("__del"))
-      prevT.join(keyed, col("osm_id") === col("__del"), "left_anti")
-    }
+    def minus(prevT: DataFrame, ids: DataFrame): DataFrame =
+      prevT.join(ids.select(col("id").as("__del")),
+        col("osm_id") === col("__del"), "left_anti")
 
     ClassicPipeline.Tables4(
-      point = minus(prev.point, d.changedNodes, negate = false)
+      point = minus(prev.point, d.changedNodes)
         .unionByName(d.rederived.point),
-      line = minus(minus(prev.line, d.pendingWays, negate = false),
-        d.pendingRels, negate = true).unionByName(d.rederived.line),
-      polygon = minus(minus(prev.polygon, d.pendingWays, negate = false),
-        d.pendingRels, negate = true).unionByName(d.rederived.polygon),
-      roads = minus(minus(prev.roads, d.pendingWays, negate = false),
-        d.pendingRels, negate = true).unionByName(d.rederived.roads))
+      line = minus(prev.line, d.wayKeys).unionByName(d.rederived.line),
+      polygon = minus(prev.polygon, d.wayKeys)
+        .unionByName(d.rederived.polygon),
+      roads = minus(prev.roads, d.wayKeys).unionByName(d.rederived.roads))
   }
 }

@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.classic.{ClassicPipeline, ClassicUpdate, StyleFile}
+import graft.model.OsmSchema
 import graft.sources.{OsmSource, Validate}
 import graft.sources.OsmXml.OsmDataFrames
 
@@ -61,7 +62,14 @@ object Main {
     else s"${seconds}s (${seconds / 3600}h ${seconds / 60 % 60}m " +
       s"${seconds % 60}s)"
 
-  def run(spark: SparkSession, o0: Options): Unit = {
+  /** One osm2pgsql run on `spark`. Every job it starts carries a job
+    * description: `import` or `append`, extended by each side-by-side
+    * branch (`append: write planet_osm_line`). */
+  def run(spark: SparkSession, o0: Options): Unit =
+    graft.operators.Par.describe(spark, if (o0.append) "append" else "import")(
+      runDescribed(spark, o0))
+
+  private def runDescribed(spark: SparkSession, o0: Options): Unit = {
     // append runs resolve their effective options against the stored
     // import properties FIRST (check_and_update_properties,
     // src/osm2pgsql.cpp:300-309): unspecified options inherit the
@@ -157,49 +165,13 @@ object Main {
     if (!o.append) importClassic(spark, o, osm, style, settings, pgTables,
       liveDsn, needHstore)
     else appendClassic(spark, o, osm, style, settings, stored,
-      liveLoad = delta => liveDsn.foreach { dsn =>
+      liveLoad = liveDsn.map { dsn => delta =>
         val postgis =
           graft.sinks.ClassicPgLoad.prepareServer(dsn, needHstore)
         graft.sinks.ClassicPgLoad.append(pgTables, delta, dsn,
-          o.tableSchema, o.hstoreAll, postgis)
+          o.tableSchema, o.hstoreAll, postgis,
+          width = if (o.disableParallelIndexing) 1 else Int.MaxValue)
       })
-
-    // expire: dirty tiles of every tagged entity processed this run
-    // (points included — the parquet point table carries lon/lat, not
-    // EWKB, so the cover comes from the entity frames directly).
-    // Both reference caps apply (src/expire-output.hpp:24-25): the
-    // per-geometry cap inside the cover, the overall cap on the
-    // streamed write — the tile list is never collected whole.
-    if (o.expireZoomMax > 0) {
-      val dest = java.nio.file.Paths.get(
-        o.expireOutput.getOrElse(s"$out/dirty_tiles.txt"))
-      // tile expiry only applies in web-mercator output — the
-      // reference's expire_tiles::from_geometry_if_3857 is a no-op for
-      // any other projection, leaving the expire file empty
-      if (o.srid != graft.geom.Srid.WebMercator)
-        java.nio.file.Files.writeString(dest, "")
-      else {
-        val limits = graft.operators.TileCover.Limits()
-        // hybrid mode is the classic default: polygons larger than
-        // --expire-bbox-size expire boundary-only
-        // (output-pgsql.cpp:462-466, options.hpp:99)
-        val mode =
-          if (o.expireBboxSize > 0)
-            graft.operators.TileCover.Hybrid(o.expireBboxSize)
-          else graft.operators.TileCover.FullArea
-        val cover = graft.operators.Expire.fromOsmEntities(osm,
-          graft.operators.TileCover.Config(zoom = o.expireZoomMax,
-            mode = mode),
-          maxTilesPerGeometry = limits.maxTilesPerGeometry)
-        val tiles = graft.operators.Expire.rollup(cover, "x", "y",
-          o.expireZoomMax, o.expireZoomMin)
-        graft.operators.Expire.writeLines(
-          graft.operators.Expire.formatTiles(tiles).orderBy("tile"), dest,
-          limits.maxTilesOverall, append = false,
-          "Overall tile limit reached — dirty-tile list truncated at " +
-            limits.maxTilesOverall)
-      }
-    }
 
     // the JDBC form of the DSN for downstream loaders
     o.database.foreach { dsn =>
@@ -209,21 +181,67 @@ object Main {
     }
   }
 
+  /** Where `-e` writes the dirty-tile list. */
+  private def tileList(o: Options): java.nio.file.Path =
+    java.nio.file.Paths.get(
+      o.expireOutput.getOrElse(s"${o.outputDir}/dirty_tiles.txt"))
+
+  /** Expire: the dirty tiles of every tagged entity processed this run
+    * (points included — the parquet point table carries lon/lat, not
+    * EWKB, so the cover comes from the entity frames directly), written
+    * to `dest`. Both reference caps apply (src/expire-output.hpp:24-25):
+    * the per-geometry cap inside the cover, the overall cap on the
+    * streamed write — the tile list is never collected whole. */
+  private def expireTiles(o: Options, osm: OsmDataFrames,
+      dest: java.nio.file.Path): Unit =
+    // tile expiry only applies in web-mercator output — the
+    // reference's expire_tiles::from_geometry_if_3857 is a no-op for
+    // any other projection, leaving the expire file empty
+    if (o.srid != graft.geom.Srid.WebMercator)
+      java.nio.file.Files.writeString(dest, "")
+    else {
+      val limits = graft.operators.TileCover.Limits()
+      // hybrid mode is the classic default: polygons larger than
+      // --expire-bbox-size expire boundary-only
+      // (output-pgsql.cpp:462-466, options.hpp:99)
+      val mode =
+        if (o.expireBboxSize > 0)
+          graft.operators.TileCover.Hybrid(o.expireBboxSize)
+        else graft.operators.TileCover.FullArea
+      val cover = graft.operators.Expire.fromOsmEntities(osm,
+        graft.operators.TileCover.Config(zoom = o.expireZoomMax,
+          mode = mode),
+        maxTilesPerGeometry = limits.maxTilesPerGeometry)
+      val tiles = graft.operators.Expire.rollup(cover, "x", "y",
+        o.expireZoomMax, o.expireZoomMin)
+      graft.operators.Expire.writeLines(
+        graft.operators.Expire.formatTiles(tiles).orderBy("tile"), dest,
+        limits.maxTilesOverall, append = false,
+        "Overall tile limit reached — dirty-tile list truncated at " +
+          limits.maxTilesOverall)
+    }
+
+  /** `body` as a side-by-side branch named `what`. */
+  private def branch[A](spark: SparkSession, what: String)(
+      body: => A): () => A =
+    () => graft.operators.Par.describe(spark, what)(body)
+
+  /** The prefixed names of the point, line, polygon and roads tables. */
+  private def tableNames(o: Options): Seq[String] =
+    Seq("point", "line", "polygon", "roads").map(t => s"${o.prefix}_$t")
+
   /** The four classic tables under their prefixed names. */
   private def tablesOf(o: Options,
-      t: ClassicPipeline.Tables4): Seq[(String, DataFrame)] = Seq(
-    s"${o.prefix}_point"   -> t.point,
-    s"${o.prefix}_line"    -> t.line,
-    s"${o.prefix}_polygon" -> t.polygon,
-    s"${o.prefix}_roads"   -> t.roads)
+      t: ClassicPipeline.Tables4): Seq[(String, DataFrame)] =
+    tableNames(o).zip(Seq(t.point, t.line, t.polygon, t.roads))
 
   /** The classic import (src/osm2pgsql.cpp:47-83). The tables are
     * derived once and materialized ([[ClassicPipeline.derive]]); the
-    * middle, the properties file and the four table writes then run
-    * side by side ([[graft.operators.Par.overlap]]), and the stored
-    * rows are released. The database step reads the landed parquet
-    * with its known schema: exactly the written rows, no inference
-    * job. A reachable `-d` gets the four live loads side by side, or
+    * middle, the properties file, the four table writes and the `-e`
+    * tile list then run side by side ([[graft.operators.Par.overlap]]),
+    * and the stored rows are released. The database step reads the
+    * landed parquet with its known schema: exactly the written rows, no
+    * inference job. A reachable `-d` gets the four live loads side by side, or
     * one at a time under -I (the reference's parallel table
     * post-processing, src/output-pgsql.cpp:168-182); an unreachable
     * one gets the load artifacts. */
@@ -274,8 +292,11 @@ object Main {
     val named = tablesOf(o, t)
     try graft.operators.Par.overlap(spark)(
       (middle ++ named).map { case (name, df) =>
-        () => df.write.mode("overwrite").parquet(s"$out/$name")
-      } :+ (() => saveProperties()): _*)
+        branch(spark, s"write $name")(
+          df.write.mode("overwrite").parquet(s"$out/$name"))
+      } ++ Seq(branch(spark, "properties")(saveProperties())) ++
+        Option.when(o.expireZoomMax > 0)(
+          branch(spark, "expire")(expireTiles(o, osm, tileList(o)))): _*)
     finally t.unpersistBacking()
     val schemas = named.map { case (name, df) => name -> df.schema }.toMap
     def landed(name: String): DataFrame =
@@ -290,12 +311,13 @@ object Main {
             graft.sinks.ClassicPgLoad.prepareServer(live, needHstore)
           graft.operators.Par.overlap(spark,
             width = if (o.disableParallelIndexing) 1 else Int.MaxValue)(
-            pgTables.map { t => () =>
-              graft.sinks.ClassicPgLoad.createLoad(t, landed(t.name), live,
-                o.tableSchema, o.hstoreAll, updatable, postgis,
-                hstoreIndex = o.hstoreAddIndex,
-                tablespace = o.tablespaceMainData,
-                tablespaceIndex = o.tablespaceMainIndex)
+            pgTables.map { t =>
+              branch(spark, s"load ${t.name}")(
+                graft.sinks.ClassicPgLoad.createLoad(t, landed(t.name), live,
+                  o.tableSchema, o.hstoreAll, updatable, postgis,
+                  hstoreIndex = o.hstoreAddIndex,
+                  tablespace = o.tablespaceMainData,
+                  tablespaceIndex = o.tablespaceMainIndex))
             }: _*)
         case None =>
           System.err.println(s"[graft] '$dsn' unreachable — writing " +
@@ -324,67 +346,84 @@ object Main {
     * against the previous tables (the properties resolution in run()
     * already vetted updatable/prefix/attributes/flat-nodes/output).
     *
-    * Every shared intermediate is computed once. The merged middle is
-    * written first and re-read as the post-change state; the delta
-    * materializes its id closures and re-derived rows; so the live
-    * load (`liveLoad`), the four table writes and the middle swap read
-    * only files and stored rows. The plans read the current files, so
-    * every output is staged as `<name>_new` and swapped in after all
-    * actions ran. */
+    * The stored middle is read with the entity schema and merged with
+    * the changes once ([[ClassicUpdate.mergeOnce]]: three streams
+    * materialized side by side). One overlap then runs the three
+    * middle writes, the `-e` tile list, the new properties timestamp
+    * and the delta: the closure and re-derivation on the stored merge
+    * ([[ClassicUpdate.deltaOn]]), then the four table writes and the
+    * live delete-before-insert (`liveLoad`) side by side. The previous
+    * tables are read with the re-derived rows' schema. The plans read
+    * the current files, so every output is staged as `<name>_new` and
+    * swapped in, with the properties save, only after every branch
+    * succeeded; on a failure the staging is deleted and the current
+    * outputs stay as they were. The stored rows are released either
+    * way. */
   private def appendClassic(spark: SparkSession, o: Options,
       osm: OsmDataFrames, style: graft.classic.Style,
       settings: ClassicPipeline.Settings, stored: Option[Map[String, String]],
-      liveLoad: ClassicUpdate.Delta => Unit): Unit = {
+      liveLoad: Option[ClassicUpdate.Delta => Unit]): Unit = {
     val out = o.outputDir
     val middle = s"$out/${o.middleDir}"
-    def read(path: String) = spark.read.parquet(path)
-    val before = OsmDataFrames(read(s"$middle/nodes"),
-      read(s"$middle/ways"), read(s"$middle/relations"))
-    val prev = ClassicPipeline.Tables4(read(s"$out/${o.prefix}_point"),
-      read(s"$out/${o.prefix}_line"), read(s"$out/${o.prefix}_polygon"),
-      read(s"$out/${o.prefix}_roads"))
-    // updated middle: latest-version-wins merge of base + changes,
-    // re-read with its known schema (no inference job)
-    val merged = ClassicUpdate.applyChanges(before, osm)
-    val Seq(nodes, ways, relations) = Seq("nodes" -> merged.nodes,
-      "ways" -> merged.ways, "relations" -> merged.relations).map {
-      case (stream, df) =>
-        val path = s"${middle}_new/$stream"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.schema(df.schema).parquet(path)
-    }
-    val delta = ClassicUpdate.deltaOn(OsmDataFrames(nodes, ways, relations),
-      osm, style, settings)
-    val named = tablesOf(o, ClassicUpdate.applyDelta(prev, delta))
+    def staged(path: String) = s"${path}_new"
+    val tiles = Option.when(o.expireZoomMax > 0)(tileList(o))
+    val staging = (middle +: tableNames(o).map(n => s"$out/$n")) ++
+      tiles.map(_.toString)
+    val before = OsmDataFrames(
+      spark.read.schema(OsmSchema.node).parquet(s"$middle/nodes"),
+      spark.read.schema(OsmSchema.way).parquet(s"$middle/ways"),
+      spark.read.schema(OsmSchema.relation).parquet(s"$middle/relations"))
+    val merged = ClassicUpdate.mergeOnce(before, osm)
     try {
-      // the live delete-before-insert runs BEFORE the staged swap
-      liveLoad(delta)
-      named.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$out/${name}_new")
+      // written by its branch, read after the overlap joined it
+      var props: Option[Map[String, String]] = None
+      def writeTables(delta: ClassicUpdate.Delta): Unit = {
+        val Seq(point, line, polygon, roads) =
+          tablesOf(o, delta.rederived).map { case (name, like) =>
+            spark.read.schema(like.schema).parquet(s"$out/$name")
+          }
+        val updated = ClassicUpdate.applyDelta(
+          ClassicPipeline.Tables4(point, line, polygon, roads), delta)
+        graft.operators.Par.overlap(spark)(
+          tablesOf(o, updated).map { case (name, df) =>
+            branch(spark, s"write $name")(
+              df.write.mode("overwrite").parquet(staged(s"$out/$name")))
+          } ++ liveLoad.map(l => branch(spark, "live load")(l(delta))): _*)
       }
-    } finally delta.unpersistBacking()
-    def swap(from: String, to: String): Unit = {
-      val dst = new java.io.File(to)
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      org.apache.commons.io.FileUtils
-        .moveDirectory(new java.io.File(from), dst)
-    }
-    named.foreach { case (name, _) =>
-      swap(s"$out/${name}_new", s"$out/$name")
-    }
-    swap(s"${middle}_new", middle)
-    // advance the recorded data timestamps to the newest applied
-    // change (the reference re-runs store_data_properties on append);
-    // ISO-8601 Z strings compare correctly as strings
-    stored.foreach { prevProps =>
-      val fresh = graft.sinks.Properties.importProperties(osm)
-      val tsKeys = Seq("import_timestamp", "current_timestamp")
-      graft.sinks.Properties.save(spark, s"$out/properties",
-        prevProps ++ tsKeys.flatMap { k =>
-          fresh.get(k).map(v =>
-            k -> prevProps.get(k).filter(_ >= v).getOrElse(v))
-        })
-    }
+      // the longest branches first: the pool has at most one thread
+      // per core
+      graft.operators.Par.overlap(spark)(
+        Seq(branch(spark, "delta") {
+          val delta = ClassicUpdate.deltaOn(merged, osm, style, settings)
+          try writeTables(delta)
+          finally delta.unpersistBacking()
+        }) ++ tiles.map(t => branch(spark, "expire")(
+          expireTiles(o, osm, java.nio.file.Paths.get(staged(t.toString))))) ++
+          Seq("nodes" -> merged.nodes, "ways" -> merged.ways,
+            "relations" -> merged.relations).map { case (stream, df) =>
+            branch(spark, s"write middle $stream")(
+              df.write.mode("overwrite").parquet(s"${staged(middle)}/$stream"))
+          } :+
+          // advance current_timestamp to the newest applied change
+          // (the reference re-runs store_data_properties on append)
+          branch(spark, "properties") {
+            props = stored.map(graft.sinks.Properties.appendProperties(_, osm))
+          }: _*)
+      // the swap: each staged output replaces the current one
+      staging.foreach { path =>
+        val dst = java.nio.file.Paths.get(path)
+        if (java.nio.file.Files.isDirectory(dst))
+          org.apache.commons.io.FileUtils.deleteDirectory(dst.toFile)
+        java.nio.file.Files.move(java.nio.file.Paths.get(staged(path)), dst,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      props.foreach(graft.sinks.Properties.save(spark, s"$out/properties", _))
+    } catch {
+      case t: Throwable =>
+        staging.foreach(p => org.apache.commons.io.FileUtils
+          .deleteQuietly(new java.io.File(staged(p))))
+        throw t
+    } finally merged.unpersistBacking()
   }
 
   /** -O flex: load the named compiled config, enrich ways with the

@@ -76,9 +76,10 @@ final case class Options(
     /** --middle-with-nodes: with a flat-nodes store, ALSO keep tagged
       * nodes in the middle (recorded; our middle always keeps nodes) */
     middleWithNodes: Boolean = false,
-    /** -I/--disable-parallel-indexing: the import's live per-table
-      * loads (COPY, indexes, ANALYZE) run one table at a time instead
-      * of side by side (src/output-pgsql.cpp:168-182) */
+    /** -I/--disable-parallel-indexing: the live per-table loads run
+      * one table at a time instead of side by side
+      * (src/output-pgsql.cpp:168-182): the import's COPY, indexes and
+      * ANALYZE, and the append's delete-before-insert sessions */
     disableParallelIndexing: Boolean = false,
     /** --tablespace-main-data / --tablespace-main-index: TABLESPACE
       * clauses on output tables / their indexes (src/table.cpp:80,128;

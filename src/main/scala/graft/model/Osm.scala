@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
 /** OSM entity model (reference: src/osmtypes.hpp; libosmium types).
@@ -57,4 +58,10 @@ object OsmSchema {
     StructField("role", StringType, nullable = true)))
 
   val tagsType: DataType = MapType(StringType, StringType)
+
+  /** The entity columns of the three streams, without the readers'
+    * `action`: the known schema of the stored middle. */
+  lazy val node: StructType = Encoders.product[OsmNode].schema
+  lazy val way: StructType = Encoders.product[OsmWay].schema
+  lazy val relation: StructType = Encoders.product[OsmRelation].schema
 }

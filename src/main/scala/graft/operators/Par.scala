@@ -77,6 +77,20 @@ object Par {
     else df
   }
 
+  /** Runs `body` with `what` appended to the thread's Spark job
+    * description (`outer: what`, or `what` alone), so every job it
+    * starts, AQE's stage jobs included, carries a name; the previous
+    * description is restored after. */
+  def describe[A](spark: SparkSession, what: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(Option(outer).fold(what)(d => s"$d: $what"))
+    try body
+    finally sc.setJobDescription(outer)
+  }
+
+  private val JobDescription = "spark.job.description"
+
   /** Runs independent driver-side branches side by side and returns
     * their results in branch order — the reference's thread pool for
     * per-table post-processing (src/output-pgsql.cpp:168-182).

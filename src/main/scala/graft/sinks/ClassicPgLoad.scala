@@ -83,21 +83,22 @@ object ClassicPgLoad {
   }
 
   /** Full append: the point table keys on changed nodes; the three
-    * way tables key on pending ways ∪ negated pending relations
-    * (src/osmdata.cpp:371-406). */
+    * way tables key on [[ClassicUpdate.Delta.wayKeys]], pending ways ∪
+    * negated pending relations (src/osmdata.cpp:371-406). The four
+    * sessions run side by side, `width` at a time. */
   def append(tables: Seq[PgClassic.ClassicTable], d: ClassicUpdate.Delta,
       dsn: String, schema: String, hstoreAll: Boolean,
-      postgis: Boolean): Unit = {
-    val wayIds = d.pendingWays.select(col("id"))
-      .unionByName(d.pendingRels.select((-col("id")).as("id")))
-    tables.foreach { t =>
+      postgis: Boolean, width: Int = Int.MaxValue): Unit = {
+    val spark = d.changedNodes.sparkSession
+    graft.operators.Par.overlap(spark, width)(tables.map { t =>
       val (ids, rows) = t.kind match {
         case "point"   => (d.changedNodes, d.rederived.point)
-        case "line"    => (wayIds, d.rederived.line)
-        case "polygon" => (wayIds, d.rederived.polygon)
-        case _         => (wayIds, d.rederived.roads)
+        case "line"    => (d.wayKeys, d.rederived.line)
+        case "polygon" => (d.wayKeys, d.rederived.polygon)
+        case _         => (d.wayKeys, d.rederived.roads)
       }
-      appendLoad(t, ids, rows, dsn, schema, hstoreAll, postgis)
-    }
+      () => graft.operators.Par.describe(spark, s"load ${t.name}")(
+        appendLoad(t, ids, rows, dsn, schema, hstoreAll, postgis))
+    }: _*)
   }
 }

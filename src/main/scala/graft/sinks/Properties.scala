@@ -18,9 +18,11 @@ object Properties {
       .coalesce(1).write.mode("overwrite").json(path)
   }
 
+  /** The stored properties, read with their fixed schema (no
+    * inference job). A missing store throws. */
   def load(spark: SparkSession, path: String): Map[String, String] = {
     import spark.implicits._
-    spark.read.json(path).select("property", "value")
+    spark.read.schema("property STRING, value STRING").json(path)
       .as[(String, String)].collect().toMap
   }
 

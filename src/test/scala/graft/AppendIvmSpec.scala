@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -134,6 +135,90 @@ class AppendIvmSpec extends SparkSpecBase {
         } finally osm.unpersistBacking()
       } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
+
+  /** Every file under `root`, by relative path, with its bytes. */
+  private def files(root: Path): Map[String, Seq[Byte]] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+      root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  test("a failing append leaves every output as it was, stages nothing " +
+      "and releases its jobs and caches") {
+    val dir = Files.createTempDirectory("graft-ivm-fail")
+    try {
+      val world = new GridWorld(5)
+      val base = world.write(dir, "base", "o5m")
+      val diff = world.writeDiff(dir, "diff1", "o5m")
+      val out = dir.resolve("out")
+      runMain("--slim", "--output-dir", out.toString, base.toString)
+      Files.writeString(out.resolve("dirty_tiles.txt"), "16/34500/23000\n")
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        out.resolve("planet_osm_roads").toFile)
+      val kept = files(out)
+      val cached = persistentRdds
+      intercept[Exception](Main.run(spark, Options.parse(Seq("-a",
+        "--slim", "-e", "16", "--output-dir", out.toString, diff.toString))))
+      val now = files(out)
+      val added = now.keySet -- kept.keySet
+      val removed = kept.keySet -- now.keySet
+      assert(added.isEmpty && removed.isEmpty, "files added: " +
+        s"${added.mkString(", ")}; files removed: ${removed.mkString(", ")}")
+      val changed = kept.keys.filter(k => now(k) != kept(k))
+      assert(changed.isEmpty, s"files changed: ${changed.mkString(", ")}")
+      assert(persistentRdds <= cached, "the failed append left cached RDDs")
+      // the status tracker hears of job ends asynchronously
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (tracker.getActiveJobIds().nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(tracker.getActiveJobIds().isEmpty,
+        "the failed append left a Spark job running")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("every job of an append carries a job description") {
+    val dir = Files.createTempDirectory("graft-ivm-described")
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    try {
+      val world = new GridWorld(6)
+      val base = world.write(dir, "base", "o5m")
+      val diff = world.writeDiff(dir, "diff1", "o5m")
+      val out = dir.resolve("out").toString
+      runMain("--slim", "--output-dir", out, base.toString)
+      sc.addSparkListener(listener)
+      runMain("-a", "--slim", "-e", "16", "--output-dir", out, diff.toString)
+      // the bus delivers in order: once the marker job arrives, every
+      // job of the append has
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1)).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("marker"))
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+    val jobs = seen.asScala.toSeq.filter(_ != "marker")
+    assert(jobs.nonEmpty)
+    assert(!jobs.contains(""),
+      s"${jobs.count(_.isEmpty)} of ${jobs.size} jobs carry no description")
+    assert(jobs.forall(_.startsWith("append")), jobs.distinct.mkString("; "))
+    Seq("write planet_osm_line", "write middle ways", "expire",
+      "properties").foreach(b => assert(jobs.exists(_.endsWith(b)),
+        s"no job of branch '$b' in ${jobs.distinct.mkString("; ")}"))
+  }
 
   test("a flex import releases the caches it made") {
     val dir = Files.createTempDirectory("graft-ivm-flex")

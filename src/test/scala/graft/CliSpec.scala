@@ -385,6 +385,44 @@ class CliSpec extends SparkSpecBase {
     assert(rows(3L) == Map("shop" -> "books")) // default style would keep amenity
   }
 
+  test("append advances current_timestamp only; import_timestamp stays " +
+      "or stays absent (timestamps.feature)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-ts")
+    def osm(name: String, ts: Option[String]): String = {
+      val p = dir.resolve(name)
+      val attr = ts.fold("")(t => s""" timestamp="$t"""")
+      java.nio.file.Files.writeString(p,
+        s"""<osm version="0.6">
+          |<node id="1" lat="50.0" lon="8.0" version="1"$attr>
+          |  <tag k="amenity" v="restaurant"/></node>
+          |</osm>""".stripMargin)
+      p.toString
+    }
+    val osc = dir.resolve("c.osc")
+    java.nio.file.Files.writeString(osc,
+      """<osmChange version="0.6">
+        |<modify><node id="1" lat="50.0" lon="8.0" version="2"
+        |  timestamp="2024-05-01T00:00:00Z">
+        |  <tag k="amenity" v="cafe"/></node></modify>
+        |</osmChange>""".stripMargin)
+    def importThenAppend(input: String, out: String): Map[String, String] = {
+      Main.run(spark, Options.parse(Seq(input, "--slim", "--output-dir",
+        s"$dir/$out")))
+      Main.run(spark, Options.parse(Seq(osc.toString, "-a", "--slim",
+        "--output-dir", s"$dir/$out")))
+      graft.sinks.Properties.load(spark, s"$dir/$out/properties")
+    }
+    try {
+      val dated = importThenAppend(
+        osm("dated.osm", Some("2020-01-02T03:04:05Z")), "dated")
+      assert(dated.get("import_timestamp").contains("2020-01-02T03:04:05Z"))
+      assert(dated.get("current_timestamp").contains("2024-05-01T00:00:00Z"))
+      val undated = importThenAppend(osm("undated.osm", None), "undated")
+      assert(!undated.contains("import_timestamp"))
+      assert(undated.get("current_timestamp").contains("2024-05-01T00:00:00Z"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("--drop: slim import discards the middle and is not updatable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cli-drop")
     val in = dir.resolve("base.osm")

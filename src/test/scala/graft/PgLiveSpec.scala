@@ -500,16 +500,23 @@ class PgLiveSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-classic-seq")
     val kinds = Seq("point", "line", "polygon", "roads")
     try {
-      val base = new AppendIvmSpec.GridWorld(6).write(dir, "base", "o5m")
+      val world = new AppendIvmSpec.GridWorld(6)
+      val base = world.write(dir, "base", "o5m")
+      val diff = world.writeDiff(dir, "diff1", "o5m")
       val out = dir.resolve("out").toString
-      Main.run(spark, Options.parse(Seq("--slim", "-d", dsn, "-I",
-        "-p", "graft_live_seq", "--output-dir", out, base.toString)))
-      kinds.foreach { k =>
-        val t = s"graft_live_seq_$k"
-        val landed = spark.read.parquet(s"$out/$t").count()
-        assert(landed > 0, s"$t is empty")
-        assert(liveCount(q(t)) == landed, t)
-      }
+      val common = Seq("--slim", "-d", dsn, "-I", "-p", "graft_live_seq",
+        "--output-dir", out)
+      // the import's loads, then the append's sessions, one at a time
+      Seq(common :+ base.toString, ("-a" +: common) :+ diff.toString)
+        .foreach { args =>
+          Main.run(spark, Options.parse(args))
+          kinds.foreach { k =>
+            val t = s"graft_live_seq_$k"
+            val landed = spark.read.parquet(s"$out/$t").count()
+            assert(landed > 0, s"$t is empty")
+            assert(liveCount(q(t)) == landed, s"$t after ${args.head}")
+          }
+        }
     } finally {
       psql(kinds.map(k =>
         s"DROP TABLE IF EXISTS ${q(s"graft_live_seq_$k")};").mkString)
