@@ -202,19 +202,21 @@ object ClassicPipeline {
   final case class Subset(nodeIds: Option[DataFrame] = None,
       wayIds: Option[DataFrame] = None, relIds: Option[DataFrame] = None)
 
+  /** `df` restricted to the change-sized `ids`, which are broadcast:
+    * the entity frame streams past them without a shuffle. */
   private def restrict(df: DataFrame, ids: Option[DataFrame]): DataFrame =
     ids.map { d =>
       val key = d.columns.head
-      df.join(d.select(col(key).as("__rid")), col("id") === col("__rid"),
-        "left_semi")
+      df.join(broadcast(d.select(col(key).as("__rid"))),
+        col("id") === col("__rid"), "left_semi")
     }.getOrElse(df)
 
   /** The four tables as lazy plans: every action on a table derives
     * it again (and roads is the line plan again). For callers that read
     * each table once. */
   def run(osm: OsmDataFrames, style: Style,
-      settings: Settings = Settings()): Tables4 =
-    tables(rows(osm, style, settings, Subset()), Nil)
+      settings: Settings = Settings(), subset: Subset = Subset()): Tables4 =
+    tables(rows(osm, style, settings, subset), Nil)
 
   /** The four tables for callers with several sinks (table writes, a
     * live load): the point, line and polygon rows become ONE plan,

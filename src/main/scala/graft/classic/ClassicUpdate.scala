@@ -113,36 +113,37 @@ object ClassicUpdate {
       : Delta =
     deltaOn(applyChanges(before, changes), changes, style, settings)
 
+  /** The dependency closure (step 2 of [[incrementalUpdate]]) as one
+    * lazy `(id, kind)` frame, kind `n` for the changed nodes, `w` for
+    * the pending ways and `r` for the pending relations. Every hop
+    * broadcasts its change-sized side ([[Middle.parentsOfNodes]]), so
+    * the stored ways and relations are never shuffled; the one
+    * `distinct` runs over the closure's own rows. */
+  def closure(after: OsmDataFrames, changes: OsmDataFrames): DataFrame = {
+    val changedNodes = changes.nodes.select(col("id"))
+    val pendingWays = changes.ways.select(col("id")).unionByName(
+      Middle.parentsOfNodes(after.ways, "id", "nodes", changedNodes, "id")
+        .toDF("id"))
+    val pendingRels = changes.relations.select(col("id"))
+      .unionByName(Middle.parentsOfMembers(after.relations, "id",
+        "members", "n", changedNodes, "id", typeField = "mtype").toDF("id"))
+      .unionByName(Middle.parentsOfMembers(after.relations, "id",
+        "members", "w", pendingWays, "id", typeField = "mtype").toDF("id"))
+    Seq("n" -> changedNodes, "w" -> pendingWays, "r" -> pendingRels)
+      .map { case (k, df) => df.select(col("id"), lit(k).as("kind")) }
+      .reduce(_ unionByName _)
+      .distinct()
+  }
+
   /** [[computeDelta]] against the already-merged entity state `after`
-    * (e.g. the stored streams of [[mergeOnce]]). The id closures and
+    * (e.g. the stored streams of [[mergeOnce]]). The [[closure]] and
     * the re-derived rows are each materialized once, so the delta's
     * consumers read stored rows; a failure releases what was stored. */
   def deltaOn(after: OsmDataFrames, changes: OsmDataFrames,
       style: Style,
       settings: ClassicPipeline.Settings = ClassicPipeline.Settings())
       : Delta = {
-    val changedNodes = changes.nodes.select(col("id")).distinct()
-    val changedWays = changes.ways.select(col("id")).distinct()
-    val changedRels = changes.relations.select(col("id")).distinct()
-
-    val parentWays = Middle.parentsOfNodes(after.ways, "id", "nodes",
-      changedNodes, "id")
-    val pendingWays = changedWays
-      .unionByName(parentWays.toDF("id")).distinct()
-    val parentRelsN = Middle.parentsOfMembers(after.relations, "id",
-      "members", "n", changedNodes, "id", typeField = "mtype")
-    val parentRelsW = Middle.parentsOfMembers(after.relations, "id",
-      "members", "w", pendingWays, "id", typeField = "mtype")
-    val pendingRels = changedRels
-      .unionByName(parentRelsN.toDF("id"))
-      .unionByName(parentRelsW.toDF("id")).distinct()
-
-    // the three id sets as one (id, kind) frame, materialized once:
-    // every later consumer reads it instead of re-running the closure
-    val (ids, idsRdd) = ClassicPipeline.materialize(Seq(
-      "n" -> changedNodes, "w" -> pendingWays, "r" -> pendingRels)
-      .map { case (k, df) => df.select(col("id"), lit(k).as("kind")) }
-      .reduce(_ unionByName _))
+    val (ids, idsRdd) = ClassicPipeline.materialize(closure(after, changes))
     def idsOf(kind: String): DataFrame =
       ids.where(col("kind") === kind).select(col("id"))
     val (nodeIds, wayIds, relIds) = (idsOf("n"), idsOf("w"), idsOf("r"))
@@ -161,19 +162,29 @@ object ClassicUpdate {
 
   /** Step 4 of [[incrementalUpdate]]: delete-then-insert against the
     * previous table state, one anti-join per table: the point table
-    * keys on the changed nodes, the way tables on [[Delta.wayKeys]]. */
+    * keys on the changed nodes, the way tables on [[Delta.wayKeys]].
+    * The change-sized id side is broadcast, so a previous table is
+    * never shuffled. The anti-join keeps every partition of the table,
+    * so each result is coalesced to at most as many partitions as the
+    * table has files: an append never writes more part files than
+    * the table had (a table not read from files keeps its
+    * partitions). */
   def applyDelta(prev: ClassicPipeline.Tables4,
       d: Delta): ClassicPipeline.Tables4 = {
-    def minus(prevT: DataFrame, ids: DataFrame): DataFrame =
-      prevT.join(ids.select(col("id").as("__del")),
-        col("osm_id") === col("__del"), "left_anti")
+    def update(prevT: DataFrame, ids: DataFrame,
+        rows: DataFrame): DataFrame = {
+      val updated = prevT
+        .join(broadcast(ids.select(col("id").as("__del"))),
+          col("osm_id") === col("__del"), "left_anti")
+        .unionByName(rows)
+      val files = prevT.inputFiles.length
+      if (files == 0) updated else updated.coalesce(files)
+    }
 
     ClassicPipeline.Tables4(
-      point = minus(prev.point, d.changedNodes)
-        .unionByName(d.rederived.point),
-      line = minus(prev.line, d.wayKeys).unionByName(d.rederived.line),
-      polygon = minus(prev.polygon, d.wayKeys)
-        .unionByName(d.rederived.polygon),
-      roads = minus(prev.roads, d.wayKeys).unionByName(d.rederived.roads))
+      point = update(prev.point, d.changedNodes, d.rederived.point),
+      line = update(prev.line, d.wayKeys, d.rederived.line),
+      polygon = update(prev.polygon, d.wayKeys, d.rederived.polygon),
+      roads = update(prev.roads, d.wayKeys, d.rederived.roads))
   }
 }

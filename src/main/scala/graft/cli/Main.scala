@@ -191,7 +191,7 @@ object Main {
     * EWKB, so the cover comes from the entity frames directly), written
     * to `dest`. Both reference caps apply (src/expire-output.hpp:24-25):
     * the per-geometry cap inside the cover, the overall cap on the
-    * streamed write — the tile list is never collected whole. */
+    * streamed write — the tile list is never collected as rows. */
   private def expireTiles(o: Options, osm: OsmDataFrames,
       dest: java.nio.file.Path): Unit =
     // tile expiry only applies in web-mercator output — the
@@ -215,7 +215,7 @@ object Main {
       val tiles = graft.operators.Expire.rollup(cover, "x", "y",
         o.expireZoomMax, o.expireZoomMin)
       graft.operators.Expire.writeLines(
-        graft.operators.Expire.formatTiles(tiles).orderBy("tile"), dest,
+        graft.operators.Expire.formatTiles(tiles), dest,
         limits.maxTilesOverall, append = false,
         "Overall tile limit reached — dirty-tile list truncated at " +
           limits.maxTilesOverall)
@@ -235,11 +235,12 @@ object Main {
       t: ClassicPipeline.Tables4): Seq[(String, DataFrame)] =
     tableNames(o).zip(Seq(t.point, t.line, t.polygon, t.roads))
 
-  /** The classic import (src/osm2pgsql.cpp:47-83). The tables are
-    * derived once and materialized ([[ClassicPipeline.derive]]); the
-    * middle, the properties file, the four table writes and the `-e`
-    * tile list then run side by side ([[graft.operators.Par.overlap]]),
-    * and the stored rows are released. The database step reads the
+  /** The classic import (src/osm2pgsql.cpp:47-83). Four branches run
+    * side by side ([[graft.operators.Par.overlap]]): the tables, the
+    * middle writes, the properties file and the `-e` tile list. The
+    * tables branch derives the tables once and materializes them
+    * ([[ClassicPipeline.derive]]), writes the four side by side and
+    * releases the stored rows. The database step reads the
     * landed parquet with its known schema: exactly the written rows, no
     * inference job. A reachable `-d` gets the four live loads side by side, or
     * one at a time under -I (the reference's parallel table
@@ -288,17 +289,28 @@ object Main {
       else Seq("nodes" -> osm.nodes, "ways" -> osm.ways,
         "relations" -> osm.relations)
         .map { case (stream, df) => s"${o.middleDir}/$stream" -> df }
-    val t = ClassicPipeline.derive(osm, style, settings)
-    val named = tablesOf(o, t)
-    try graft.operators.Par.overlap(spark)(
-      (middle ++ named).map { case (name, df) =>
-        branch(spark, s"write $name")(
-          df.write.mode("overwrite").parquet(s"$out/$name"))
-      } ++ Seq(branch(spark, "properties")(saveProperties())) ++
+    def write(name: String, df: DataFrame): () => Unit =
+      branch(spark, s"write $name")(
+        df.write.mode("overwrite").parquet(s"$out/$name"))
+    // written by the tables branch, read after the overlap joined it
+    var schemas = Map.empty[String, org.apache.spark.sql.types.StructType]
+    def writeTables(): Unit = {
+      val t = ClassicPipeline.derive(osm, style, settings)
+      try {
+        val named = tablesOf(o, t)
+        schemas = named.map { case (name, df) => name -> df.schema }.toMap
+        graft.operators.Par.overlap(spark)(
+          named.map { case (name, df) => write(name, df) }: _*)
+      } finally t.unpersistBacking()
+    }
+    // the derivation is the longest branch: it goes first, and the
+    // pool has at most one thread per core
+    graft.operators.Par.overlap(spark)(
+      Seq(branch(spark, "tables")(writeTables())) ++
+        middle.map { case (name, df) => write(name, df) } ++
+        Seq(branch(spark, "properties")(saveProperties())) ++
         Option.when(o.expireZoomMax > 0)(
           branch(spark, "expire")(expireTiles(o, osm, tileList(o)))): _*)
-    finally t.unpersistBacking()
-    val schemas = named.map { case (name, df) => name -> df.schema }.toMap
     def landed(name: String): DataFrame =
       spark.read.schema(schemas(name)).parquet(s"$out/$name")
 
@@ -481,7 +493,7 @@ object Main {
     // upsert (the reference's per-tile prepared INSERT .. ON CONFLICT
     // collapses to one INSERT..SELECT over a COPY'd temp table). Both
     // stream through toLocalIterator under the overall cap — the tile
-    // list is never collected whole.
+    // list is never collected as rows.
     if (res.expire.nonEmpty) {
       val outputs = cfg.tables
         .flatMap(_.columns.flatMap(_.expire.map(_.output)))
@@ -492,7 +504,7 @@ object Main {
         eo.filename.foreach { f =>
           // relative names land in --output-dir
           graft.operators.Expire.writeLines(
-            graft.operators.Expire.formatTiles(tiles).orderBy("tile"),
+            graft.operators.Expire.formatTiles(tiles),
             out.resolve(f), eo.maxTilesOverall, append = true,
             s"Overall tile limit ${eo.maxTilesOverall} " +
               s"reached for expire output '$ename'!")

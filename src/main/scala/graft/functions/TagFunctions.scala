@@ -86,23 +86,31 @@ object TagFunctions {
     * test-wildcard-match.cpp): `*` matches any run (including empty),
     * `?` exactly one character, everything else literal — translated
     * to an anchored regex evaluated by the codegen'd `rlike`. */
-  def wildcardRegex(p: String): String =
-    "^" + p.flatMap {
+  def wildcardRegex(p: String): String = "^" + wildcardBody(p) + "$"
+
+  /** [[wildcardRegex]] without its anchors. */
+  private def wildcardBody(p: String): String =
+    p.flatMap {
       case '*' => ".*"
       case '?' => "."
       case c if "\\.[]{}()+^$|".contains(c) => "\\" + c
       case c   => c.toString
-    } + "$"
+    }
 
   /** Key-deletion predicate shared by [[cleanTags]] and the classic
     * export filter: keys with `*`/`?` are wild_match patterns (NOT
-    * just trailing-star prefixes), the rest exact. */
+    * just trailing-star prefixes), the rest exact. The patterns form
+    * ONE anchored alternation, so the predicate is one `rlike` however
+    * many patterns the style lists (one per pattern made the optimizer
+    * simplify a chain of that length in every plan that filters
+    * tags). */
   def deleteHit(k: Column, deleteKeys: Seq[String]): Column = {
     val (wild, exact) =
       deleteKeys.partition(s => s.exists(c => c == '*' || c == '?'))
-    val exactHit =
-      if (exact.isEmpty) lit(false) else k.isInCollection(exact)
-    wild.foldLeft(exactHit)((acc, p) => acc || k.rlike(wildcardRegex(p)))
+    (Option.when(exact.nonEmpty)(k.isInCollection(exact)) ++
+      Option.when(wild.nonEmpty)(k.rlike(
+        wild.distinct.map(wildcardBody).mkString("^(?:", "|", ")$"))))
+      .reduceOption(_ || _).getOrElse(lit(false))
   }
 
   /** Drop tags whose key is in the delete list, incl. full wildcard

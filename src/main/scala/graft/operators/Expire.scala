@@ -57,13 +57,16 @@ object Expire {
   def formatTiles(tiles: DataFrame): DataFrame =
     tiles.select(concat_ws("/", col("zoom"), col("x"), col("y")).as("tile"))
 
-  /** Streams the ordered one-column `lines` to `path`, each ending in a
-    * newline, stopping at `maxOverall` lines (the reference's overall
-    * cap, src/expire-output.hpp:24-25). Rows arrive one partition at a
-    * time, so the list is never collected whole. `append` keeps the
-    * file's contents (the flex output's fopen("a")); otherwise the file
-    * is replaced. Prints `truncated` when rows were left over. Returns
-    * the number of lines written. */
+  /** Streams the one-column `lines`, sorted, to `path`, each ending in
+    * a newline, stopping at `maxOverall` lines (the reference's overall
+    * cap, src/expire-output.hpp:24-25). The lines are sorted within ONE
+    * partition, so one result job streams them where a global sort ran
+    * a sampling job and one job per range; the driver holds that
+    * partition's compressed rows and decodes them a row at a time, so
+    * the list is never collected as rows. `append` keeps
+    * the file's contents (the flex output's fopen("a")); otherwise the
+    * file is replaced. Prints `truncated` when rows were left over.
+    * Returns the number of lines written. */
   def writeLines(lines: DataFrame, path: java.nio.file.Path,
       maxOverall: Long, append: Boolean, truncated: String): Long = {
     import java.nio.file.StandardOpenOption._
@@ -73,7 +76,8 @@ object Expire {
       else Seq(CREATE, TRUNCATE_EXISTING, WRITE)): _*)
     var n = 0L
     try {
-      val it = lines.toLocalIterator()
+      val it = lines.coalesce(1).sortWithinPartitions(lines.columns.head)
+        .toLocalIterator()
       while (it.hasNext && n < maxOverall) {
         w.write(it.next().getString(0)); w.write("\n"); n += 1
       }

@@ -164,8 +164,8 @@ object ExpireMain {
     // the reference binary's two expire caps (src/expire-output.hpp:24-25)
     // applied here too: the per-geometry cap distributed in the cover,
     // the overall cap enforced while STREAMING rows through
-    // toLocalIterator — the full tile list is never materialized on
-    // the driver (one partition at a time, one output line at a time).
+    // toLocalIterator — the tile list is never collected as rows on
+    // the driver (one sorted partition, one output line at a time).
     val limits = TileCover.Limits()
     var osmFrames: Option[graft.sources.OsmXml.OsmDataFrames] = None
     val tiles =
@@ -189,8 +189,8 @@ object ExpireMain {
   def writeStreamed(rolled: DataFrame, out: String, maxOverall: Long): Long =
     Expire.writeLines(
       if (out.endsWith(".geojson"))
-        Expire.geojsonFeatures(rolled).orderBy("feature")
-      else Expire.formatTiles(rolled).orderBy("tile"),
+        Expire.geojsonFeatures(rolled)
+      else Expire.formatTiles(rolled),
       java.nio.file.Paths.get(out), maxOverall, append = false,
       "Overall tile limit reached — dirty-tile list truncated at " +
         maxOverall)

@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions._
   *
   * This is the biggest architectural win over the reference: where the
   * C++ engine does per-way prepared-statement lookups with a hand-built
-  * bucket index (src/middle-pgsql.cpp:1112-1121), a shuffle/broadcast
-  * equi-join resolves *all* ways at once, scales with cluster width, and
-  * gets AQE skew handling for free. The reference's way-node bucket
-  * index (array_agg(distinct id>>5)) is unnecessary here — the shuffle
-  * hash join IS the index.
+  * bucket index (src/middle-pgsql.cpp:1112-1121), a shuffle equi-join
+  * resolves *all* ways of an import at once, scales with cluster width,
+  * and gets AQE skew handling for free. An append's lookups are keyed by
+  * the change instead: the parent queries and [[resolveWayCoordsFor]]
+  * broadcast their change-sized id side and stream the stored middle
+  * past it, so nothing of the middle is shuffled — the reference's
+  * in-memory pending-id lists (src/middle-pgsql.cpp:590-630). Neither
+  * needs the reference's way-node bucket index
+  * (array_agg(distinct id>>5)).
   */
 object Middle {
 
@@ -54,13 +58,15 @@ object Middle {
   }
 
   /** [[resolveAllWayCoords]] for the ways whose ids are in `wayIds`'s
-    * first column only: the semi-join runs first, so only those ways'
-    * refs are exploded and joined against the nodes. */
+    * first column only, a change-sized set: it is broadcast to the
+    * semi-join, and the refs of the ways it keeps are broadcast to the
+    * node join, so neither the ways nor the nodes are shuffled. */
   def resolveWayCoordsFor(osm: graft.sources.OsmXml.OsmDataFrames,
       wayIds: DataFrame): DataFrame = {
     val ids = wayIds.select(col(wayIds.columns.head).as("__wid"))
-    resolveAllWayCoords(osm.copy(ways =
-      osm.ways.join(ids, col("id") === col("__wid"), "left_semi")))
+    // the hint reaches the node join through the refs' explode
+    resolveAllWayCoords(osm.copy(ways = broadcast(
+      osm.ways.join(broadcast(ids), col("id") === col("__wid"), "left_semi"))))
   }
 
   /** rel_members_get (src/middle-pgsql.cpp:814-863): resolve a
@@ -103,29 +109,36 @@ object Middle {
   /** get_node_parents (src/middle-pgsql.cpp:590-630): which ways contain
     * any of the changed nodes. A semi-join over the exploded refs — the
     * reference's temp-table + `&&` overlap query, minus the hand-rolled
-    * bucket pruning. Returns distinct way ids.
+    * bucket pruning. The changed ids are the change-sized side: they are
+    * broadcast, so the ways stream past them without a shuffle. Returns
+    * one way id per matching ref, not distinct: callers take one
+    * `distinct` over their whole closure.
     */
   def parentsOfNodes(ways: DataFrame, wayIdCol: String, refsCol: String,
-      changedNodeIds: DataFrame, changedIdCol: String): DataFrame = {
-    val refs = ways.select(col(wayIdCol), explode(col(refsCol)).as("ref"))
-    refs.join(changedNodeIds, refs("ref") === changedNodeIds(changedIdCol),
-        "left_semi")
-      .select(col(wayIdCol)).distinct()
-  }
+      changedNodeIds: DataFrame, changedIdCol: String): DataFrame =
+    parentsOf(ways.select(col(wayIdCol), explode(col(refsCol)).as("ref")),
+      changedNodeIds, changedIdCol)
 
   /** get_way_parents (src/middle-pgsql.cpp:656-700): which relations
-    * reference any of the changed members of `memberType`. */
+    * reference any of the changed members of `memberType`; broadcast
+    * and not distinct, like [[parentsOfNodes]]. */
   def parentsOfMembers(rels: DataFrame, relIdCol: String, membersCol: String,
       memberType: String,
       changedIds: DataFrame, changedIdCol: String,
-      typeField: String = "type", refField: String = "ref"): DataFrame = {
-    val refs = rels
+      typeField: String = "type", refField: String = "ref"): DataFrame =
+    parentsOf(rels
       .select(col(relIdCol), explode(col(membersCol)).as("m"))
       .where(col(s"m.$typeField") === memberType)
-      .select(col(relIdCol), col(s"m.$refField").as("ref"))
-    refs.join(changedIds, refs("ref") === changedIds(changedIdCol), "left_semi")
-      .select(col(relIdCol)).distinct()
-  }
+      .select(col(relIdCol), col(s"m.$refField").as("ref")),
+      changedIds, changedIdCol)
+
+  /** The parent ids (first column of `refs`) whose `ref` is one of the
+    * changed ids. */
+  private def parentsOf(refs: DataFrame, changedIds: DataFrame,
+      changedIdCol: String): DataFrame =
+    refs.join(broadcast(changedIds.select(col(changedIdCol).as("__cid"))),
+        col("ref") === col("__cid"), "left_semi")
+      .select(col(refs.columns.head))
 
   /** Build way rows (id + ordered refs array) from an edge-list table —
     * the inverse of posexplode; used by tests and the analog queries.

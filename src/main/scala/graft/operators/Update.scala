@@ -40,7 +40,8 @@ object Update {
     * node ids, find pending parent ways; given changed/pending way ids,
     * find pending relations. Version-1 objects can't have parents and
     * are skipped by the caller (src/osmdata.cpp:63-67). Both hops are
-    * the [[Middle]] semi-joins; this helper chains them. */
+    * the [[Middle]] semi-joins; this helper chains them and returns
+    * distinct ids. */
   def dependencyClosure(
       changedNodeIds: DataFrame, // (id)
       ways: DataFrame, wayIdCol: String, refsCol: String,
@@ -55,12 +56,7 @@ object Update {
     val relsFromWays = Middle.parentsOfMembers(
       rels, relIdCol, membersCol, "w", pendingWays, wayIdCol,
       typeField, refField)
-    (pendingWays, relsFromNodes.unionByName(relsFromWays).distinct())
+    (pendingWays.distinct(),
+      relsFromNodes.unionByName(relsFromWays).distinct())
   }
-
-  /** Delete-then-insert re-materialization set: ids whose derived rows
-    * must be rewritten = changed ∪ dependent (src/osmdata.cpp:371-406).
-    */
-  def rederiveSet(changedIds: DataFrame, dependentIds: DataFrame): DataFrame =
-    changedIds.toDF("id").unionByName(dependentIds.toDF("id")).distinct()
 }

@@ -136,6 +136,126 @@ class AppendIvmSpec extends SparkSpecBase {
       } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
 
+  /** The parquet part files of each classic table under `out`. */
+  private def partFiles(out: Path): Map[String, Int] =
+    Seq("point", "line", "polygon", "roads").map { t =>
+      t -> new java.io.File(out.resolve(s"planet_osm_$t").toString).list()
+        .count(f => f.startsWith("part-") && f.endsWith(".parquet"))
+    }.toMap
+
+  test("chained appends write no table with more part files than the " +
+      "import wrote") {
+    val dir = Files.createTempDirectory("graft-ivm-parts")
+    try {
+      val world = new GridWorld(7)
+      val base = world.write(dir, "base", "o5m")
+      val diffs = (1 to 3).map(k => world.writeDiff(dir, s"diff$k", "o5m"))
+      val out = dir.resolve("out")
+      runMain("--slim", "--output-dir", out.toString, base.toString)
+      val imported = partFiles(out)
+      diffs.zipWithIndex.foreach { case (d, k) =>
+        runMain("-a", "--slim", "--output-dir", out.toString, d.toString)
+        val now = partFiles(out)
+        assert(now.forall { case (t, n) => n <= imported(t) },
+          s"after append ${k + 1}: part files $now, after the import " +
+            s"$imported")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("the closure, the restriction and the deletes broadcast the " +
+      "change: no sort-merge join, and no shuffle of the stored middle " +
+      "or a previous table") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.classic.{ClassicPipeline, ClassicUpdate, StyleFile}
+    import graft.model.OsmSchema
+    import graft.sources.OsmXml.OsmDataFrames
+
+    // the plan as first planned: the broadcasts must be decided before
+    // anything runs, not by AQE after it shuffled
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // the scans an operator reads without a join or another exchange
+    // between them
+    def fedBy(p: SparkPlan): Seq[SparkPlan] = children(p).flatMap {
+      case _: Exchange => Nil
+      case j if j.nodeName.contains("Join") => Nil
+      case leaf if children(leaf).isEmpty => Seq(leaf)
+      case c => fedBy(c)
+    }
+
+    val dir = Files.createTempDirectory("graft-ivm-plans")
+    try {
+      val world = new GridWorld(8)
+      val base = world.write(dir, "base", "o5m")
+      val diff = world.writeDiff(dir, "diff1", "o5m")
+      val out = dir.resolve("out").toString
+      runMain("--slim", "--output-dir", out, base.toString)
+      val before = OsmDataFrames(
+        spark.read.schema(OsmSchema.node).parquet(s"$out/middle/nodes"),
+        spark.read.schema(OsmSchema.way).parquet(s"$out/middle/ways"),
+        spark.read.schema(OsmSchema.relation)
+          .parquet(s"$out/middle/relations"))
+      val changes = graft.sources.OsmSource.read(spark, Seq(diff.toString),
+        "auto")
+      val after = ClassicUpdate.mergeOnce(before, changes)
+      val stored = after.backing.map(_.id).toSet
+      def large(scan: SparkPlan): Boolean = scan match {
+        case r: RDDScanExec => stored.contains(r.rdd.id)
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains("planet_osm_"))
+        case _ => false
+      }
+      def check(what: String, df: DataFrame, joins: Boolean): Unit = {
+        val plan = nodes(df.queryExecution.executedPlan)
+        if (joins) assert(!plan.exists(_.isInstanceOf[SortMergeJoinExec]),
+          s"$what has a sort-merge join:\n${df.queryExecution.executedPlan}")
+        val shuffled = plan.collect { case e: Exchange => e }
+          .flatMap(fedBy).filter(large)
+        assert(shuffled.isEmpty, s"$what exchanges $shuffled:\n" +
+          df.queryExecution.executedPlan)
+      }
+      try {
+        check("the closure", ClassicUpdate.closure(after, changes),
+          joins = true)
+        val style = StyleFile.defaultStyle
+        val delta = ClassicUpdate.deltaOn(after, changes, style)
+        try {
+          val restricted = ClassicPipeline.run(after, style,
+            subset = ClassicPipeline.Subset(Some(delta.changedNodes),
+              Some(delta.pendingWays), Some(delta.pendingRels)))
+          Seq("point" -> restricted.point, "line" -> restricted.line,
+            "polygon" -> restricted.polygon).foreach { case (t, df) =>
+            check(s"the re-derived $t rows", df, joins = false)
+          }
+          val r = delta.rederived
+          val Seq(point, line, polygon, roads) = Seq("point" -> r.point,
+            "line" -> r.line, "polygon" -> r.polygon, "roads" -> r.roads)
+            .map { case (t, like) =>
+              spark.read.schema(like.schema).parquet(s"$out/planet_osm_$t")
+            }
+          val updated = ClassicUpdate.applyDelta(
+            ClassicPipeline.Tables4(point, line, polygon, roads), delta)
+          Seq("point" -> updated.point, "line" -> updated.line,
+            "polygon" -> updated.polygon, "roads" -> updated.roads)
+            .foreach { case (t, df) =>
+              check(s"the updated $t table", df, joins = true)
+            }
+        } finally delta.unpersistBacking()
+      } finally {
+        after.unpersistBacking()
+        changes.unpersistBacking()
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   /** Every file under `root`, by relative path, with its bytes. */
   private def files(root: Path): Map[String, Seq[Byte]] = {
     val s = Files.walk(root)

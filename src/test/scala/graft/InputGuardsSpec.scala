@@ -134,6 +134,48 @@ class InputGuardsSpec extends SparkSpecBase {
     assert(df.as[Map[String, String]].head.keySet == Set("kinlaa", "other"))
   }
 
+  test("deleteHit's one alternation regex equals the OR of one " +
+      "wildcardRegex per pattern (generated keys and patterns)") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Prop.propBoolean
+    import graft.functions.TagFunctions
+    // regex metacharacters, the two wildcards and plain letters; no
+    // line terminator, so an exact pattern's anchored regex is its
+    // equality test
+    val char = Gen.frequency(4 -> Gen.oneOf('a', 'b', 'c'),
+      3 -> Gen.oneOf('.', '(', ')', '|', '\\', '[', '+', '$', '^', '{'),
+      2 -> Gen.oneOf('?', '*'))
+    val word = Gen.chooseNum(0, 6).flatMap(Gen.listOfN(_, char))
+      .map(_.mkString)
+    // a key a pattern matches: each wildcard replaced by text
+    def instance(p: String): Gen[String] =
+      Gen.sequence[List[String], String](p.toList.map {
+        case '*' => word
+        case '?' => char.map(_.toString)
+        case c => Gen.const(c.toString)
+      }).map(_.mkString)
+    val prop = Prop.forAll(Gen.chooseNum(1, 5).flatMap(Gen.listOfN(_, word))) {
+      patterns =>
+        Prop.forAll(Gen.sequence[List[String], String](
+          patterns.map(instance) ++ List.fill(6)(word))) { keys =>
+          val got = keys.toDF("k").select(
+            TagFunctions.deleteHit($"k", patterns),
+            patterns.map(p => $"k".rlike(TagFunctions.wildcardRegex(p)))
+              .reduce(_ || _))
+            .as[(Boolean, Boolean)].collect()
+          got.forall { case (combined, each) => combined == each } :|
+            s"patterns ${patterns.mkString("[", ", ", "]")}: " +
+              keys.zip(got).filter(x => x._2._1 != x._2._2)
+                .map(_._1).mkString("keys [", ", ", "] differ")
+        }
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default
+        .withMinSuccessfulTests(40)
+        .withInitialSeed(org.scalacheck.rng.Seed(0x5eed_de1e_7e17L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("json coercion: non-finite doubles null out like the reference's writer") {
     import graft.flex.Coerce
     val df = Seq((Double.NaN, Double.PositiveInfinity,
