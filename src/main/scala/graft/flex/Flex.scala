@@ -211,8 +211,8 @@ final case class FlexTableDef(
     indexes: Option[Seq[FlexIndex]] = None,
     /** cluster-by-geometry on write ({cluster='no'} disables,
       * nocluster.feature; flex_table_t::cluster_by_geom,
-      * src/flex-table.hpp:77-99) — gates the SFC sort-on-write in the
-      * parquet sink, the CLUSTER analog */
+      * src/flex-table.hpp:77-99) — parsed and readable through
+      * `t:cluster()`, but no sink orders its rows by geometry */
     cluster: Boolean = true,
     /** ids.id_column (src/flex-lua-table.cpp:449-464); ignored for
       * NoIndex tables, which carry no id at all

@@ -140,8 +140,7 @@ object FlexRunner {
     * @param prevMiddle the raw (un-enriched) entity frames the
     *        previous state derived from — the persisted middle
     * @param change raw change frames with an `action` column
-    *        (`modify`/`delete`/`create`, e.g. from
-    *        `OsmText.toFrames(change = true)` or an .osc read)
+    *        (`modify`/`delete`/`create`, e.g. from an .osc read)
     *
     * Semantics follow the reference's append flow:
     *  1. collapse the change to latest version per id;

@@ -217,7 +217,7 @@ object OsmAnalog extends Registry {
     * pending relations (two chained semi-joins). */
   def dependencyClosure(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Algebraic pushdown of Update.dependencyClosure over middle
+    // Algebraic pushdown of ClassicUpdate.closure over middle
     // tables REBUILT from flat rows (pinned by MiddlePushdownSpec).
     // The operator contract is unchanged for real array-shaped
     // middles (flex/classic still exercise it); here both

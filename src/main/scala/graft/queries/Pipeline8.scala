@@ -156,7 +156,7 @@ object Pipeline8 extends Registry {
 
   /** q112's rows, one per format, computed on the driver. */
   private def sourceParityRows(s: SparkSession) = {
-    import graft.sources.{O5m, Opl, OsmPbf, OsmXml}
+    import graft.sources.{O5m, Opl, OsmPbf, OsmSource, OsmXml}
     val fixture =
       "/root/reference/tests/data/test_multipolygon.osm"
     val parsed = OsmXml.parseString(new String(
@@ -213,14 +213,16 @@ object Pipeline8 extends Registry {
         n.getDecimal(4).add(w.getDecimal(4)).add(r.getDecimal(4))
           .toBigInteger.toString)
     }
+    def digest(fmt: String, path: String) =
+      digestRow(fmt, OsmSource.read(s, Seq(path), fmt))
     // the four formats are independent single-row collects — run them
     // side by side so the jobs interleave instead of queuing
     // (guide §2.6; each was ~0.25 s of driver round-trips in series)
     graft.operators.Par.overlap(s)(
-      () => digestRow("o5m", O5m.read(s, Seq(dir.resolve("f.o5m").toString))),
-      () => digestRow("opl", Opl.read(s, Seq(dir.resolve("f.opl").toString))),
-      () => digestRow("pbf", OsmPbf.read(s, dir.resolve("f.osm.pbf").toString)),
-      () => digestRow("xml", OsmXml.read(s, Seq(fixture))))
+      () => digest("o5m", dir.resolve("f.o5m").toString),
+      () => digest("opl", dir.resolve("f.opl").toString),
+      () => digest("pbf", dir.resolve("f.osm.pbf").toString),
+      () => digest("xml", fixture))
   }
 
   /** Pinned constants — the counter values are the reference's own

@@ -234,7 +234,7 @@ object Pipeline9 extends Registry {
     val src = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(cfgPath)),
       java.nio.charset.StandardCharsets.UTF_8)
-    val osm = graft.sources.OsmPbf.read(s, pbf)
+    val osm = graft.sources.OsmSource.read(s, Seq(pbf), "pbf")
     val enriched = graft.flex.Enrich.forFlex(osm, "create")
     val r = graft.flex.FlexRunner.run(
       new graft.flex.LuaFlexConfig(src, "simple.lua"), enriched)

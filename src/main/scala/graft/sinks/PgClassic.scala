@@ -112,8 +112,8 @@ object PgClassic {
     s"""DROP TABLE IF EXISTS "$schema"."${t.name}""""
 
   /** End-of-load batch (table_t::stop, src/table.cpp:177-245 minus the
-    * CLUSTER rewrite — our CLUSTER analog is the SFC sort-on-write,
-    * ClusteredParquet): SET LOGGED, way GiST (PostGIS only, fillfactor
+    * CLUSTER rewrite, which has no analog here: no output is written
+    * in geometry order): SET LOGGED, way GiST (PostGIS only, fillfactor
     * 100 for un-updatable imports like the reference), osm_id index for
     * slim/updatable runs, --hstore-add-index GIN indexes on the tags
     * column and every -z column (table.cpp:228-242), ANALYZE. The

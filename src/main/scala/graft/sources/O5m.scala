@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
 
 /** O5M / O5C binary OSM source + sink (reference: src/input.cpp:15
@@ -26,9 +24,9 @@ import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
   *  - change files ("o5c2"): a dataset that ends right after the
   *    version info is a delete marker.
   *
-  * Like the XML reader, files are parsed one-per-task
-  * ([[read]] distributes over a binary-file RDD); the writer exists
-  * for round-trip tests and as a compact sink for change streams.
+  * [[OsmSource.read]] decodes one file per task ([[decompress]], then
+  * [[parseBytes]]); the writer exists for round-trip tests and as a
+  * compact sink for change streams.
   */
 object O5m {
 
@@ -262,22 +260,6 @@ object O5m {
       val in = codec.createInputStream(new java.io.ByteArrayInputStream(raw))
       try in.readAllBytes() finally in.close()
     } else raw
-
-  /** Read .o5m/.o5c files distributed, one split per file,
-    * transparently decompressing .gz/.bz2 payloads per task
-    * (binaryFiles does not run Hadoop codecs). */
-  def read(spark: SparkSession, paths: Seq[String]): OsmXml.OsmDataFrames = {
-    import spark.implicits._
-    val parsed = spark.sparkContext
-      .binaryFiles(paths.mkString(","))
-      .map { case (_, pds) => parseBytes(decompress(pds.toArray())) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    OsmXml.OsmDataFrames(
-      parsed.flatMap(_.nodes).toDF("action", "n").select("action", "n.*"),
-      parsed.flatMap(_.ways).toDF("action", "w").select("action", "w.*"),
-      parsed.flatMap(_.relations).toDF("action", "r").select("action", "r.*"),
-      backing = Seq(parsed))
-  }
 
   // ---------------- encoding ----------------
 

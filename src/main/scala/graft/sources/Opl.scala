@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
 
 /** OPL ("object per line") source — the reference's `-r opl` input
@@ -16,11 +14,11 @@ import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
   * osmium's percent escapes: `%hex%` appends the Unicode codepoint,
   * `%%` a literal percent (opl_parser_functions.hpp:141-180).
   *
-  * Unlike the XML/O5M readers (whole-file splits), OPL is line-
-  * delimited, so the read is FULLY splittable: `spark.read.text`
-  * gives intra-file splits and each line parses independently — at
-  * planet scale this is the one text format where a single file
-  * parallelizes across every executor with zero custom framing.
+  * Unlike XML/O5M (whole-file splits), OPL is line-delimited, so
+  * [[OsmSource.read]] splits it within files and each split decodes
+  * independently ([[parseLines]]) — at planet scale this is the one
+  * text format where a single file parallelizes across every executor
+  * with zero custom framing.
   * Changeset (`c`) lines parse and drop — the reference's handler
   * ignores them too.
   */
@@ -337,20 +335,19 @@ object Opl {
     b.toString
   }
 
-  /** Distributed read: line splits via text source (intra-file
-    * parallelism — no per-file framing like the other readers need). */
-  def read(spark: SparkSession, paths: Seq[String]): OsmXml.OsmDataFrames = {
-    import spark.implicits._
-    val parsed = spark.read.textFile(paths: _*)
-      .filter(l => l.nonEmpty)
-      .rdd.map(parseLine)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = parsed.flatMap { case N(a, n) => Some((a, n)); case _ => None }
-      .toDF("action", "n").select("action", "n.*")
-    val ways = parsed.flatMap { case W(a, w) => Some((a, w)); case _ => None }
-      .toDF("action", "w").select("action", "w.*")
-    val rels = parsed.flatMap { case R(a, r) => Some((a, r)); case _ => None }
-      .toDF("action", "r").select("action", "r.*")
-    OsmXml.OsmDataFrames(nodes, ways, rels, backing = Seq(parsed))
+  /** Decode a run of lines (one split of a file) into the shared
+    * action-tagged [[OsmXml.Parsed]] form; blank lines and changeset
+    * lines are skipped. */
+  def parseLines(lines: Iterator[String]): OsmXml.Parsed = {
+    val nodes = Vector.newBuilder[(String, OsmNode)]
+    val ways = Vector.newBuilder[(String, OsmWay)]
+    val rels = Vector.newBuilder[(String, OsmRelation)]
+    lines.filter(_.nonEmpty).map(parseLine).foreach {
+      case N(a, n) => nodes += ((a, n))
+      case W(a, w) => ways += ((a, w))
+      case R(a, r) => rels += ((a, r))
+      case Ignored => ()
+    }
+    OsmXml.Parsed(nodes.result(), ways.result(), rels.result())
   }
 }

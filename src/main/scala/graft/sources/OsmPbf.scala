@@ -4,8 +4,6 @@ import java.io.DataInputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.Inflater
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
 
 /** OSM PBF reader — a from-scratch decoder for the public PBF format
@@ -19,12 +17,11 @@ import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
   *  - blob framing: [4-byte BE length][BlobHeader][Blob], each Blob an
   *    independently-decompressible unit of ≤8k entities.
   *
-  * Distribution model: the driver scans ONLY the blob framing (a few
-  * bytes per ~64KB blob) to build an (offset, length) split list, then
-  * executors fetch + decode their blob ranges in parallel — the same
-  * split-per-block structure a DataSource V2 would register, without
-  * needing one for correctness. Scales to planet files: the driver
-  * touches O(#blobs) bytes, decode is embarrassingly parallel.
+  * Distribution model ([[OsmSource.read]]): the driver scans ONLY the
+  * blob framing (a few bytes per ~64KB blob) to build an
+  * (offset, length) split list, then executors fetch + decode their
+  * blobs in parallel, one task per blob. Scales to planet files: the
+  * driver touches O(#blobs) bytes, decode is embarrassingly parallel.
   */
 object OsmPbf {
 
@@ -219,14 +216,7 @@ object OsmPbf {
   final case class Entities(nodes: Vector[OsmNode], ways: Vector[OsmWay],
       relations: Vector[OsmRelation])
 
-  def decodeBlock(block: Array[Byte]): Entities =
-    decodeBlock(block, wantNodes = true, wantWays = true, wantRels = true)
-
-  /** Same, with entity-group skipping: a pushed-down `type` filter lets
-    * the reader not even parse the unwanted groups (a PrimitiveGroup
-    * holds a single entity kind, so skipping is a length jump). */
-  def decodeBlock(block: Array[Byte], wantNodes: Boolean,
-      wantWays: Boolean, wantRels: Boolean): Entities = {
+  def decodeBlock(block: Array[Byte]): Entities = {
     val b = new Pb(block)
     var strings = Vector.empty[String]
     var granularity = 100L
@@ -257,10 +247,6 @@ object OsmPbf {
 
     groups.result().foreach { g =>
       while (g.hasMore) g.tag() match {
-        case (1, 2) if !wantNodes => g.skip(2)
-        case (2, 2) if !wantNodes => g.skip(2)
-        case (3, 2) if !wantWays  => g.skip(2)
-        case (4, 2) if !wantRels  => g.skip(2)
         case (1, 2) => // plain Node
           val n = g.message()
           var id = 0L; var lat = 0L; var lon = 0L
@@ -373,7 +359,6 @@ object OsmPbf {
     Entities(nodes.result(), ways.result(), rels.result())
   }
 
-  /** Distributed read: blob spans parallelized across executors. */
   // ---------- encoder (decodeBlock's exact inverse) ----------
 
   /** Minimal protobuf writer — the mirror of [[Pb]]: varints,
@@ -514,20 +499,5 @@ object OsmPbf {
     }
     out.flush()
     bout.toByteArray
-  }
-
-  def read(spark: SparkSession, path: String): OsmXml.OsmDataFrames = {
-    import spark.implicits._
-    val spans = scanBlobs(path).filter(_.blobType == "OSMData")
-    val n = math.max(1, math.min(spans.size, 256))
-    val rdd = spark.sparkContext.parallelize(spans, n)
-      .map(span => decodeBlock(readBlob(span)))
-    val cached = rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    OsmXml.OsmDataFrames(
-      cached.flatMap(_.nodes).toDF(),
-      cached.flatMap(_.ways).toDF(),
-      cached.flatMap(_.relations).toDF(),
-      backing = Seq(cached))
   }
 }

@@ -2,11 +2,18 @@ package graft.sources
 
 import java.io.InputStream
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.runtime.universe.TypeTag
 
-/** Format auto-detection + dispatch over the three OSM file readers
-  * (reference: src/input.cpp:307-336 prepares input files and detects
-  * format from extension/content; osmium sniffs magic bytes).
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.storage.StorageLevel
+
+/** The one OSM reader: format auto-detection, then one decode of every
+  * input into one cached set of entity frames (reference:
+  * src/input.cpp:307-336 prepares input files and detects format from
+  * extension/content; osmium sniffs magic bytes). The format objects
+  * ([[OsmXml]], [[O5m]], [[Opl]], [[OsmPbf]]) supply only decoders.
   *
   * Detection is content-based (first decompressed bytes):
   *  - 0xFF 0xE0 → o5m/o5c (reset + header datasets)
@@ -103,42 +110,78 @@ object OsmSource {
   }
 
   /** Read any mix of .osm/.osc[.gz|.bz2], .o5m/.o5c[.gz|.bz2], .pbf,
-    * .opl files into one set of entity frames (formats grouped,
-    * results unioned). `format` != "auto" forces every input through
-    * that reader (the CLI's -r/--input-reader). */
+    * .opl files into one set of entity frames. `format` != "auto"
+    * forces every input through that decoder (the CLI's
+    * -r/--input-reader).
+    *
+    * Each format only decodes, into the shared action-tagged
+    * [[OsmXml.Parsed]] form, inside executors:
+    *  - xml: one task per file ([[OsmXml.parseString]]);
+    *  - o5m: one task per file ([[O5m.parseBytes]] after
+    *    [[O5m.decompress]]);
+    *  - opl: line splits, so a single file spreads over many tasks
+    *    ([[Opl.parseLines]]);
+    *  - pbf: one task per OSMData blob, found by a driver-side scan of
+    *    the blob framing only ([[OsmPbf.scanBlobs]]); pbf has no change
+    *    sections, so every entity is a `create`.
+    *
+    * The decoded chunks of every format are unioned and persisted ONCE
+    * (`MEMORY_AND_DISK`), so each file is decoded once however many
+    * times the three frames are read; `backing` holds that one cache
+    * and the caller releases it with `unpersistBacking`. Building the
+    * frames runs no job. */
   def read(spark: SparkSession, paths: Seq[String],
       format: String = "auto"): OsmXml.OsmDataFrames = {
+    val sc = spark.sparkContext
     val byFormat =
       if (format == "auto") paths.groupBy(sniffPath)
       else Map(format -> paths)
-    val parts = byFormat.toSeq.sortBy(_._1).map {
-      case ("xml", ps) => OsmXml.read(spark, ps)
-      case ("o5m", ps) => O5m.read(spark, ps)
-      case ("opl", ps) => Opl.read(spark, ps)
+    val decoded: Seq[RDD[OsmXml.Parsed]] = byFormat.toSeq.sortBy(_._1).map {
+      case ("xml", ps) =>
+        sc.wholeTextFiles(ps.mkString(","))
+          .map { case (_, xml) => OsmXml.parseString(xml) }
+      case ("o5m", ps) =>
+        // binaryFiles runs no Hadoop codec: decompress per task
+        sc.binaryFiles(ps.mkString(",")).map { case (_, pds) =>
+          O5m.parseBytes(O5m.decompress(pds.toArray()))
+        }
+      case ("opl", ps) =>
+        spark.read.textFile(ps: _*).rdd
+          .mapPartitions(lines => Iterator(Opl.parseLines(lines)))
       case ("pbf", ps) =>
-        // pbf carries no change sections; normalize to action=create so
-        // the frames union with the xml/o5m readers' shape
-        ps.map { p =>
-          val dfs = OsmPbf.read(spark, p)
-          def withAction(df: org.apache.spark.sql.DataFrame) = {
-            val cols = org.apache.spark.sql.functions.lit("create")
-              .as("action") +: df.columns.map(df.col).toSeq
-            df.select(cols: _*)
+        val spans = ps.flatMap(OsmPbf.scanBlobs)
+          .filter(_.blobType == "OSMData")
+        sc.parallelize(spans, math.max(1, math.min(spans.size, 256)))
+          .map { span =>
+            val e = OsmPbf.decodeBlock(OsmPbf.readBlob(span))
+            OsmXml.Parsed(e.nodes.map(("create", _)),
+              e.ways.map(("create", _)), e.relations.map(("create", _)))
           }
-          OsmXml.OsmDataFrames(withAction(dfs.nodes), withAction(dfs.ways),
-            withAction(dfs.relations), backing = dfs.backing)
-        }.reduce(union)
       case (other, _) =>
         throw new IllegalArgumentException(s"unsupported format $other")
     }
-    parts.reduce(union)
+    val parsed = decoded.reduce(_ union _)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    OsmXml.OsmDataFrames(frame(spark, parsed.flatMap(_.nodes)),
+      frame(spark, parsed.flatMap(_.ways)),
+      frame(spark, parsed.flatMap(_.relations)), backing = Seq(parsed))
   }
 
-  private def union(a: OsmXml.OsmDataFrames,
-      b: OsmXml.OsmDataFrames): OsmXml.OsmDataFrames =
-    OsmXml.OsmDataFrames(
-      a.nodes.unionByName(b.nodes),
-      a.ways.unionByName(b.ways),
-      a.relations.unionByName(b.relations),
-      backing = a.backing ++ b.backing)
+  /** `(action, entity)` rows as one flat frame: `action`, then the
+    * entity's columns. Under the tuple's struct every entity column
+    * would read nullable; the entity is never null, so each column
+    * keeps its nullability in the entity's own schema (the `coalesce`
+    * default is never taken). Parquet stores a non-nullable column
+    * without definition levels, so the middle and the tables written
+    * from these frames stay as small as the entity schema allows. */
+  private def frame[T <: Product: TypeTag](spark: SparkSession,
+      rows: RDD[(String, T)]): DataFrame = {
+    import spark.implicits._
+    val entity = Encoders.product[T].schema.fields.toSeq.map { f =>
+      val c = col(s"e.${f.name}")
+      (if (f.nullable) c else coalesce(c, lit(0).cast(f.dataType)))
+        .as(f.name)
+    }
+    rows.toDF("action", "e").select(col("action") +: entity: _*)
+  }
 }

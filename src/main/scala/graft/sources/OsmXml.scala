@@ -10,12 +10,13 @@ import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
 /** OSM XML / OSC change-file source (reference: src/input.cpp via
   * osmium::io::Reader; format detect src/input.cpp:307-336).
   *
-  * Files are parsed distributed: one task per file via a parallelized
-  * path list + per-partition StAX streaming — each OSM extract file is
-  * one split, which matches how planet dumps are distributed (many
-  * regional files). A PBF DataSource V2 with intra-file blob splits is
-  * the next rung for single-planet-file loads; XML is the format the
-  * reference's own test corpus uses.
+  * [[OsmSource.read]] parses one file per task with [[parseString]]
+  * (StAX streaming) — each OSM extract file is one split, which
+  * matches how planet dumps are distributed (many regional files);
+  * XML is the format the reference's own test corpus uses. This object
+  * also holds the shared decoded form ([[Parsed]]), the frames every
+  * read returns ([[OsmDataFrames]]) and the change-stream read that
+  * stamps a sequence per row ([[readSequenced]]).
   *
   * `.osc` change files wrap entities in <create>/<modify>/<delete>
   * sections (src/input.cpp:189-194); the action is surfaced as a column
@@ -141,26 +142,6 @@ object OsmXml {
       backing.foreach(_.unpersist(blocking = false))
   }
 
-  /** Read a single (possibly gzipped) .osc change file — small files,
-    * parsed driver-side; the entity DataFrames carry the action
-    * column. */
-  def readChangeFile(spark: SparkSession, path: String): OsmDataFrames = {
-    import spark.implicits._
-    val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val bytes =
-      if (path.endsWith(".gz")) {
-        val in = new java.util.zip.GZIPInputStream(
-          new java.io.ByteArrayInputStream(raw))
-        val out = in.readAllBytes(); in.close(); out
-      } else raw
-    val parsed = parseString(new String(bytes,
-      java.nio.charset.StandardCharsets.UTF_8))
-    OsmDataFrames(
-      parsed.nodes.toDF("action", "n").select($"action", $"n.*"),
-      parsed.ways.toDF("action", "w").select($"action", $"w.*"),
-      parsed.relations.toDF("action", "r").select($"action", $"r.*"))
-  }
-
   /** Distributed multi-file read that additionally stamps every entity
     * row with a `seq` BIGINT column — `(fileIndex << 32) | intraFilePos`
     * where fileIndex follows the SORTED path order (the replication
@@ -207,24 +188,6 @@ object OsmXml {
     val rels = parsed.flatMap { case (f, p) =>
       p.relations.zipWithIndex.map { case ((a, r), i) => (seq(f, i), a, r) }
     }.toDF("seq", "action", "r").select($"seq", $"action", $"r.*")
-    OsmDataFrames(nodes, ways, rels, backing = Seq(parsed))
-  }
-
-  /** Read OSM XML files distributed (one split per file). The PARSED
-    * entities are cached, not the raw text — each file is parsed once
-    * even though three entity frames are derived from it. */
-  def read(spark: SparkSession, paths: Seq[String]): OsmDataFrames = {
-    import spark.implicits._
-    val parsed = spark.sparkContext
-      .wholeTextFiles(paths.mkString(","))
-      .map { case (_, xml) => parseString(xml) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = parsed.flatMap(_.nodes)
-      .toDF("action", "n").select("action", "n.*")
-    val ways = parsed.flatMap(_.ways)
-      .toDF("action", "w").select("action", "w.*")
-    val rels = parsed.flatMap(_.relations)
-      .toDF("action", "r").select("action", "r.*")
     OsmDataFrames(nodes, ways, rels, backing = Seq(parsed))
   }
 }

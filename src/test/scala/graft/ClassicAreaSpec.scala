@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.classic.{ClassicPipeline, StyleFile}
 import graft.geom.Srid
-import graft.sources.OsmXml
+import graft.sources.OsmSource
 
 /** way_area across projections — the reference's own goldens from
   * tests/test-output-pgsql-area.cpp over test_output_pgsql_area.osm —
@@ -15,7 +15,7 @@ import graft.sources.OsmXml
   */
 class ClassicAreaSpec extends SparkSpecBase {
 
-  private lazy val areaOsm = OsmXml.read(spark,
+  private lazy val areaOsm = OsmSource.read(spark,
     Seq("/root/reference/tests/data/test_output_pgsql_area.osm"))
 
   private def areasByName(polygon: DataFrame): Map[String, Double] =
@@ -107,7 +107,7 @@ class ClassicAreaSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("multigeom")
     val f = dir.resolve("two_outer.osm")
     Files.writeString(f, twoOuterXml)
-    val osm = OsmXml.read(spark, Seq(f.toString))
+    val osm = OsmSource.read(spark, Seq(f.toString))
 
     val split = ClassicPipeline.run(osm, StyleFile.defaultStyle,
       ClassicPipeline.Settings(srid = Srid.WGS84))
@@ -140,7 +140,7 @@ class ClassicAreaSpec extends SparkSpecBase {
         |    <tag k="natural" v="coastline"/>
         |  </way>
         |</osm>""".stripMargin)
-    val osm = OsmXml.read(spark, Seq(f.toString))
+    val osm = OsmSource.read(spark, Seq(f.toString))
 
     // default: the coastline tag is skipped before the keep check →
     // no export hit → dropped (filter_tags' `continue` runs before
@@ -161,7 +161,7 @@ class ClassicAreaSpec extends SparkSpecBase {
   }
 
   test("z_order ranking goldens (test-output-pgsql-z_order.cpp)") {
-    val osm = OsmXml.read(spark,
+    val osm = OsmSource.read(spark,
       Seq("/root/reference/tests/data/test_output_pgsql_z_order.osm"))
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle)
     // among layer-less ways the class order is the road hierarchy
@@ -195,7 +195,7 @@ class ClassicAreaSpec extends SparkSpecBase {
         |    <tag k="natural" v="coastline"/>
         |  </node>
         |</osm>""".stripMargin)
-    val osm = OsmXml.read(spark, Seq(f.toString))
+    val osm = OsmSource.read(spark, Seq(f.toString))
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle)
     // the closed way keeps place=island, is forced polygon by the
     // coastline, and the coastline tag itself is still discarded

@@ -1,7 +1,7 @@
 package graft
 
 import graft.classic.{ClassicPipeline, StyleFile}
-import graft.sources.OsmPbf
+import graft.sources.OsmSource
 
 /** The reference's own regression: importing the Liechtenstein extract
   * with the default style must produce the golden table counts from
@@ -14,7 +14,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
   private val path = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"
 
   test("liechtenstein regression counts vs reference goldens") {
-    val osm = OsmPbf.read(spark, path)
+    val osm = OsmSource.read(spark, Seq(path))
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle)
     val nPoint = t.point.count()
     val nPoly = t.polygon.count()
@@ -54,7 +54,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     import graft.expressions.GeomExpressions.{stAreaN, stLengthN}
     import spark.implicits._
-    val osm = OsmPbf.read(spark, path)
+    val osm = OsmSource.read(spark, Seq(path))
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle,
       ClassicPipeline.Settings(srid = graft.geom.Srid.WGS84))
     // -l counts differ from 3857: the 1° split threshold merges
@@ -80,13 +80,13 @@ class ClassicRegressionSpec extends SparkSpecBase {
   }
 
   test("way-area + route-relation fixtures (test-output-pgsql.cpp:103-130)") {
-    val wa = ClassicPipeline.run(graft.sources.OsmXml.read(spark,
+    val wa = ClassicPipeline.run(graft.sources.OsmSource.read(spark,
       Seq("/root/reference/tests/data/test_output_pgsql_way_area.osm")),
       StyleFile.defaultStyle)
     assert(wa.point.count() == 0 && wa.line.count() == 0 &&
       wa.roads.count() == 0)
     assert(wa.polygon.count() == 1)
-    val rr = ClassicPipeline.run(graft.sources.OsmXml.read(spark,
+    val rr = ClassicPipeline.run(graft.sources.OsmSource.read(spark,
       Seq("/root/reference/tests/data/test_output_pgsql_route_rel.osm")),
       StyleFile.defaultStyle)
     // the way AND the route relation land in line; only the way is a
@@ -100,7 +100,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
     // tests/test-output-pgsql-hstore-match-only.cpp: with the all-
     // nocolumn style + --hstore --hstore-match-only, the fixture file
     // must yield point=6, polygon=7, line=12, roads=3
-    val osm = graft.sources.OsmXml.read(spark,
+    val osm = graft.sources.OsmSource.read(spark,
       Seq("/root/reference/tests/data/hstore-match-only.osm"))
     val style = StyleFile.parse(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
@@ -121,7 +121,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
   test("invalid-location fixture: the node contributes nothing") {
     // tests/test-osm-file-parsing.cpp "invalid location": lat=200 →
     // the node is skipped entirely (src/osmdata.cpp:42-47)
-    val osm = graft.sources.OsmXml.read(spark,
+    val osm = graft.sources.OsmSource.read(spark,
       Seq("/root/reference/tests/data/test_invalid_location.osm"))
     assert(osm.nodes.count() == 1L) // parsed ...
     assert(graft.sources.Validate.dropInvalidLocations(osm.nodes)
@@ -130,7 +130,7 @@ class ClassicRegressionSpec extends SparkSpecBase {
 
   test("int4 conversion fixture: first-number/range-mean parse, " +
       "overflow → NULL (test-output-pgsql-int4.cpp verbatim)") {
-    val osm = graft.sources.OsmXml.read(spark, Seq(
+    val osm = graft.sources.OsmSource.read(spark, Seq(
       "/root/reference/tests/data/test_output_pgsql_int4.osm"))
     val style = StyleFile.parse(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
@@ -164,9 +164,9 @@ class ClassicRegressionSpec extends SparkSpecBase {
     // bz2+XML path must agree with the binary reader on entity counts
     val bz2 = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.bz2"
     assert(graft.sources.OsmSource.sniffPath(bz2) == "xml")
-    val xml = graft.sources.OsmXml.read(spark, Seq(bz2))
+    val xml = graft.sources.OsmSource.read(spark, Seq(bz2))
     assert(xml.nodes.count() == 65733L)
-    val pbf = OsmPbf.read(spark, path)
+    val pbf = OsmSource.read(spark, Seq(path))
     assert(xml.ways.count() == pbf.ways.count())
     assert(xml.relations.count() == pbf.relations.count())
   }

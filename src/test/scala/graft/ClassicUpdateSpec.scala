@@ -1,7 +1,7 @@
 package graft
 
 import graft.classic.{ClassicPipeline, ClassicUpdate, StyleFile}
-import graft.sources.{OsmPbf, OsmXml}
+import graft.sources.OsmSource
 
 /** The reference's update regression (tests/bdd/regression/
   * update.feature): import Liechtenstein, apply 000466354.osc.gz →
@@ -15,9 +15,9 @@ class ClassicUpdateSpec extends SparkSpecBase {
 
   test("liechtenstein + diff matches reference goldens, incremental == full") {
     val style = StyleFile.defaultStyle
-    val before = OsmPbf.read(spark, pbf)
+    val before = OsmSource.read(spark, Seq(pbf))
     val prev = ClassicPipeline.run(before, style)
-    val changes = OsmXml.readChangeFile(spark, osc)
+    val changes = OsmSource.read(spark, Seq(osc))
 
     // full recompute on the updated entity state
     val after = ClassicUpdate.applyChanges(before, changes)
@@ -37,8 +37,8 @@ class ClassicUpdateSpec extends SparkSpecBase {
 
   test("hstore mode (-k/-j) matches its own update goldens") {
     val style = StyleFile.defaultStyle
-    val before = OsmPbf.read(spark, pbf)
-    val changes = OsmXml.readChangeFile(spark, osc)
+    val before = OsmSource.read(spark, Seq(pbf))
+    val changes = OsmSource.read(spark, Seq(osc))
     val after = ClassicUpdate.applyChanges(before, changes)
     val t = ClassicPipeline.run(after, style,
       ClassicPipeline.Settings(hstore = true))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.OsmXml
+import graft.sources.OsmSource
 
 /** Port of tests/bdd/flex/delete-callbacks.feature: applying
   * 008-ch.osc.gz in append mode must surface every deleted entity to
@@ -16,8 +16,8 @@ class DeleteCallbacksSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("delete callbacks see every deleted entity (008-ch goldens)") {
-    val ch = OsmXml.readChangeFile(spark,
-      "/root/reference/tests/data/008-ch.osc.gz")
+    val ch = OsmSource.read(spark,
+      Seq("/root/reference/tests/data/008-ch.osc.gz"))
 
     def agg(df: DataFrame): (Long, Long, Long) =
       df.where($"action" === "delete")
@@ -31,8 +31,8 @@ class DeleteCallbacksSpec extends SparkSpecBase {
 
   test("deleted entities carry no payload") {
     // "No object payload is available": deletes arrive id+version only
-    val ch = OsmXml.readChangeFile(spark,
-      "/root/reference/tests/data/008-ch.osc.gz")
+    val ch = OsmSource.read(spark,
+      Seq("/root/reference/tests/data/008-ch.osc.gz"))
     val n = ch.nodes.where($"action" === "delete")
       .where(size($"tags") === 0).count()
     val w = ch.ways.where($"action" === "delete")

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Expire, TileCover}
-import graft.sources.OsmXml
+import graft.sources.OsmSource
 
 /** The osm2pgsql-expire binary's own golden outputs
   * (tests/bdd/expire/expire.feature + tests/data/expire/): the z18
@@ -23,7 +23,7 @@ class ExpireGoldenSpec extends SparkSpecBase {
       .readAllLines(java.nio.file.Paths.get(s"$dataDir/$name"))
       .asScala.filter(_.nonEmpty).toSet
 
-  private lazy val osm = OsmXml.read(spark, Seq(s"$dataDir/test-data.osm"))
+  private lazy val osm = OsmSource.read(spark, Seq(s"$dataDir/test-data.osm"))
 
   private def run(buffer: Double): Set[String] =
     Expire.formatTiles(Expire.fromOsmEntities(osm,

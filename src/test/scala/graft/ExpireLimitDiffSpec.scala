@@ -252,8 +252,8 @@ class ExpireLimitDiffSpec extends SparkSpecBase {
   }
 
   test("run-with-expire.feature: expire into table in append mode") {
-    val osm = graft.sources.OsmPbf.read(spark,
-      "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf")
+    val osm = graft.sources.OsmSource.read(spark,
+      Seq("/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"))
     // import: 1562 tagged nodes inserted, nothing expires on create
     assert(osm.nodes.where(size($"tags") > 0).count() == 1562)
 

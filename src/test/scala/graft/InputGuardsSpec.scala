@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.flex.{Coerce, FlexColumn, FlexType}
 import graft.sinks.PgSink
-import graft.sources.Validate
+import graft.sources.{OsmXml, Validate}
 
 /** Round-5 BDD ports: input.feature (oversize relations),
   * timestamp.feature (compact OSM timestamp form), dsn.feature
@@ -96,7 +97,7 @@ class InputGuardsSpec extends SparkSpecBase {
       java.nio.file.Files.newOutputStream(dir.resolve("c.osm.bz2")))
     bz.write(doc(5, 6, 12).getBytes("UTF-8")); bz.close()
 
-    val osm = graft.sources.OsmXml.read(spark,
+    val osm = graft.sources.OsmSource.read(spark,
       Seq(s"$dir/a.osm", s"$dir/b.osm.gz", s"$dir/c.osm.bz2"))
     try {
       assert(osm.nodes.count() == 6)
@@ -104,6 +105,87 @@ class InputGuardsSpec extends SparkSpecBase {
       assert(osm.ways.select($"id").as[Long].collect().toSet ==
         Set(10L, 11L, 12L))
     } finally osm.unpersistBacking()
+  }
+
+  test("one reader: every format yields the same frames, an .osc keeps " +
+      "its actions, and one read caches once") {
+    import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
+    import graft.sources.{O5m, Opl, OsmPbf, OsmSource}
+    import spark.implicits._
+    val nodes = Seq(
+      OsmNode(1, lon = 9.5312345, lat = 47.1234567,
+        tags = Map("amenity" -> "cafe", "name" -> "Kaffee")),
+      OsmNode(2, lon = 9.5323456, lat = 47.1245678),
+      OsmNode(3, lon = -0.0000001, lat = -33.9999999,
+        tags = Map("highway" -> "crossing")))
+    val ways = Seq(
+      OsmWay(10, nodes = Seq(1, 2, 3), tags = Map("highway" -> "path")),
+      OsmWay(11, nodes = Seq(3, 1)))
+    val rels = Seq(OsmRelation(20, members = Seq(OsmMember("w", 10, "outer"),
+      OsmMember("n", 2, ""), OsmMember("w", 11, "inner")),
+      tags = Map("type" -> "multipolygon")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-one-reader")
+    def put(name: String, bytes: Array[Byte]): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, bytes)
+      p.toString
+    }
+    val files = Seq(
+      put("w.o5m", O5m.encode(nodes, ways, rels)),
+      put("w.opl", Opl.render(nodes, ways, rels).getBytes("UTF-8")),
+      put("w.osm.pbf", OsmPbf.encode(nodes, ways, rels)))
+    val osc = put("c.osc",
+      """<?xml version='1.0' encoding='UTF-8'?>
+        |<osmChange version="0.6">
+        |<create><node id="4" version="1" lat="47.2" lon="9.6"/></create>
+        |<modify><node id="1" version="2" lat="47.1" lon="9.5">
+        |<tag k="amenity" v="bar"/></node></modify>
+        |<delete><node id="2" version="2"/></delete>
+        |</osmChange>""".stripMargin.getBytes("UTF-8"))
+
+    val reads = (files :+ osc).map(p => OsmSource.read(spark, Seq(p)))
+    try {
+      // one schema per stream: names, types and nullability
+      for (stream <- Seq[OsmXml.OsmDataFrames => DataFrame](
+          _.nodes, _.ways, _.relations))
+        assert(reads.map(r => stream(r).schema).distinct.size == 1)
+      // the entity schema's non-nullable columns stay non-nullable, so
+      // the stored parquet carries no definition levels for them
+      assert(reads.head.nodes.schema.fields.tail.map(_.nullable).toSeq ==
+        graft.model.OsmSchema.node.fields.map(_.nullable).toSeq)
+
+      // the same rows from every world file, on the 1e-7 grid
+      def grid(c: String) = round(col(c) * 1e7).cast("long")
+      def rows(df: DataFrame, cols: Column*) =
+        df.select(Seq($"action", $"id", $"visible", $"tags") ++ cols: _*)
+          .collect().toSet
+      val world = reads.take(3)
+      for (r <- world.tail) {
+        assert(rows(r.nodes, grid("lon"), grid("lat")) ==
+          rows(world.head.nodes, grid("lon"), grid("lat")))
+        assert(rows(r.ways, $"nodes") == rows(world.head.ways, $"nodes"))
+        assert(rows(r.relations, $"members") ==
+          rows(world.head.relations, $"members"))
+      }
+      assert(rows(world.head.nodes, grid("lon"), grid("lat")).size == 3)
+
+      // the change file's sections survive as actions
+      val change = reads.last.nodes.select($"id", $"action", $"visible")
+        .as[(Long, String, Boolean)].collect().toSet
+      assert(change == Set((4L, "create", true), (1L, "modify", true),
+        (2L, "delete", false)))
+    } finally reads.foreach(_.unpersistBacking())
+
+    // a mixed-format read caches its decoded input once
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val mixed = OsmSource.read(spark, files :+ osc)
+    try {
+      assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
+      assert(mixed.backing.size == 1)
+      assert(mixed.nodes.count() == 3 * 3 + 3)
+      assert(mixed.ways.count() == 3 * 2 && mixed.relations.count() == 3)
+    } finally mixed.unpersistBacking()
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("wildcmp: the reference's wild_match vectors hold through cleanTags") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Middle
-import graft.sources.{OsmText, OsmXml}
+import graft.sources.{OsmSource, OsmText, OsmXml}
 
 /** Port of tests/bdd/flex/invalid-geometries.feature: ways and
   * relations whose geometry cannot be built are dropped silently
@@ -143,7 +143,7 @@ class InvalidGeometriesSpec extends SparkSpecBase {
 
   test("validgeom fixture: 12 valid, non-empty polygons " +
       "(test-output-pgsql-validgeom.cpp)") {
-    val osm = OsmXml.read(spark, Seq(
+    val osm = OsmSource.read(spark, Seq(
       "/root/reference/tests/data/test_output_pgsql_validgeom.osm"))
     val t = graft.classic.ClassicPipeline.run(osm,
       graft.classic.StyleFile.defaultStyle)

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Middle, Update}
+import graft.classic.ClassicUpdate
+import graft.operators.Middle
+import graft.sources.OsmXml.OsmDataFrames
 
 /** Pins the algebraic pushdowns q32/q38/q50 rely on (round 16): for
   * middle tables REBUILT from flat edge rows, the operator
@@ -45,17 +47,21 @@ class MiddlePushdownSpec extends SparkSpecBase {
     // "orders": rel o owns ways o*3, o*3+1 (all members type "w")
     val orders = spark.range(0, 40)
       .select((col("id") / 3).cast("long").as("rel"), col("id").as("way"))
-    val rels = orders.groupBy(col("rel").as("rel_id"))
-      .agg(collect_list(struct(lit("w").as("type"),
+    val rels = orders.groupBy(col("rel").as("id"))
+      .agg(collect_list(struct(lit("w").as("mtype"),
         col("way").as("ref"))).as("members"))
-    val (_, viaOperator) = Update.dependencyClosure(
-      changed, ways, "w", "refs", rels, "rel_id", "members")
+    // the append's closure, on a change that holds nodes only
+    val none = Seq.empty[Long].toDF("id")
+    val viaOperator = ClassicUpdate.closure(
+      OsmDataFrames(changed, ways.toDF("id", "nodes"), rels),
+      OsmDataFrames(changed, none, none))
+      .where(col("kind") === "r").select(col("id"))
     val pendingWays = edges
       .join(changed, edges("ref") === col("id"), "left_semi")
       .select(col("w")).distinct()
     val direct = orders
       .join(pendingWays, orders("way") === col("w"), "left_semi")
-      .select(col("rel").as("rel_id")).distinct()
+      .select(col("rel").as("id")).distinct()
     assert(viaOperator.as[Long].collect().toSet ==
       direct.as[Long].collect().toSet)
   }

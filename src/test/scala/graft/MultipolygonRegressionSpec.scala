@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.classic.{ClassicPipeline, ClassicUpdate, StyleFile}
 import graft.expressions.GeomExpressions.stAreaN
 import graft.geom.{Ewkb, Polygon}
-import graft.sources.OsmXml
+import graft.sources.OsmSource
 
 /** The multipolygon acceptance corpus (SURVEY §7.4 "known-hard"):
   * tests/data/test_multipolygon.osm through the classic pipeline,
@@ -27,7 +27,7 @@ class MultipolygonRegressionSpec extends SparkSpecBase {
       .map { case (id, a) => id -> math.round(a) }.toMap
 
   test("multipolygon corpus import goldens") {
-    val osm = OsmXml.read(spark, Seq(osmPath))
+    val osm = OsmSource.read(spark, Seq(osmPath))
     val t = ClassicPipeline.run(osm, StyleFile.defaultStyle)
     val areas = areasById(t)
 
@@ -72,9 +72,9 @@ class MultipolygonRegressionSpec extends SparkSpecBase {
   }
 
   test("multipolygon corpus diff update goldens") {
-    val osm = OsmXml.read(spark, Seq(osmPath))
+    val osm = OsmSource.read(spark, Seq(osmPath))
     val prev = ClassicPipeline.run(osm, StyleFile.defaultStyle)
-    val changes = OsmXml.readChangeFile(spark, oscPath)
+    val changes = OsmSource.read(spark, Seq(oscPath))
     val t = ClassicUpdate.incrementalUpdate(osm, changes, prev,
       StyleFile.defaultStyle)
     val areas = areasById(t)

@@ -171,7 +171,7 @@ class O5mSpec extends SparkSpecBase {
     gz.write(O5m.encode(nodes, Nil, Nil)); gz.close()
     Files.write(p, bos.toByteArray)
     assert(OsmSource.sniff(Files.readAllBytes(p)) == "o5m")
-    val dfs = O5m.read(spark, Seq(p.toString))
+    val dfs = OsmSource.read(spark, Seq(p.toString))
     assert(dfs.nodes.count() == 3)
   }
 
@@ -188,7 +188,7 @@ class O5mSpec extends SparkSpecBase {
     // the path-based sniffer streams the decompressor over the file —
     // the shape that also works when the first bzip2 block is ~900 KB
     assert(OsmSource.sniffPath(p.toString) == "o5m")
-    val dfs = O5m.read(spark, Seq(p.toString))
+    val dfs = OsmSource.read(spark, Seq(p.toString))
     assert(dfs.nodes.count() == 3 && dfs.ways.count() == 2)
   }
 

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 
+import graft.classic.ClassicUpdate
 import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
 import graft.operators.{Dedup, Expire, Middle, Similarity, Update}
+import graft.sources.OsmXml.OsmDataFrames
 import graft.sources.Validate
 
 /** Operator semantics on tiny OSM-shaped fixtures (the Spark analog of
@@ -68,11 +70,14 @@ class OperatorsSpec extends SparkSpecBase {
   }
 
   test("dependency closure: changed node -> pending ways -> pending rels") {
-    val (pendingWays, pendingRels) = Update.dependencyClosure(
-      Seq(4L).toDF("id"), ways, "id", "nodes", rels, "id", "members",
-      typeField = "mtype")
-    assert(pendingWays.as[Long].collect().toSet == Set(11L))
-    assert(pendingRels.select("id").as[Long].collect().toSet == Set(20L))
+    // the append's closure, on a change that holds node 4 only
+    val closure = ClassicUpdate.closure(OsmDataFrames(nodes, ways, rels),
+      OsmDataFrames(nodes.where($"id" === 4), Seq.empty[OsmWay].toDF(),
+        Seq.empty[OsmRelation].toDF()))
+    def ids(kind: String): Set[Long] =
+      closure.where($"kind" === kind).select("id").as[Long].collect().toSet
+    assert(ids("w") == Set(11L))
+    assert(ids("r") == Set(20L))
   }
 
   test("latest-version-wins + op classification") {

@@ -92,7 +92,7 @@ class OplSpec extends SparkSpecBase {
         |r20 v1 Ttype=route Mw10@
         |c99 k1
         |""".stripMargin)
-    val osm = Opl.read(spark, Seq(f.toString))
+    val osm = OsmSource.read(spark, Seq(f.toString), "opl")
     assert(osm.nodes.count() == 3)
     assert(osm.ways.count() == 1)
     assert(osm.relations.count() == 1)

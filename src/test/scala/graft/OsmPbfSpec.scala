@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.OsmPbf
+import graft.sources.{OsmPbf, OsmSource}
 
 /** PBF decoder against the reference's own regression extract
   * (tests/data/liechtenstein-2013-08-03.osm.pbf): structural and
@@ -24,14 +24,14 @@ class OsmPbfSpec extends SparkSpecBase {
     // (untagged ones go to process_untagged_*); its own golden for
     // this extract is 1562 / 7105 / 113 — the file holds 16 untagged
     // ways on top of that
-    val osm = OsmPbf.read(spark, path)
+    val osm = OsmSource.read(spark, Seq(path))
     assert(osm.nodes.where(size($"tags") > 0).count() == 1562L)
     assert(osm.ways.where(size($"tags") > 0).count() == 7105L)
     assert(osm.relations.where(size($"tags") > 0).count() == 113L)
   }
 
   test("decode: counts, bbox, ordering, ref integrity") {
-    val osm = OsmPbf.read(spark, path)
+    val osm = OsmSource.read(spark, Seq(path))
     val nNodes = osm.nodes.count()
     val nWays = osm.ways.count()
     val nRels = osm.relations.count()

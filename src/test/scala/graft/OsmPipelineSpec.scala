@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.Middle
-import graft.sources.{OsmXml, Validate}
+import graft.sources.{OsmSource, OsmXml, Validate}
 import graft.functions.GeomUdfs
 
 /** End-to-end slice (SURVEY.md §7.2): the reference's
@@ -54,7 +54,7 @@ class OsmPipelineSpec extends SparkSpecBase {
     val file = dir.resolve("area.osm")
     Files.writeString(file, fixtureXml)
 
-    val osm = OsmXml.read(spark, Seq(file.toString))
+    val osm = OsmSource.read(spark, Seq(file.toString))
     assert(Validate.orderingViolations(osm.nodes).isEmpty)
     assert(osm.nodes.count() == 12)
 

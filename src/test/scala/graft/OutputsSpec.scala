@@ -4,13 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.classic.{ClassicOutput, StyleFile}
+import graft.classic.{ClassicPipeline, StyleFile}
 import graft.flex.{Coerce, FlexColumn, FlexIds, FlexTableDef, FlexType}
 import graft.geom.{Box, Ewkb, FromOsm, GeomOps, Pt}
-import graft.model.{OsmNode, OsmWay}
+import graft.model.{OsmNode, OsmRelation, OsmWay}
 import graft.operators.{Gen, Locator}
-import graft.sinks.{ClusteredParquet, PgSink, Properties}
+import graft.sinks.{PgSink, Properties}
 import graft.sources.Multimodal
+import graft.sources.OsmXml.OsmDataFrames
 import graft.streaming.Streams
 
 class OutputsSpec extends SparkSpecBase {
@@ -22,15 +23,10 @@ class OutputsSpec extends SparkSpecBase {
     assert(style.deleteKeys.contains("created_by"))
 
     val nodes = Seq(
-      OsmNode(1, tags = Map("amenity" -> "cafe", "created_by" -> "x")),
-      OsmNode(2, tags = Map("odd_key" -> "1"))).toDF()
-    val points = ClassicOutput.pointTable(nodes, style)
-    assert(points.count() == 1) // node 2 has no exported tag
-    assert(points.select("amenity").as[String].head() == "cafe")
-    // delete-flagged tag removed from the tags map
-    assert(!points.select(map_keys($"tags")).as[Seq[String]].head()
-      .contains("created_by"))
-
+      OsmNode(1, lon = 0.0, lat = 0.0,
+        tags = Map("amenity" -> "cafe", "created_by" -> "x")),
+      OsmNode(2, lon = 0.001, lat = 0.0, tags = Map("odd_key" -> "1")),
+      OsmNode(3, lon = 0.001, lat = 0.001)).toDF()
     val ways = Seq(
       OsmWay(10, nodes = Seq(1, 2, 3, 1),
         tags = Map("building" -> "yes")), // closed + polygon tag
@@ -38,11 +34,22 @@ class OutputsSpec extends SparkSpecBase {
         tags = Map("highway" -> "motorway")), // open road
       OsmWay(12, nodes = Seq(1, 2, 3, 1),
         tags = Map("building" -> "yes", "area" -> "no"))).toDF() // override
-    val (polys, lines, roads) = ClassicOutput.wayTables(ways, style)
-    assert(polys.select("osm_id").as[Long].collect().toSet == Set(10L))
-    assert(lines.select("osm_id").as[Long].collect().toSet == Set(11L, 12L))
-    assert(roads.select("osm_id").as[Long].collect().toSet == Set(11L))
-    assert(lines.where($"osm_id" === 11).select("z_order")
+    val t = ClassicPipeline.run(OsmDataFrames(nodes, ways,
+      Seq.empty[OsmRelation].toDF()), style)
+
+    // node 2 has no exported tag, node 3 none at all
+    val points = t.point.select($"osm_id", $"tags")
+      .as[(Long, Map[String, String])].collect().toSeq
+    assert(points.map(_._1) == Seq(1L))
+    // delete-flagged tag removed from the tags map
+    assert(points.head._2 == Map("amenity" -> "cafe"))
+
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("osm_id").as[Long].collect().toSet
+    assert(ids(t.polygon) == Set(10L))
+    assert(ids(t.line) == Set(11L, 12L))
+    assert(ids(t.roads) == Set(11L))
+    assert(t.line.where($"osm_id" === 11).select("z_order")
       .as[Int].head() == 39)
   }
 
@@ -339,16 +346,6 @@ class OutputsSpec extends SparkSpecBase {
       "SELECT {zoom} AS zoom, {x} AS x, {y} AS y, count(*) AS n FROM tsql_t")
     assert(out.count() == 2)
     assert(out.where($"x" === 3).select($"y").as[Long].head() == 4L)
-  }
-
-  test("clustered parquet write sorts by space-filling curve") {
-    val dir = Files.createTempDirectory("sfc").resolve("out").toString
-    val pts = (1 to 100).map(i =>
-      (i.toLong, (i % 10) * 1.0, (i / 10) * 1.0)).toDF("id", "lon", "lat")
-    ClusteredParquet.write(pts, dir, "lon", "lat", numFiles = 2)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 100)
-    assert(back.columns.toSet == Set("id", "lon", "lat")) // key dropped
   }
 
   test("properties store roundtrip + append validation") {

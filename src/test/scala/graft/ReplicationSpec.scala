@@ -73,7 +73,7 @@ class ReplicationSpec extends SparkSpecBase {
     val applied = scala.collection.mutable.ArrayBuffer.empty[String]
     val fin = Replication.update(spark, props, DirSource(mirror),
       path => {
-        val osm = graft.sources.OsmXml.read(spark, Seq(path))
+        val osm = graft.sources.OsmSource.read(spark, Seq(path))
         applied += path
         assert(osm.nodes.count() == 1) // each diff carries one node
       })

@@ -14,9 +14,20 @@ class StyleFileCppPortsSpec extends AnyFunSuite {
 
   private val RefDir = "/root/reference/"
 
-  private def load(rel: String) = StyleFile.parse(
+  /** The fixture's text; a missing reference tree fails here, with
+    * the `NoSuchFileException` that names the path. */
+  private def read(rel: String): String =
     new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(RefDir + rel)), "UTF-8"), rel)
+      java.nio.file.Paths.get(RefDir + rel)), "UTF-8")
+
+  private def load(rel: String) = StyleFile.parse(read(rel), rel)
+
+  /** The parse error of a fixture that must not parse; the file is read
+    * outside `intercept`, so only the parse is expected to throw. */
+  private def parseError(rel: String): IllegalArgumentException = {
+    val text = read(rel)
+    intercept[IllegalArgumentException](StyleFile.parse(text, rel))
+  }
 
   private def get(style: graft.classic.Style, t: String): Seq[StyleEntry] =
     style.entries.filter(_.osmTypes.contains(t))
@@ -29,18 +40,17 @@ class StyleFileCppPortsSpec extends AnyFunSuite {
   }
 
   test("parse empty style file") {
-    val e = intercept[IllegalArgumentException](load("tests/style/empty.style"))
+    val e = parseError("tests/style/empty.style")
     assert(e.getMessage ==
       "Unable to parse any valid columns from the style file. Aborting.")
   }
 
   test("parse style file with invalid osm type") {
-    intercept[IllegalArgumentException](load("tests/style/invalid-osm-type.style"))
+    parseError("tests/style/invalid-osm-type.style")
   }
 
   test("parse style file with comments only") {
-    val e = intercept[IllegalArgumentException](
-      load("tests/style/comments.style"))
+    val e = parseError("tests/style/comments.style")
     assert(e.getMessage ==
       "Unable to parse any valid columns from the style file. Aborting.")
   }

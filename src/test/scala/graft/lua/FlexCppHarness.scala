@@ -59,10 +59,7 @@ final class FlexCppHarness(spark: SparkSession, confFile: String) {
     * reference's test files (pbf/osm). */
   def runFile(name: String): Unit = {
     val p = s"/root/reference/tests/data/$name"
-    val osm =
-      if (name.endsWith(".pbf")) graft.sources.OsmPbf.read(spark, p)
-      else graft.sources.OsmXml.read(spark, Seq(p))
-    runFrames(osm)
+    runFrames(graft.sources.OsmSource.read(spark, Seq(p)))
   }
 
   /** `db.run_import(options, data)`: create when no previous state,

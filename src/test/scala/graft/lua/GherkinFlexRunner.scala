@@ -277,11 +277,7 @@ final class GherkinFlexRunner(spark: SparkSession) {
 
   private def readInput(p: String, change: Boolean)
       : graft.sources.OsmXml.OsmDataFrames =
-    if (p.endsWith(".osc") || p.endsWith(".osc.gz"))
-      graft.sources.OsmXml.readChangeFile(spark, p)
-    else if (p.endsWith(".osm"))
-      graft.sources.OsmXml.read(spark, Seq(p))
-    else graft.sources.OsmPbf.read(spark, p)
+    graft.sources.OsmSource.read(spark, Seq(p))
 
   /** Materialize and remember a run's tables + middle so later
     * appends (and repeated assertions) don't replay the Lua passes. */

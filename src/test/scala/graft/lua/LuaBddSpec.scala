@@ -77,7 +77,7 @@ class LuaBddSpec extends SparkSpecBase {
         |  calls:insert{ kind = 'r' }
         |end
         |""".stripMargin)
-    val osm = Enrich.forFlex(graft.sources.OsmPbf.read(spark, pbf),
+    val osm = Enrich.forFlex(graft.sources.OsmSource.read(spark, Seq(pbf)),
       "create")
     val r = FlexRunner.run(cfg, osm)
     val counts = r.tables("calls").rows.groupBy("kind").count()

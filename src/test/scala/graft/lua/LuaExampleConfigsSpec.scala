@@ -293,7 +293,7 @@ class LuaExampleConfigsSpec extends SparkSpecBase {
       s"$cfgDir/locator/buildings.lua",
       dbRegionResolver = Some(_ => countries))
     val osm = graft.flex.Enrich.forFlex(
-      graft.sources.OsmXml.read(spark, Seq(in.toString)), "create")
+      graft.sources.OsmSource.read(spark, Seq(in.toString)), "create")
     val r = graft.flex.FlexRunner.run(cfg, osm)
     val rows = r.tables("buildings").rows
       .select(col("area_id"), col("country"), col("countries"))

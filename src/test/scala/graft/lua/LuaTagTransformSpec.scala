@@ -112,7 +112,7 @@ class LuaTagTransformSpec extends SparkSpecBase {
       "over Liechtenstein (table membership)") {
     val pbf = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"
     assume(new java.io.File(pbf).exists())
-    val osm = graft.sources.OsmPbf.read(spark, pbf)
+    val osm = graft.sources.OsmSource.read(spark, Seq(pbf))
     val c = ClassicPipeline.run(osm, StyleFile.defaultStyle,
       ClassicPipeline.Settings(srid = Srid.WebMercator))
     val l = ClassicPipeline.run(osm, StyleFile.defaultStyle,

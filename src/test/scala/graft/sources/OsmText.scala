@@ -17,7 +17,8 @@ import graft.model.{OsmMember, OsmNode, OsmRelation, OsmWay}
   * `x`/`y` coordinates; `N` comma-separated node refs (`n` prefixes
   * tolerated); `M` comma-separated members `<t><ref>@<role>`;
   * `T` comma-separated `k=v` tags. Implemented so the reference's BDD
-  * scenarios can be ported as-is.
+  * scenarios can be ported as-is; a test fixture, built on the driver
+  * (the program reads files through [[OsmSource.read]]).
   */
 object OsmText {
 
